@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import os
 import posixpath
+import shutil
+import threading
 from dataclasses import dataclass
 from typing import List, Optional, Tuple
 
@@ -228,11 +230,10 @@ class RemoteFS:
         # basenames starting with "." or "_", so a concurrent listing
         # (or a crash leftover) never hands the half-built file to
         # Spark; thread ident keeps same-pid threads from colliding
-        import threading as _th
         base = posixpath.basename(target)
         tmp = posixpath.join(
             posixpath.dirname(target),
-            f".{base}.concat-tmp-{os.getpid()}-{_th.get_ident()}")
+            f".{base}.concat-tmp-{os.getpid()}-{threading.get_ident()}")
         with self.fs.open_output_stream(self._p(tmp)) as out:
             for s in [target] + list(sources):
                 try:
@@ -250,3 +251,24 @@ class RemoteFS:
         self.fs.move(self._p(tmp), self._p(target))
         for s in sources:
             self.fs.delete_file(self._p(s))
+
+
+def download(fs: RemoteFS, path: str, dest: str) -> None:
+    """Copy the whole file at ``path`` on ``fs`` to the local file
+    ``dest`` atomically — the one fill copy of both whole-file tiers
+    (``FileMirror.materialize``, the write mirror): a chunked read into
+    a ``.tmp-`` staging file beside ``dest``, then ``os.replace``, so a
+    reader never sees a partial file. A failed copy must not leak its
+    staging file: the tiers skip ``.tmp-`` names when they rebuild, so
+    an orphan would sit outside capacity accounting forever."""
+    tmp = f"{dest}.tmp-{os.getpid()}-{threading.get_ident()}"
+    try:
+        with fs.open_read(path) as src, open(tmp, "wb") as dst:
+            shutil.copyfileobj(src, dst, 8 * 1024 * 1024)
+        os.replace(tmp, dest)
+    except BaseException:
+        try:
+            os.remove(tmp)
+        except OSError:
+            pass
+        raise

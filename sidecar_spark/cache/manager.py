@@ -15,6 +15,12 @@ page store, write cache — field trio at :96-119), an async worker pool
   "a Python cache can't hook JVM parquet reads per page",
   SURVEY.md §7.4); page-granular caching stays available for the
   byte-level ``open()`` API (a faithful ``readInternal`` port).
+
+The mirror's fill policy lives here once: ``admit`` decides which
+files of a listing are admitted and whether the scan veto applies,
+``_on_tasks`` decides whether a fill runs on Spark tasks or in this
+process, ``run_tasks`` is the one task fan-out, and
+``cache.fs.download`` the one atomic whole-file copy.
 """
 
 from __future__ import annotations
@@ -23,9 +29,9 @@ import concurrent.futures
 import os
 import threading
 import time
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Tuple
 
-from sidecar_spark.cache.fs import FileStat, RemoteFS
+from sidecar_spark.cache.fs import FileStat, RemoteFS, download
 from sidecar_spark.cache.meta import FileMeta, MetaCache
 from sidecar_spark.cache.pages import PageStore
 from sidecar_spark.cache.streams import CachingInputStream, CachingOutputStream
@@ -70,6 +76,12 @@ class FileMirror:
     remote is the single source of truth. Driver-side
     ``resolve_for_spark`` remains the default for local[k]/shared
     mirror roots, where the JVM-native parquet scan is faster.
+
+    Every fill is ``materialize``: on the driver pool from
+    ``CacheManager.resolve_for_spark``, or on a Spark task from its
+    warm step; a task fill reaches this instance by adoption in
+    ``lookup``. Which files are admitted, whether a fill is vetoed and
+    where it runs is decided once, by ``CacheManager``.
 
     Concurrency: cold fetches run OUTSIDE the instance lock with a
     per-key in-flight guard, so N distinct cold files materialize in
@@ -158,7 +170,8 @@ class FileMirror:
         return None
 
     def materialize(self, fs: RemoteFS, st: FileStat) -> str:
-        """Copy the remote file into the mirror (tier-③ fill).
+        """Copy the remote file into the mirror (tier-③ fill) with
+        ``fs.download``.
 
         The byte copy runs outside ``_lock`` — the lock covers only
         bookkeeping, so concurrent cold fetches of *different* files
@@ -177,25 +190,8 @@ class FileMirror:
                     break  # this thread owns the fetch
             ev.wait()
         try:
-            tmp = f"{lp}.tmp-{os.getpid()}-{threading.get_ident()}"
             t0 = time.monotonic_ns()
-            try:
-                with fs.open_read(st.path) as src, open(tmp, "wb") as dst:
-                    while True:
-                        chunk = src.read(8 * 1024 * 1024)
-                        if not chunk:
-                            break
-                        dst.write(chunk)
-                os.replace(tmp, lp)
-            except BaseException:
-                # a failed remote copy must not leak its staging file:
-                # _rebuild skips .tmp- names, so an orphan would sit
-                # outside capacity accounting forever
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-                raise
+            download(fs, st.path, lp)
             with self._lock:
                 self.stats.add("total_read_requests_from_remote")
                 self.stats.add("total_bytes_read_remote", st.length)
@@ -898,156 +894,165 @@ class CacheManager:
         dirs = sorted(s.path for s in top if s.is_dir)
         if len(dirs) <= threshold:
             return None
-        conf = self.conf
-        if conf.hint_detector is not None and callable(
-                conf.hint_detector):
-            import dataclasses
-            conf = dataclasses.replace(conf, hint_detector=None)
-        endpoint = os.environ.get("SIDECAR_S3_ENDPOINT")
-
-        def list_slice(it):
-            import os as _os
-            if endpoint:
-                # assignment, not setdefault: Spark reuses Python
-                # workers and a stale endpoint must not shadow this
-                _os.environ["SIDECAR_S3_ENDPOINT"] = endpoint
-            from sidecar_spark.cache.manager import CacheManager as CM
-            mgr = CM.get_or_create(conf)
-            out = []
-            for d in it:
-                dfs, dp = mgr._resolve(d)  # noqa: SLF001
-                try:
-                    sub = dfs.list(dp)
-                except (NotADirectoryError, FileNotFoundError):
-                    continue  # vanished mid-job: same self-heal as
-                    # the serial path — absent means empty, the read
-                    # layer re-heals per file
-                out.extend((s.path, s.length, s.mtime)
-                           for s in sub if not s.is_dir)
-            yield out
-
         try:
-            sc = spark.sparkContext
-            slices = min(len(dirs), max(1, parallelism))
-            listed = sc.parallelize(dirs, slices) \
-                .mapPartitions(list_slice).collect()
+            listed = self.run_tasks(spark, dirs, _list_slice,
+                                    slices=min(len(dirs),
+                                               max(1, parallelism)))
         except Exception:  # noqa: BLE001 — job trouble: the serial
             return None    # LIST is always correct
         files = [s for s in top if not s.is_dir]
-        files.extend(FileStat(path=p, length=ln, mtime=mt,
-                              is_dir=False)
-                     for chunk in listed for p, ln, mt in chunk)
+        files.extend(st for chunk in listed for st in chunk)
         return [s for s in files
                 if s.path.endswith(suffix)
                 and not os.path.basename(s.path).startswith(("_", "."))]
 
-    # ---- Spark integration ------------------------------------------------------
+    # ---- Spark integration: the mirror's fill policy ------------------------------
+
+    def run_tasks(self, spark, items: list, fn,
+                  slices: Optional[int] = None) -> list:
+        """Run ``fn(mgr, partition_iterator)`` over ``items`` as ONE
+        Spark job and collect everything it yields — the one task
+        fan-out of the cache (listing, warm, write mirror, and the
+        Engine's mergeSchema footer fold). ``mgr`` is the worker's own
+        node-local manager for this conf: the per-node singleton shape
+        (``SidecarCachingFileSystem.java:96-119``), kept alive for the
+        worker's lifetime like the executor sources' (no release).
+
+        The conf crosses as ``to_json()``, which drops a callable
+        ``hint_detector`` (no callable crosses the task boundary), and
+        the current ``SIDECAR_S3_ENDPOINT`` rides in the closure.
+        ``fn`` must be picklable without this manager (a module-level
+        function, or a closure over plain values)."""
+        conf_json = self.conf.to_json()
+        endpoint = os.environ.get("SIDECAR_S3_ENDPOINT")
+
+        def task(it):
+            if endpoint:
+                # propagate the CURRENT S3 endpoint to worker procs —
+                # assignment, not setdefault: Spark REUSES Python
+                # workers across jobs, and a stale endpoint from an
+                # earlier job must not shadow this one's
+                os.environ["SIDECAR_S3_ENDPOINT"] = endpoint
+            from sidecar_spark.cache.manager import CacheManager as CM
+            from sidecar_spark.config import SidecarConfig as SC
+            return fn(CM.get_or_create(SC.from_json(conf_json)), it)
+
+        sc = spark.sparkContext
+        n = slices or min(len(items), sc.defaultParallelism)
+        return sc.parallelize(items, n).mapPartitions(task).collect()
+
+    def admit(self, files: List[FileStat]
+              ) -> Tuple[List[FileStat], bool]:
+        """Mirror admission for one table listing: ``(admitted files,
+        veto)``. Admitted means ``is_cacheable_file``; nothing is
+        admitted without a mirror.
+
+        The veto is the ``ScanDetector`` admission idea
+        (``util/ScanDetector.java:43-69``) lifted from pages to
+        tables: when the admitted bytes exceed what the mirror can
+        hold below its eviction floor, cold files are NOT filled —
+        filling would evict everything just written (at 100 TB, a
+        table bigger than the node cache must stream from remote, not
+        churn the cache). Existing hits still serve locally. This is
+        the one place the rule lives; each caller counts
+        ``total_scans_detected`` once per decision it acts on."""
+        if self.mirror is None:
+            return [], False
+        admitted = [st for st in files
+                    if self.is_cacheable_file(st.path, st.length)]
+        floor = self.mirror.capacity * self.conf.eviction_stop_occupancy
+        veto = bool(self.mirror.capacity) and sum(
+            st.length for st in admitted) > floor
+        return admitted, veto
+
+    def _on_tasks(self, path: str, nbytes: int) -> bool:
+        """Where a fill of ``nbytes`` runs: on Spark tasks (each node
+        fills its own tier) once it reaches ``auto_warm_bytes``, else
+        in this process — below the threshold a Spark job costs more
+        than the copy. 0 disables the task fan-out. A ``mem://`` store
+        is process-local and unreachable from worker processes, so it
+        always fills here (no scale concern: a process-local store is
+        by definition not the 100 TB path)."""
+        return (bool(self.conf.auto_warm_bytes)
+                and not path.startswith("mem://")
+                and nbytes >= self.conf.auto_warm_bytes)
+
+    def _serve_hits(self, files: List[FileStat],
+                    local: Dict[str, str]) -> List[FileStat]:
+        """Record each mirrored file's local copy in ``local``, counted
+        as a data-cache read; returns the files still cold."""
+        cold = []
+        for st in files:
+            hit = self.mirror.lookup(st.path, st.mtime)
+            if hit is None:
+                cold.append(st)
+                continue
+            self.stats.add("total_read_requests_from_data_cache")
+            self.stats.add("total_bytes_read_data_cache", st.length)
+            self.stats.add("total_bytes_read", st.length)
+            local[st.path] = hit
+        return cold
 
     def resolve_for_spark(self, uri: str, suffix: str = "",
-                          files: Optional[List[FileStat]] = None) -> List[str]:
-        """Resolve a table location to concrete local-or-remote file paths.
-
-        For each data file: if admitted and already mirrored (current
-        mtime) → local path, counted as a data-cache hit; if admitted
-        but cold → materialize (counted as remote read) and return the
-        local path; else → the original path (Spark reads remote
+                          files: Optional[List[FileStat]] = None,
+                          spark=None) -> List[str]:
+        """Resolve a table location to concrete local-or-remote file
+        paths — the single fill path of the mirror. For each data
+        file: admitted and mirrored (current mtime) → the local copy,
+        counted as a data-cache hit; admitted but cold → filled, then
+        the local copy; else → the original path (Spark reads remote
         directly). This is the read path of SURVEY.md §3.1 at file
-        granularity.
+        granularity. Pass ``files`` (a prior ``list_files`` result)
+        to reuse one listing instead of re-listing the remote.
 
-        Cold files are fetched IN PARALLEL over the manager's pool
-        (the reference's 8-thread pool for async work,
+        Admission and the file-level scan veto come from ``admit``; a
+        vetoed resolve fills nothing and counts one
+        ``total_scans_detected``. Cold files fill where ``_on_tasks``
+        says: with a session and at least ``auto_warm_bytes`` of them,
+        Spark tasks fill them first (``warm_distributed``'s task step
+        — each node fills its own mirror, so the driver never funnels
+        table bytes) and the driver adopts what landed. Whatever is
+        still cold fills IN PARALLEL over the manager's pool (the
+        reference's 8-thread pool for async work,
         ``SidecarCachingFileSystem.java:617-627``): a 1000-file cold
         table warms at pool-width concurrency instead of one file per
-        loop iteration. A fetch failure self-heals to the remote path
-        (cache trouble must never fail the read — the
+        loop iteration. A failed fill — task or pool — self-heals to
+        the remote path (cache trouble must never fail the read — the
         ``readFromWriteCacheFS`` error contract,
-        ``SidecarCachingInputStream.java:1008-1038``).
-
-        File-level scan veto (the ``ScanDetector`` admission idea,
-        ``util/ScanDetector.java:43-69``, lifted from pages to
-        tables): when the resolve's total ADMITTED bytes exceed what
-        the mirror can hold below its eviction floor, cold files are
-        NOT materialized — filling would evict everything just
-        written (at 100 TB, a table bigger than the node cache must
-        stream from remote, not churn the cache). Existing hits are
-        still served locally, and ``total_scans_detected`` counts the
-        veto."""
+        ``SidecarCachingInputStream.java:1008-1038``)."""
         fs, path = self._resolve(uri)
-        out: List[Optional[str]] = []
-        cold: List[tuple] = []  # (index into out, FileStat)
         if files is None:
             files = self.list_files(path, suffix=suffix)
-        fill_veto = False
-        if self.mirror is not None and self.mirror.capacity:
-            admitted_total = sum(
-                st.length for st in files
-                if self.is_cacheable_file(st.path, st.length))
-            floor = (self.mirror.capacity
-                     * self.conf.eviction_stop_occupancy)
-            if admitted_total > floor:
-                fill_veto = True
-                self.stats.add("total_scans_detected")
+        admitted, veto = self.admit(files)
+        if veto:
+            self.stats.add("total_scans_detected")
+        local: Dict[str, str] = {}
+        cold = self._serve_hits(admitted, local)
+        if cold and not veto:
+            if spark is not None and self._on_tasks(
+                    path, sum(st.length for st in cold)):
+                try:
+                    self.run_tasks(spark, cold, _warm_slice)
+                except Exception:  # noqa: BLE001 — warm trouble never
+                    pass           # fails the read; the pool fills
+                cold = self._serve_hits(cold, local)
+
+            def fetch(st: FileStat) -> None:
+                try:
+                    local[st.path] = self.mirror.materialize(fs, st)
+                    self.stats.add("total_bytes_read", st.length)
+                except Exception:  # noqa: BLE001 - self-heal to remote
+                    pass
+
+            if len(cold) == 1:
+                fetch(cold[0])
+            elif cold:
+                concurrent.futures.wait(
+                    [self.pool.submit(fetch, st) for st in cold])
         for st in files:
             self.stats.add("total_files_opened")
             self.meta.save(st.path, FileMeta(st.mtime, st.length, st.is_dir))
-            if self.mirror is None or not self.is_cacheable_file(st.path, st.length):
-                out.append(st.path)
-                continue
-            hit = self.mirror.lookup(st.path, st.mtime)
-            if hit is not None:
-                self.stats.add("total_read_requests_from_data_cache")
-                self.stats.add("total_bytes_read_data_cache", st.length)
-                self.stats.add("total_bytes_read", st.length)
-                out.append(hit)
-            elif fill_veto:
-                out.append(st.path)  # stream from remote, no fill
-            else:
-                out.append(None)
-                cold.append((len(out) - 1, st))
-        if cold:
-            def fetch(st: FileStat) -> str:
-                lp = self.mirror.materialize(fs, st)
-                self.stats.add("total_bytes_read", st.length)
-                return lp
-
-            if len(cold) == 1:
-                idx, st = cold[0]
-                try:
-                    out[idx] = fetch(st)
-                except Exception:  # noqa: BLE001 - self-heal to remote
-                    out[idx] = st.path
-            else:
-                futs = {self.pool.submit(fetch, st): (idx, st)
-                        for idx, st in cold}
-                for fut in concurrent.futures.as_completed(futs):
-                    idx, st = futs[fut]
-                    try:
-                        out[idx] = fut.result()
-                    except Exception:  # noqa: BLE001 - self-heal to remote
-                        out[idx] = st.path
-        return out
-
-    def cold_admitted_bytes(self, uri: str, suffix: str = "",
-                            files: Optional[List[FileStat]] = None) -> int:
-        """Total bytes of admitted-but-unmirrored files at ``uri`` —
-        what a cold resolve would have to pull. Metadata-only (one
-        listing + mirror lookups); used by ``Engine.read_parquet`` to
-        decide driver-pool fill vs cluster-wide warm. Pass ``files``
-        (a prior ``list_files`` result) to reuse one listing across
-        the check → warm → resolve sequence instead of re-listing the
-        remote three times per read."""
-        if self.mirror is None:
-            return 0
-        fs_uri = uri if "://" in uri else os.path.abspath(uri)
-        total = 0
-        if files is None:
-            files = self.list_files(fs_uri, suffix=suffix)
-        for st in files:
-            if not self.is_cacheable_file(st.path, st.length):
-                continue
-            if self.mirror.lookup(st.path, st.mtime) is None:
-                total += st.length
-        return total
+        return [local.get(st.path, st.path) for st in files]
 
     def warm_distributed(self, spark, uri: str, suffix: str = "",
                          files: Optional[List[FileStat]] = None) -> int:
@@ -1057,7 +1062,9 @@ class CacheManager:
         on whatever node it runs and fills THAT node's mirror — the
         executor-side deployment of the per-node singleton design
         (``SidecarCachingFileSystem.java:96-119``; see the FileMirror
-        multi-node note).
+        multi-node note). ``resolve_for_spark`` runs the same task
+        step on its own for a cold table of ``auto_warm_bytes`` or
+        more; this is the explicit pre-warm.
 
         On local[k] every task lands on this machine, so the warmed
         files appear in this manager's mirror root out-of-band;
@@ -1069,216 +1076,74 @@ class CacheManager:
         process-local and cannot warm remotely).
 
         Returns the number of files fetched by tasks (cluster-wide;
-        already-local files are skipped driver-side).
-
-        Applies the same file-level scan veto as ``resolve_for_spark``:
-        a table whose admitted bytes exceed the mirror's eviction
-        floor is not warmed (filling it would only churn every node's
-        cache) — the warm is a no-op returning 0."""
-        fs_uri = uri if "://" in uri else os.path.abspath(uri)
-        work: List[tuple] = []
-        admitted_total = 0
+        already-local files are skipped driver-side). A vetoed table
+        (``admit``) is not warmed — filling it would only churn every
+        node's cache — and counts one ``total_scans_detected``."""
         if files is None:
-            files = self.list_files(fs_uri, suffix=suffix)
-        for st in files:
-            if self.mirror is None or not self.is_cacheable_file(
-                    st.path, st.length):
-                continue
-            admitted_total += st.length
-            if self.mirror.lookup(st.path, st.mtime) is None:
-                work.append((st.path, st.mtime, st.length))
-        if not work:
+            files = self.list_files(
+                uri if "://" in uri else os.path.abspath(uri),
+                suffix=suffix)
+        admitted, veto = self.admit(files)
+        cold = [st for st in admitted
+                if self.mirror.lookup(st.path, st.mtime) is None]
+        if not cold:
             return 0
-        if self.mirror.capacity and admitted_total > (
-                self.mirror.capacity * self.conf.eviction_stop_occupancy):
+        if veto:
             self.stats.add("total_scans_detected")
             return 0
-        conf = self.conf
-        if conf.hint_detector is not None and callable(conf.hint_detector):
-            import dataclasses
-            conf = dataclasses.replace(conf, hint_detector=None)
-        endpoint = os.environ.get("SIDECAR_S3_ENDPOINT")
-
-        def fetch_slice(it):
-            import os as _os
-            if endpoint:
-                # propagate the CURRENT S3 endpoint to worker procs —
-                # assignment, not setdefault: Spark REUSES Python
-                # workers across jobs, and a stale endpoint from an
-                # earlier job must not shadow this one's
-                _os.environ["SIDECAR_S3_ENDPOINT"] = endpoint
-            from sidecar_spark.cache.fs import FileStat as FS
-            from sidecar_spark.cache.manager import CacheManager as CM
-            mgr = CM.get_or_create(conf)
-            n = 0
-            for path, mtime, length in it:
-                # per-file tolerance: one unreadable/mutated remote file
-                # must not fail the whole warm job (cache trouble never
-                # fails the caller — the resolve_for_spark self-heal
-                # contract applied to the warm path); the file simply
-                # stays cold and the next read self-heals to remote
-                try:
-                    fs, p = mgr._resolve(path)
-                    mgr.mirror.materialize(
-                        fs, FS(path=p, length=length, mtime=mtime,
-                               is_dir=False))
-                    n += 1
-                except Exception:  # noqa: BLE001
-                    pass
-            yield n
-
-        sc = spark.sparkContext
-        slices = min(len(work), sc.defaultParallelism)
-        return int(sum(
-            sc.parallelize(work, slices).mapPartitions(fetch_slice)
-            .collect()))
+        return int(sum(self.run_tasks(spark, cold, _warm_slice)))
 
     def mirror_writes_distributed(self, spark, uri: str,
                                   suffix: str = "") -> int:
-        """Task-side write mirroring — the reference's on-the-writing-
-        node tee (``SidecarCachingOutputStream.java:181-223``) applied
+        """Write mirroring — the reference's on-the-writing-node tee
+        (``SidecarCachingOutputStream.java:181-223``) applied
         post-commit at file granularity: after a Spark job commits
-        files at ``uri``, fan the mirror fill over Spark TASKS, each of
-        which opens the node-local CacheManager for the same cache_dir
-        on whatever node it runs and copies the committed bytes into
-        THAT node's write cache (tmp + atomic replace; synced, so no
+        files at ``uri``, each committed file is copied into the write
+        cache by ``_mirror_write`` (atomic copy; synced, so no
         ``.toupload`` moniker — the remote commit already happened).
+        Returns the files mirrored.
 
-        The driver reads ZERO data bytes: it only adopts files that
-        landed on its own disk into its file list (size-verified
-        bookkeeping) and refreshes meta. On local[k] every task lands
-        on this machine so the driver adopts everything; on a real
-        cluster each node's cache ends up holding the files its own
-        tasks mirrored — the per-node singleton shape
+        Where the copies run is ``_on_tasks``: a SMALL commit (a
+        manifest, a summary table) or a ``mem://`` one tees through
+        this process directly — a Spark job costs more than the copy.
+        Real-cluster caveat: that fills the DRIVER node's write cache,
+        not an executor's — fine for the manifests it is sized for
+        (any node's read self-heals to remote), wrong for data tables,
+        which is why the threshold gates it. At ``auto_warm_bytes``
+        and above the copies fan over Spark TASKS, each on whatever
+        node it runs, into THAT node's write cache; the driver reads
+        ZERO data bytes. It only adopts files that landed on its own
+        disk into its file list (size-verified bookkeeping) and
+        refreshes meta. On local[k] every task lands on this machine
+        so the driver adopts everything; on a real cluster each
+        node's cache ends up holding the files its own tasks mirrored
+        — the per-node singleton shape
         (``SidecarCachingFileSystem.java:96-119``).
 
         Per-file tolerant: a failed copy leaves that file un-mirrored
         (remote stays authoritative; the next read self-heals), never
-        fails the write. Returns files mirrored by tasks.
-
-        A process-local scheme (``mem://``) is unreachable from worker
-        processes — the same constraint ``warm_distributed`` documents
-        — so it mirrors inline here instead (no scale concern: a
-        process-local store is by definition not the 100 TB path)."""
+        fails the write."""
         if self.write_cache is None:
             return 0
-        if uri.startswith("mem://"):
-            n = 0
-            for st in self.list_files(uri):
-                if self.conf.write_excluded(st.path):
-                    continue
-                fs, path = self._resolve(st.path)
-                self.write_cache.put_file(path, fs.read_all(path),
-                                          synced=True)
-                self.meta.save(path, FileMeta(st.mtime, st.length,
-                                              st.is_dir))
-                self.write_cache.check_eviction()
-                n += 1
-            return n
         fs_uri = uri if "://" in uri else os.path.abspath(uri)
-        work: List[tuple] = []
-        for st in self.list_files(fs_uri, suffix=suffix):
-            if self.conf.write_excluded(st.path):
-                continue
-            work.append((st.path, st.mtime, st.length))
-        if not work:
-            return 0
-        # symmetric with the read-side auto-warm threshold: a SMALL
-        # commit (a manifest, a summary table) tees through the driver
-        # directly — a Spark job costs more than the copy. Only at
-        # auto_warm_bytes and above does the driver-funnel matter, and
-        # there the task fan-out takes over. Real-cluster caveat: this
-        # branch fills the DRIVER node's write cache, not an
-        # executor's — fine for the manifests it is sized for (any
-        # node's read self-heals to remote), wrong for data tables,
-        # which is why the threshold gates it.
-        total_bytes = sum(length for _, _, length in work)
-        if self.conf.auto_warm_bytes and total_bytes < \
-                self.conf.auto_warm_bytes:
-            n = 0
-            for path, mtime, length in work:
-                try:
-                    fs, p = self._resolve(path)
-                    self.write_cache.put_file(p, fs.read_all(p),
-                                              synced=True)
-                    self.meta.save(p, FileMeta(mtime, length, False))
-                    n += 1
-                except Exception:  # noqa: BLE001 — per-file tolerance
-                    pass
-            self.write_cache.check_eviction()
-            return n
-        conf = self.conf
-        if conf.hint_detector is not None and callable(conf.hint_detector):
-            import dataclasses
-            conf = dataclasses.replace(conf, hint_detector=None)
-        endpoint = os.environ.get("SIDECAR_S3_ENDPOINT")
-
-        def mirror_slice(it):
-            import os as _os
-            import threading as _th
-            if endpoint:
-                # propagate the CURRENT S3 endpoint to worker procs —
-                # assignment, not setdefault: Spark REUSES Python
-                # workers across jobs, and a stale endpoint from an
-                # earlier job must not shadow this one's
-                _os.environ["SIDECAR_S3_ENDPOINT"] = endpoint
-            from sidecar_spark.cache.manager import CacheManager as CM
-            from sidecar_spark.cache.meta import FileMeta as FM
-            mgr = CM.get_or_create(conf)
-            wc = mgr.write_cache
-            if wc is None:
-                yield 0
-                return
-            n = 0
-            for path, mtime, length in it:
-                try:
-                    fs, p = mgr._resolve(path)
-                    cp = wc.caching_path(p)
-                    if _os.path.exists(cp) \
-                            and _os.path.getsize(cp) == length:
-                        continue  # already mirrored on this node
-                    _os.makedirs(_os.path.dirname(cp), exist_ok=True)
-                    tmp = f"{cp}.tmp-{_os.getpid()}-{_th.get_ident()}"
-                    try:
-                        with fs.open_read(p) as src, open(tmp, "wb") as dst:
-                            while True:
-                                chunk = src.read(8 * 1024 * 1024)
-                                if not chunk:
-                                    break
-                                dst.write(chunk)
-                        _os.replace(tmp, cp)
-                    except BaseException:
-                        try:  # no staging-file leak on a failed copy
-                            _os.remove(tmp)
-                        except OSError:
-                            pass
-                        raise
-                    wc.register(cp, length)  # synced: no moniker
-                    mgr.meta.save(p, FM(mtime, length, False))
-                    wc.check_eviction()
-                    n += 1
-                except Exception:  # noqa: BLE001 — per-file tolerance
-                    pass
-            yield n
-
-        sc = spark.sparkContext
-        slices = min(len(work), sc.defaultParallelism)
-        fetched = int(sum(
-            sc.parallelize(work, slices).mapPartitions(mirror_slice)
-            .collect()))
+        work = [st for st in self.list_files(fs_uri, suffix=suffix)
+                if not self.conf.write_excluded(st.path)]
+        if not self._on_tasks(fs_uri, sum(st.length for st in work)):
+            return sum(_mirror_write(self, st) for st in work)
+        fetched = int(sum(self.run_tasks(spark, work, _mirror_write_slice)))
         # driver-side adoption: register whatever landed on THIS
         # node's disk (size-verified) — pure bookkeeping, no data reads
-        for path, mtime, length in work:
-            _, p = self._resolve(path)
+        for st in work:
+            _, p = self._resolve(st.path)
             cp = self.write_cache.caching_path(p)
             try:
-                ok = os.path.getsize(cp) == length
+                ok = os.path.getsize(cp) == st.length
             except OSError:
                 ok = False
             if ok:
                 if not self.write_cache.file_list.exists(cp):
-                    self.write_cache.register(cp, length)
-                self.meta.save(p, FileMeta(mtime, length, False))
+                    self.write_cache.register(cp, st.length)
+                self.meta.save(p, FileMeta(st.mtime, st.length, False))
         self.write_cache.check_eviction()
         return fetched
 
@@ -1324,3 +1189,62 @@ class CacheManager:
             key = CacheManager._key(self.conf)
             if CacheManager._instances.get(key) is self:
                 del CacheManager._instances[key]
+
+
+# ---- task steps (run by ``CacheManager.run_tasks`` on a worker's manager) ----
+
+def _list_slice(mgr: CacheManager, dirs):
+    """Recursive LIST of each directory (``maybe_list_files_job``)."""
+    out = []
+    for d in dirs:
+        fs, p = mgr._resolve(d)  # noqa: SLF001
+        try:
+            sub = fs.list(p)
+        except (NotADirectoryError, FileNotFoundError):
+            continue  # vanished mid-job: same self-heal as the serial
+            # path — absent means empty, the read layer re-heals per file
+        out.extend(s for s in sub if not s.is_dir)
+    yield out
+
+
+def _warm_slice(mgr: CacheManager, files):
+    """Fill each file into this node's mirror; yields the count."""
+    n = 0
+    for st in files:
+        # per-file tolerance: one unreadable/mutated remote file must
+        # not fail the whole warm job (cache trouble never fails the
+        # caller — the resolve_for_spark self-heal contract applied to
+        # the warm path); the file simply stays cold and the next read
+        # self-heals to remote
+        try:
+            fs, _ = mgr._resolve(st.path)  # noqa: SLF001
+            mgr.mirror.materialize(fs, st)
+            n += 1
+        except Exception:  # noqa: BLE001
+            pass
+    yield n
+
+
+def _mirror_write(mgr: CacheManager, st: FileStat) -> bool:
+    """Copy one committed file into ``mgr``'s write cache and record
+    its meta — the one write-mirror step, run inline or on a task.
+    Registered synced (no moniker): the remote commit already
+    happened. False when the copy fails (per-file tolerance)."""
+    try:
+        fs, p = mgr._resolve(st.path)  # noqa: SLF001
+        cp = mgr.write_cache.caching_path(p)
+        os.makedirs(os.path.dirname(cp), exist_ok=True)
+        download(fs, p, cp)
+        mgr.write_cache.register(cp, st.length)
+        mgr.meta.save(p, FileMeta(st.mtime, st.length, False))
+        mgr.write_cache.check_eviction()
+        return True
+    except Exception:  # noqa: BLE001
+        return False
+
+
+def _mirror_write_slice(mgr: CacheManager, files):
+    if mgr.write_cache is None:
+        yield 0
+        return
+    yield sum(_mirror_write(mgr, st) for st in files)

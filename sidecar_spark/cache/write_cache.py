@@ -24,7 +24,6 @@ from urllib.parse import urlparse
 from sidecar_spark.config import SidecarConfig
 from sidecar_spark.stats import Statistics
 from sidecar_spark.util.lrc_queue import LRCQueue
-from sidecar_spark.util.size_priority_queue import SizeBasedPriorityQueue
 
 MONIKER_SUFFIX = ".toupload"
 
@@ -38,18 +37,14 @@ class WriteCache:
         self.root = os.path.join(conf.cache_dir, "write-cache")
         os.makedirs(self.root, exist_ok=True)
         self.max_size = conf.write_cache_size  # 0 = unbounded
-        # victim policy: LRC (default) or largest-first (the reference's
-        # unwired SizeBasedPriorityQueue, exposed as an option here)
-        self.file_list = (
-            SizeBasedPriorityQueue()
-            if conf.write_cache_eviction_policy == "size" else LRCQueue())
+        self.file_list = LRCQueue()
         self._size = 0
         self._size_lock = threading.Lock()
         self._evictor_running = threading.Event()
         self.disabled = False  # set when eviction can't make progress
         self.unsynced_retry_delay = 60.0  # evictFiles sleeps 60 s (:1432)
         # disk adoption: a prior process (a recycled Spark Python
-        # worker running mirror_writes_distributed, a crashed driver)
+        # worker that ran a write-mirror task, a crashed driver)
         # may have left synced mirror files on this node that exist
         # only on disk — register them so eviction can account for and
         # reclaim them; without this, worker-mirrored bytes on a real
@@ -205,8 +200,7 @@ class WriteCache:
         self.stats.add("total_bytes_read", 0)  # touch-free; counters live in stats
 
     def put_file(self, remote_uri: str, data: bytes, synced: bool = True) -> str:
-        """Convenience: mirror a whole file (used by read-through fill
-        and tests)."""
+        """Convenience: mirror a whole file from bytes in memory."""
         fh, cp = self.open_write(remote_uri)
         with fh:
             fh.write(data)

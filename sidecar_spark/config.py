@@ -79,8 +79,6 @@ _KEYMAP = {
     # engine-side additions (not in the reference)
     "cache.dir": "cache_dir",
     "data.cache.size": "data_cache_size",
-    # wires the reference's unwired SizeBasedPriorityQueue as an option
-    "write.cache.eviction.policy": "write_cache_eviction_policy",
     "auto.warm.bytes": "auto_warm_bytes",
     "resolve.mode": "resolve_mode",
     "mirror.size": "mirror_size",
@@ -145,9 +143,11 @@ class SidecarConfig:
     mirror_size: int = 0
     minsize_threshold: int = 100 * MiB  # sidecar.cache.minsize.threshold
     # engine addition: a COLD table at/over this many admitted bytes is
-    # warmed via Spark tasks (warm_distributed) before resolve, so big
-    # cold reads never pull their bytes through the driver; below it
-    # the driver-pool fill is cheaper than a Spark job. 0 disables.
+    # filled by Spark tasks during resolve, so big cold reads never
+    # pull their bytes through the driver, and a commit of this many
+    # bytes is write-mirrored by tasks; below it the in-process fill is
+    # cheaper than a Spark job (CacheManager._on_tasks). 0 disables
+    # the task fills.
     auto_warm_bytes: int = 256 * MiB
     # engine addition: where table reads resolve against the mirror.
     # "driver" (default): the driver resolves hit/materialize/remote
@@ -169,10 +169,6 @@ class SidecarConfig:
     # {"read", "write"} — either a callable or a "module:attr" /
     # dotted import string (sidecar.caching.hint.detector.impl)
     hint_detector: Any = None
-
-    # write-cache victim policy: "lrc" (default, LRCQueue) or "size"
-    # (SizeBasedPriorityQueue — largest file first)
-    write_cache_eviction_policy: str = "lrc"
 
     # lifecycle
     cache_persistent: bool = True  # sidecar.cache.persistent
@@ -267,8 +263,8 @@ class SidecarConfig:
         API carries options as strings only, so the executor-resolve
         scan (sources/cached_parquet.py) ships its configuration this
         way. ``hint_detector`` crosses only as an import string (a
-        callable cannot be JSON-carried — same rule as the
-        warm_distributed task closure, which drops callables)."""
+        callable cannot be JSON-carried — which is also how
+        ``CacheManager.run_tasks`` drops it from task closures)."""
         import dataclasses
         import json
 

@@ -32,27 +32,16 @@ TPCH_TABLES = (
 _PATH_SEMANTIC_OPTS = {"basepath", "pathglobfilter",
                        "modifiedbefore", "modifiedafter"}
 
-#: (conf key, default) pairs the executor-mode Python sources do NOT
-#: implement — when a session sets one to a non-default value the
-#: read goes to the ORIGINAL location raw, so the JVM applies its own
-#: semantics (probed: binaryAsString=true reads binary as string;
-#: int96AsTimestamp=false refuses INT96; nanosAsLong=true reads
-#: ignoreCorrupt/MissingFiles skip; partition inference off types
-#: every partition column string). nanosAsLong is NOT here — the
-#: Python source implements it natively (annotation-keyed ns→bigint,
-#: ``cached_parquet``) because the query battery leaves it set for
-#: the NANOS-shipped events table and a global fallback would
-#: silently un-cache every later executor read.
-#: Correct everywhere, merely uncached — these are rare
-#: compatibility switches, not the hot path. Driver mode needs no
-#: gate: the JVM reads the symlink view itself, applying every conf.
-#: session confs the executor sources would have to route raw on —
-#: EMPTY since round 10: binaryAsString and partition-type-inference
-#: are served natively, and int96AsTimestamp=false is IGNORED by
-#: Spark 4.1's own reader (probed: an INT96 file still reads
-#: timestamp under the flag — tests/test_type_parity.py), so both
-#: paths already agree
-_EXEC_RAW_CONFS = ()
+
+def _session_conf(spark, key: str, default: Optional[str], parse=None):
+    """``spark.conf.get(key, default)``, passed through ``parse`` when
+    given. An unreadable conf means unset, and a value ``parse``
+    rejects means the default: both yield ``default`` (parsed)."""
+    try:
+        v = spark.conf.get(key, default)
+        return v if parse is None else parse(v)
+    except Exception:  # noqa: BLE001
+        return default if parse is None else parse(default)
 
 
 def _listing_opts(options, spark) -> Optional[Dict[str, str]]:
@@ -90,11 +79,7 @@ def _listing_opts(options, spark) -> Optional[Dict[str, str]]:
         elif kl in ("modifiedbefore", "modifiedafter"):
             import datetime
 
-            try:
-                tz = spark.conf.get("spark.sql.session.timeZone",
-                                    "UTC")
-            except Exception:  # noqa: BLE001
-                tz = "UTC"
+            tz = _session_conf(spark, "spark.sql.session.timeZone", "UTC")
             if tz.upper() not in ("UTC", "GMT", "Z", "ETC/UTC",
                                   "ETC/GMT", "+00:00"):
                 # non-UTC sessions: the JVM applies a DOUBLE zone
@@ -176,13 +161,6 @@ class Engine:
             raise ValueError("Engine has no base_dir; pass explicit paths")
         return os.path.join(self.base_dir, f"{name}.parquet")
 
-    def resolve_paths(self, location: str) -> List[str]:
-        """File-granular cache resolution (SURVEY.md §3.1 equivalent)."""
-        if self.cache is None:
-            return [location]
-        paths = self.cache.resolve_for_spark(location)
-        return paths if paths else [location]
-
     def table(self, name: str, sf_dir: Optional[str] = None,
               columns: Optional[List[str]] = None):
         """Read a named table through the cache; returns a DataFrame.
@@ -226,16 +204,6 @@ class Engine:
         return self._cached_read(location, format, columns, options)
 
     def _cached_read(self, location: str, fmt: str, columns, options):
-        # scale guard: a COLD table at/over auto_warm_bytes is warmed
-        # by Spark tasks first (each node fills its own mirror), so the
-        # subsequent resolve is all hits and the driver never funnels
-        # table bytes — the read-path analog of the task-side write
-        # mirror. Below the threshold the driver pool fill is cheaper
-        # than a Spark job; mem:// is process-local and cannot warm
-        # remotely (see warm_distributed). ONE remote listing feeds
-        # the coldness check, the warm and the resolve — on an object
-        # store, re-listing a 10k-file table three times per read
-        # would dominate the metadata path.
         def _select(df):
             return df.select(*columns) if columns else df
 
@@ -272,15 +240,6 @@ class Engine:
             return _select(_raw())
         if (self.conf.resolve_mode == "executor"
                 and not location.startswith("mem://")):
-            # session confs the Python sources don't implement →
-            # original raw, JVM semantics exactly (_EXEC_RAW_CONFS)
-            for _key, _default in _EXEC_RAW_CONFS:
-                try:
-                    if (self.spark.conf.get(_key, _default).lower()
-                            != _default):
-                        return _select(_raw())
-                except Exception:  # noqa: BLE001 — unreadable conf
-                    pass           # means unset: the default applies
             # real-cluster mode: the resolve happens INSIDE each scan
             # task against that node's own mirror (an unwarmed node
             # materializes node-locally instead of erroring; see
@@ -317,12 +276,10 @@ class Engine:
                 if raw_opts is not None:
                     raw_opts.update(listing)
                     if fl == "binaryfile":
-                        try:
-                            raw_opts["maxlength"] = self.spark.conf.get(
-                                "spark.sql.sources.binaryFile"
-                                ".maxLength", "2147483647")
-                        except Exception:  # noqa: BLE001
-                            pass
+                        raw_opts["maxlength"] = _session_conf(
+                            self.spark,
+                            "spark.sql.sources.binaryFile.maxLength",
+                            "2147483647")
                     return self._read_executor_resolved(
                         location, columns, split_bytes=split_bytes,
                         fmt=fl, raw_opts=raw_opts)
@@ -378,12 +335,9 @@ class Engine:
             if fmt in ("parquet", "orc") and not rest and (
                     schema is None or user_schema is not None):
                 if merge is None:
-                    try:
-                        merge = (self.spark.conf.get(
-                            f"spark.sql.{fmt}.mergeSchema",
-                            "false").lower() == "true")
-                    except Exception:  # noqa: BLE001
-                        merge = False
+                    merge = _session_conf(
+                        self.spark, f"spark.sql.{fmt}.mergeSchema",
+                        "false").lower() == "true"
                 if fmt == "orc" and merge:
                     # ORC mergeSchema column ORDER follows a JVM-
                     # internal hash order over the file BASENAMES
@@ -457,17 +411,13 @@ class Engine:
                 # (UNABLE_TO_INFER_SCHEMA / path-not-found) on the
                 # original tree — never a silent empty result
                 return _select(_raw())
-        if (self.cache.mirror is not None and self.conf.auto_warm_bytes
-                and not location.startswith("mem://")):
-            try:
-                cold = self.cache.cold_admitted_bytes(location,
-                                                      files=files)
-                if cold >= self.conf.auto_warm_bytes:
-                    self.cache.warm_distributed(self.spark, location,
-                                                files=files)
-            except Exception:  # noqa: BLE001 — warm trouble never
-                pass           # fails the read; resolve self-heals
-        paths = self.cache.resolve_for_spark(location, files=files)
+        # ONE remote listing feeds the resolve, including its
+        # auto-warm choice (a cold table at/over auto_warm_bytes is
+        # filled by Spark tasks, so the driver never funnels table
+        # bytes) — on an object store, re-listing a 10k-file table per
+        # step would dominate the metadata path
+        paths = self.cache.resolve_for_spark(location, files=files,
+                                             spark=self.spark)
         if not paths:
             return _select(_raw())
         view_read = self._view_read(location, files, paths,
@@ -610,76 +560,42 @@ class Engine:
                     self.spark.conf.set(key, "true")
             except Exception:  # noqa: BLE001 — pruning is optional
                 pass
-        try:
-            ntz = self.spark.conf.get(
-                "spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-        except Exception:  # noqa: BLE001 — Spark default
-            ntz = "true"
-        try:
-            pushdown = self.spark.conf.get(
-                "spark.sql.python.filterPushdown.enabled", "false")
-        except Exception:  # noqa: BLE001
-            pushdown = "false"
-        try:
-            tz = self.spark.conf.get(
-                "spark.sql.session.timeZone", "UTC")
-        except Exception:  # noqa: BLE001
-            tz = "UTC"
+        def conf(key, default):
+            return _session_conf(self.spark, key, default)
+
+        ntz = conf("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+        pushdown = conf("spark.sql.python.filterPushdown.enabled", "false")
+        tz = conf("spark.sql.session.timeZone", "UTC")
         if merge is None:
             # option absent: the session conf decides (JVM parity;
             # an explicit option value overrides the conf — probed);
             # each format has its own conf key
-            key = (f"spark.sql.{fmt}.mergeSchema")
-            try:
-                merge = (self.spark.conf.get(key, "false").lower()
-                         == "true")
-            except Exception:  # noqa: BLE001
-                merge = False
-        try:
-            case_sensitive = self.spark.conf.get(
-                "spark.sql.caseSensitive", "false")
-        except Exception:  # noqa: BLE001
-            case_sensitive = "false"
+            merge = conf(f"spark.sql.{fmt}.mergeSchema",
+                         "false").lower() == "true"
+        case_sensitive = conf("spark.sql.caseSensitive", "false")
         # rebase modes for non-Spark-written files: the JVM consults
         # these confs when a footer has neither a legacy marker nor
         # org.apache.spark.version (probed, sources/rebase.py) — ship
         # them so executor-mode reads pick the same per-file mode
-        try:
-            dt_rebase = self.spark.conf.get(
-                "spark.sql.parquet.datetimeRebaseModeInRead",
-                "CORRECTED")
-        except Exception:  # noqa: BLE001
-            dt_rebase = "CORRECTED"
-        try:
-            i96_rebase = self.spark.conf.get(
-                "spark.sql.parquet.int96RebaseModeInRead",
-                "CORRECTED")
-        except Exception:  # noqa: BLE001
-            i96_rebase = "CORRECTED"
+        dt_rebase = conf("spark.sql.parquet.datetimeRebaseModeInRead",
+                         "CORRECTED")
+        i96_rebase = conf("spark.sql.parquet.int96RebaseModeInRead",
+                          "CORRECTED")
         # NANOS-annotated columns: refused by default (JVM
         # PARQUET_TYPE_ILLEGAL), served as bigint when the legacy
         # conf is on — implemented natively in the source (the query
         # battery leaves this conf set for the events table)
-        try:
-            nanos_long = self.spark.conf.get(
-                "spark.sql.legacy.parquet.nanosAsLong", "false")
-        except Exception:  # noqa: BLE001
-            nanos_long = "false"
+        nanos_long = conf("spark.sql.legacy.parquet.nanosAsLong", "false")
         # two more session confs served natively (round 10, probed):
         # inference-off partition columns type STRING (void stays);
         # binaryAsString remaps unannotated parquet BINARY (nested
-        # included) at schema inference — user schemas still win
-        try:
-            pt_inference = self.spark.conf.get(
-                "spark.sql.sources.partitionColumnTypeInference"
-                ".enabled", "true")
-        except Exception:  # noqa: BLE001
-            pt_inference = "true"
-        try:
-            bin_str = self.spark.conf.get(
-                "spark.sql.parquet.binaryAsString", "false")
-        except Exception:  # noqa: BLE001
-            bin_str = "false"
+        # included) at schema inference — user schemas still win.
+        # int96AsTimestamp=false needs nothing: Spark 4.1's own reader
+        # ignores it (probed — tests/test_type_parity.py)
+        pt_inference = conf(
+            "spark.sql.sources.partitionColumnTypeInference.enabled",
+            "true")
+        bin_str = conf("spark.sql.parquet.binaryAsString", "false")
         if fmt != "parquet":
             bin_str = "false"  # PARQUET-only conf (probed B6: an
             # ORC binary column stays binary under the flag)
@@ -754,13 +670,9 @@ class Engine:
                  "spark.sql.files.ignoreCorruptFiles"),
                 ("ignore_missing",
                  "spark.sql.files.ignoreMissingFiles")):
-            if opt not in have:
-                try:
-                    v = self.spark.conf.get(conf_key, "false")
-                except Exception:  # noqa: BLE001 — Spark default
-                    v = "false"
-                if str(v).lower() == "true":
-                    reader = reader.option(opt, "true")
+            if (opt not in have
+                    and conf(conf_key, "false").lower() == "true"):
+                reader = reader.option(opt, "true")
         if columns:
             import json
 
@@ -1000,12 +912,9 @@ class Engine:
                 (str(v2) for k2, v2 in fwd.items()
                  if k2.lower() == "columnnameofcorruptrecord"), None)
             if corrupt_name is None:
-                try:
-                    corrupt_name = self.spark.conf.get(
-                        "spark.sql.columnNameOfCorruptRecord",
-                        "_corrupt_record")
-                except Exception:  # noqa: BLE001
-                    corrupt_name = "_corrupt_record"
+                corrupt_name = _session_conf(
+                    self.spark, "spark.sql.columnNameOfCorruptRecord",
+                    "_corrupt_record")
             if any(f.name.lower() == corrupt_name.lower()
                    for f in fields):
                 return None
@@ -1173,11 +1082,8 @@ class Engine:
                 with fs.open_read(path) as f:
                     fschema = po.ORCFile(f).schema
             target = _orc_arrow_target(fschema)
-            try:
-                cs = (self.spark.conf.get("spark.sql.caseSensitive",
-                                          "false").lower() == "true")
-            except Exception:  # noqa: BLE001
-                cs = False
+            cs = _session_conf(self.spark, "spark.sql.caseSensitive",
+                               "false").lower() == "true"
             by_key = {(f.name if cs else f.name.lower()): f
                       for f in target}
             import pyarrow as pa
@@ -1220,18 +1126,14 @@ class Engine:
         itself, so pruning is safe)."""
         if self.cache is None:
             return None, None
-        try:
-            thr = int(str(self.spark.conf.get(
-                "spark.sidecar.parallelListing.threshold", "32")))
-        except Exception:  # noqa: BLE001
-            thr = 32
+        thr = _session_conf(self.spark,
+                            "spark.sidecar.parallelListing.threshold",
+                            "32", int)
         if thr < 0:
             return None, None  # disabled
-        try:
-            par = int(str(self.spark.conf.get(
-                "spark.sidecar.parallelListing.parallelism", "10000")))
-        except Exception:  # noqa: BLE001
-            par = 10000
+        par = _session_conf(self.spark,
+                            "spark.sidecar.parallelListing.parallelism",
+                            "10000", int)
         try:
             files = self.cache.maybe_list_files_job(
                 self.spark, location, threshold=thr, parallelism=par)
@@ -1286,12 +1188,9 @@ class Engine:
         threshold; saves N-per-worker footer reads. Returns None
         below the threshold or on any trouble (the source's own fold
         then applies, correct either way)."""
-        try:
-            raw = self.spark.conf.get(
-                "spark.sidecar.mergeSchema.jobThreshold", "1000")
-            threshold = int(raw)
-        except Exception:  # noqa: BLE001
-            threshold = 1000
+        threshold = _session_conf(
+            self.spark, "spark.sidecar.mergeSchema.jobThreshold", "1000",
+            int)
         if threshold <= 0:
             return None
         try:
@@ -1315,34 +1214,26 @@ class Engine:
             return None
         items = [(st.path, st.mtime)
                  for st in sorted(files, key=lambda s: s.path)]
-        conf_json = self.conf.to_json()
-        endpoint = os.environ.get("SIDECAR_S3_ENDPOINT")
         per_task = 256  # footers per task: metadata-only reads
         chunks = [(i, items[i:i + per_task])
                   for i in range(0, len(items), per_task)]
 
-        def fold(pair):
-            idx, chunk = pair
-            if endpoint:
-                os.environ["SIDECAR_S3_ENDPOINT"] = endpoint
-            from sidecar_spark.cache.manager import CacheManager
-            from sidecar_spark.config import SidecarConfig
+        def fold(mgr, pairs):
             from sidecar_spark.sources.cached_parquet import (
                 _merge_struct_types,
                 footer_spark_struct,
             )
 
-            mgr = CacheManager.get_or_create(
-                SidecarConfig.from_json(conf_json))
-            acc = None
-            for p, mt in chunk:
-                s = footer_spark_struct(
-                    mgr, p, mt, ntz, nanos_long,
-                    binary_as_string=binary_as_string)
-                acc = (s if acc is None
-                       else _merge_struct_types(acc, s,
-                                                case_sensitive))
-            return (idx, acc.json())
+            for idx, chunk in pairs:
+                acc = None
+                for p, mt in chunk:
+                    s = footer_spark_struct(
+                        mgr, p, mt, ntz, nanos_long,
+                        binary_as_string=binary_as_string)
+                    acc = (s if acc is None
+                           else _merge_struct_types(acc, s,
+                                                    case_sensitive))
+                yield idx, acc.json()
 
         from pyspark.sql.types import StructType
 
@@ -1351,9 +1242,8 @@ class Engine:
         )
 
         try:
-            sc = self.spark.sparkContext
-            parts = (sc.parallelize(chunks, len(chunks))
-                     .map(fold).collect())
+            parts = self.cache.run_tasks(self.spark, chunks, fold,
+                                         slices=len(chunks))
             import json
 
             base = None
@@ -1372,11 +1262,9 @@ class Engine:
     def _open_cost_bytes(self) -> str:
         """The session's spark.sql.files.openCostInBytes (the JVM's
         own small-file packing cost), default 4 MiB."""
-        try:
-            return str(_parse_bytes(str(self.spark.conf.get(
-                "spark.sql.files.openCostInBytes", "4194304"))))
-        except Exception:  # noqa: BLE001
-            return "4194304"
+        return str(_session_conf(
+            self.spark, "spark.sql.files.openCostInBytes", "4194304",
+            _parse_bytes))
 
     def _scan_split_bytes(self) -> int:
         """Byte-range split size for the executor-mode scan: the
@@ -1387,10 +1275,7 @@ class Engine:
         serializes its whole scan on a single task."""
         for key in ("spark.sidecar.scan.splitBytes",
                     "spark.sql.files.maxPartitionBytes"):
-            try:
-                raw = self.spark.conf.get(key, None)
-            except Exception:  # noqa: BLE001
-                raw = None
+            raw = _session_conf(self.spark, key, None)
             if raw:
                 try:
                     return _parse_bytes(str(raw))

@@ -466,6 +466,36 @@ def ngram_jaccard_pairs(
     )
 
 
+#: seconds ``observed_metrics`` waits for an Observation's metrics.
+#: They land on the listener bus right behind the observed action, so
+#: the bound only matters for a metric that never arrives.
+OBSERVATION_TIMEOUT_S = 120.0
+
+
+def observed_metrics(obs, timeout_s: float = OBSERVATION_TIMEOUT_S) -> dict:
+    """``obs.get``, bounded. ``Observation.get`` blocks until the
+    observed dataset's first action reports its metrics — forever if
+    they never arrive (the action never ran, or its event was lost).
+    This polls the JVM observation's public ``future()`` against a
+    deadline and raises ``TimeoutError`` past ``timeout_s``."""
+    import time
+
+    if obs._jo is None:
+        return obs.get  # not attached to a DataFrame: PySpark's error
+    fut = obs._jo.future()
+    deadline = time.monotonic() + timeout_s
+    delay = 0.001
+    while not fut.isCompleted():
+        if time.monotonic() >= deadline:
+            raise TimeoutError(
+                f"observed metrics did not arrive within {timeout_s:g} s"
+                " — the observed DataFrame ran no action, or its"
+                " metrics were lost")
+        time.sleep(delay)
+        delay = min(2 * delay, 0.05)
+    return obs.get
+
+
 def connected_components(edges: DataFrame, nodes: DataFrame,
                          id_col: str = "doc_id",
                          src_col: str = "doc_a", dst_col: str = "doc_b",
@@ -525,7 +555,9 @@ def connected_components_star(edges: DataFrame, nodes: DataFrame,
         ck = df.observe(obs, F.count(F.lit(1)).alias("n"),
                         F.bit_xor(F.xxhash64("u", "v")).alias("h")) \
             .localCheckpoint(eager=True)
-        m = obs.get  # blocks until the checkpoint job's metrics land
+        # bounded wait for the checkpoint job's metrics: a lost
+        # metric raises instead of hanging the loop
+        m = observed_metrics(obs)
         return ck, (m["n"], m["h"])
 
     e, e_sig = ck_with_sig(

@@ -1284,7 +1284,7 @@ def _read_file_batches(mgr, part: _FilePart, one_pass):
         if handle is None and not part.veto and part.start == 0:
             # unwarmed node (or lookup-to-open eviction race):
             # self-heal by materializing — a node-local fill, never an
-            # error and never a driver funnel (the fetch_slice pattern
+            # error and never a driver funnel (the warm task step
             # inside the scan). Only the split owning byte 0 fills: N
             # cold split tasks would otherwise EACH copy the whole
             # file (the in-flight dedup is per-process; Spark workers
@@ -1368,7 +1368,7 @@ def _apply_endpoint(endpoint) -> None:
     runs OUTSIDE the driver process and does not inherit env vars set
     after the worker daemon forked — the S3 endpoint override must
     travel as an option and be re-applied per process (the same
-    reused-worker rule warm_distributed's fetch_slice follows)."""
+    reused-worker rule CacheManager.run_tasks follows)."""
     if endpoint:
         import os
 
@@ -1822,21 +1822,13 @@ class CachedParquetReader(DataSourceReader):
         # happen BEFORE the veto math: excluded files are never read,
         # so they must not count toward the mirror-floor check either
         files = self._filter_files(files)
-        veto = False
-        if mgr.mirror is not None and mgr.mirror.capacity:
-            admitted = sum(
-                st.length for st in files
-                if mgr.is_cacheable_file(st.path, st.length))
-            floor = (mgr.mirror.capacity
-                     * mgr.conf.eviction_stop_occupancy)
-            if admitted > floor:
-                # same veto as resolve_for_spark: a table bigger
-                # than the mirror floor is not FILLED on any node
-                # (existing hits still serve locally in read());
-                # the scan-detected counter bumps in read() on the
-                # first partition — once per EXECUTED scan, not once
-                # per planning call
-                veto = True
+        # the same veto as resolve_for_spark (CacheManager.admit): a
+        # table bigger than the mirror floor is not FILLED on any node
+        # (existing hits still serve locally in read()); the
+        # scan-detected counter bumps in read() on the first
+        # partition — once per EXECUTED scan, not once per planning
+        # call
+        _, veto = mgr.admit(files)
         if self.flatten:
             # recursiveFileLookup: flatten — every file at any depth,
             # no partition columns (JVM-probed)
@@ -1930,8 +1922,8 @@ class CachedParquetReader(DataSourceReader):
         from sidecar_spark.cache.manager import CacheManager
 
         _apply_endpoint(self.endpoint)
-        # worker-lifetime singleton, exactly like fetch_slice /
-        # mirror_slice: get_or_create with no release — the node-local
+        # worker-lifetime singleton, exactly like the task steps of
+        # CacheManager.run_tasks: get_or_create with no release — the node-local
         # manager outlives the task, serving every later scan's hits
         mgr = CacheManager.get_or_create(self._conf())
         if part.first and part.veto:

@@ -250,20 +250,6 @@ class TestWriteCache:
         assert os.path.exists(cp0)  # unsynced victim survived
         assert wc.disabled  # cache disabled after retries exhausted
 
-    def test_size_based_eviction_policy(self, cache_dir):
-        """Opt-in largest-first victim policy (the reference's unwired
-        SizeBasedPriorityQueue): the big file goes first even though it
-        was created last."""
-        conf = SidecarConfig.create(cache_dir=cache_dir, write_cache_size=1 * MiB,
-                                    write_cache_eviction_policy="size")
-        wc = WriteCache(conf)
-        wc.put_file("/d/small0", b"s" * (100 * KiB), synced=True)
-        wc.put_file("/d/small1", b"s" * (100 * KiB), synced=True)
-        wc.put_file("/d/big", b"b" * (800 * KiB), synced=True)
-        wc.evict_files()
-        assert not wc.contains("/d/big")
-        assert wc.contains("/d/small0") and wc.contains("/d/small1")
-
     def test_rename_fixes_filelist(self, cache_dir):
         wc = self._wc(cache_dir, 0)
         wc.put_file("/d/a", b"123", synced=True)
@@ -1151,9 +1137,10 @@ class TestMirrorAccounting:
 
 
 class TestAutoWarm:
-    """Engine.read_parquet auto-warm: a cold table at/over
-    auto_warm_bytes is filled by Spark tasks (zero driver fetches);
-    below the threshold the driver pool fills as before."""
+    """resolve_for_spark auto-warm (as Engine.read_parquet calls it,
+    with the session): a cold table at/over auto_warm_bytes is filled
+    by Spark tasks (zero driver fetches); below the threshold the
+    driver pool fills as before."""
 
     def test_cold_read_over_threshold_warms_distributed(
             self, cache_dir, remote_dir, spark):
@@ -1166,14 +1153,15 @@ class TestAutoWarm:
             cache_persistent=False, auto_warm_bytes=1)
         eng = Engine(spark, base_dir=remote_dir, conf=conf)
         try:
-            cold = eng.cache.cold_admitted_bytes(remote_dir)
-            assert cold == sum(
+            paths = eng.cache.resolve_for_spark(remote_dir, spark=spark)
+            # the task warm filled every admitted file: all of them
+            # are in the mirror and the resolve is all local ...
+            assert eng.cache.mirror.size_bytes() == sum(
                 os.path.getsize(os.path.join(remote_dir, n))
                 for n in os.listdir(remote_dir))
-            eng.cache.warm_distributed(spark, remote_dir)
-            assert eng.cache.cold_admitted_bytes(remote_dir) == 0
-            paths = eng.cache.resolve_for_spark(remote_dir)
+            assert len(paths) == 4
             assert all(p.startswith(cache_dir) for p in paths)
+            # ... without one driver-side remote fetch
             assert eng.cache.stats.get(
                 "total_read_requests_from_remote") == 0
         finally:
@@ -1283,6 +1271,36 @@ class TestFileScanVeto:
             assert mgr.stats.get("total_scans_detected") == 0
         finally:
             mgr.close(save=False)
+
+    def test_engine_vetoed_read_counts_one_scan(self, cache_dir,
+                                                remote_dir, spark):
+        """One vetoed read through Engine counts ONE detected scan,
+        also when the auto-warm is on: the resolve decides the veto
+        and the task warm together (8 x 64 KiB files over a 192 KiB
+        mirror)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from sidecar_spark import Engine
+        src = os.path.join(remote_dir, "t.parquet")
+        os.makedirs(src)
+        for i in range(8):
+            pq.write_table(
+                pa.table({"i": [i], "b": [os.urandom(64 * 1024)]}),
+                os.path.join(src, f"part-{i}.parquet"),
+                compression="none")
+        conf = SidecarConfig.create(
+            cache_dir=cache_dir, data_cache_type="file",
+            cache_persistent=False, mirror_size=3 * 64 * 1024,
+            auto_warm_bytes=1)
+        eng = Engine(spark, base_dir=remote_dir, conf=conf)
+        try:
+            assert eng.read_parquet(src).count() == 8
+            assert eng.cache.stats.get("total_scans_detected") == 1
+            assert eng.cache.mirror.size_bytes() == 0
+        finally:
+            eng.close()
+            CacheManager.clear_instances()
 
     def test_over_capacity_warm_refuses(self, cache_dir, remote_dir,
                                         spark):

@@ -15,7 +15,6 @@ from sidecar_spark.config import SidecarConfig
 from sidecar_spark.stats import Statistics
 from sidecar_spark.util.lrc_queue import LRCQueue
 from sidecar_spark.util.scan_detector import ScanDetector
-from sidecar_spark.util.size_priority_queue import SizeBasedPriorityQueue
 
 PAGE = 1024
 LENGTH = 64 * PAGE
@@ -66,18 +65,6 @@ def test_lrc_queue_victim_is_oldest_creation(keys):
     assert q.eviction_candidate() == order[0]
     q.remove(order[0])
     assert q.eviction_candidate() == (order[1] if len(order) > 1 else None)
-
-
-@settings(max_examples=50, deadline=None)
-@given(entries=st.dictionaries(
-    st.text(alphabet="xyz12", min_size=1, max_size=6),
-    st.integers(0, 10**9), min_size=1, max_size=25))
-def test_size_queue_victim_is_largest(entries):
-    q = SizeBasedPriorityQueue()
-    for k, v in entries.items():
-        q.put(k, v)
-    victim = q.eviction_candidate()
-    assert entries[victim] == max(entries.values())
 
 
 @settings(max_examples=50, deadline=None)

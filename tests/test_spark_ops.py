@@ -223,6 +223,27 @@ class TestObservability:
         assert m["rows_seen"] == li.count()
         assert m["qty_total"] > 0
 
+    def test_observed_metrics_wait_is_bounded(self, spark):
+        """A metric that never lands (the observed DataFrame runs no
+        action) raises TimeoutError after the bound instead of
+        blocking forever; a dataset that ran returns its metrics."""
+        import time
+
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        from sidecar_spark.functions.dedup import observed_metrics
+
+        lost = Observation()
+        spark.range(3).observe(lost, F.count(F.lit(1)).alias("n"))
+        t0 = time.monotonic()
+        with pytest.raises(TimeoutError):
+            observed_metrics(lost, timeout_s=0.5)
+        assert time.monotonic() - t0 < 10
+        ran = Observation()
+        spark.range(3).observe(ran, F.count(F.lit(1)).alias("n")).collect()
+        assert observed_metrics(ran, timeout_s=60) == {"n": 3}
+
     def test_python_datasource_batch_and_stream_agree(self, spark, sf_dir):
         """The telemetry connector's batch reader and stream reader
         must describe the same feed: identical totals either way."""
