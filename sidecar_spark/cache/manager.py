@@ -26,6 +26,7 @@ process, ``run_tasks`` is the one task fan-out, and
 from __future__ import annotations
 
 import concurrent.futures
+import functools
 import os
 import threading
 import time
@@ -833,78 +834,57 @@ class CacheManager:
         if self.write_cache is not None:
             self.write_cache.delete_file(target)
 
-    def list_files(self, uri: str, suffix: str = "") -> List[FileStat]:
-        fs, path = self._resolve(uri)
-        st = fs.stat(path)
-        if st is not None and not st.is_dir:
-            return [st]
-        try:
-            listing = fs.list(path)
-        except (NotADirectoryError, FileNotFoundError):
-            # stat-to-list race on a mutating remote: the path was
-            # absent (or a dir) at stat time and reappeared as a FILE
-            # before the list ran (delete+recreate cycles). Re-stat
-            # and serve what is there NOW — a concurrent mutation must
-            # never fail the read (the resolve self-heal contract;
-            # caught live by the warm+evict soak)
-            st = fs.stat(path)
-            if st is not None and not st.is_dir:
-                return [st]
-            return []
-        return [s for s in listing if not s.is_dir
-                and s.path.endswith(suffix) and not os.path.basename(s.path).startswith(("_", "."))]
+    def list_files(self, uri: str, suffix: str = "",
+                   spark=None) -> List[FileStat]:
+        """The data files of a table location — the one listing of
+        the read path, the answer the reference's wrapped FileSystem
+        gives once per path (``SidecarCachingFileSystem.java:
+        1596-1619``).
 
-    def maybe_list_files_job(self, spark, uri: str, suffix: str = "",
-                             threshold: int = 32,
-                             parallelism: int = 10000,
-                             ) -> Optional[List[FileStat]]:
-        """Distributed file listing — InMemoryFileIndex's
-        ``spark.sql.sources.parallelPartitionDiscovery`` analog (the
-        JVM distributes leaf-file listing as a Spark job above 32
-        paths; ``bulkListLeafFiles``). The reference funnels every
-        verb through ONE FileSystem instance
-        (``SidecarCachingFileSystem.java:1596-1619``) — fine
-        in-process, but on a cluster driver a multi-million-object
-        prefix makes the single serial LIST the scan's planning
-        bottleneck (VERDICT r9 missing #1).
+        One shallow (delimiter) LIST of the root comes first. A root
+        with no visible subdirectories is fully listed by it. A tree
+        takes one recursive LIST, or, with a session and more than
+        ``spark.sidecar.parallelListing.threshold`` visible
+        subdirectories (default 32, the JVM's
+        parallelPartitionDiscovery threshold; negative disables), one
+        Spark job of per-subtree LISTs (``_list_slice``) — the
+        ``bulkListLeafFiles`` analog, so a multi-million-object
+        prefix does not serialize on the driver. Job trouble falls
+        back to the recursive LIST.
 
-        One shallow LIST of the root finds its immediate
-        subdirectories; when there are MORE than ``threshold`` the
-        per-subtree recursive LISTs fan out as one Spark job —
-        min(len(dirs), parallelism) slices, each task listing its
-        directories against the remote (metadata only, no mirror
-        involvement) — and the driver concatenates. Below the
-        threshold (or a file / flat dir / any job trouble) returns
-        None: the caller's serial ``list_files`` is correct and
-        cheaper there.
+        A stat runs only when the listing comes back empty: it tells a
+        single-file location (served as itself) from a missing or
+        empty one, and it self-heals the race of a mutating remote (a
+        path absent at the LIST and recreated as a file before the
+        stat is served as the file it now is — a concurrent mutation
+        never fails the read).
 
-        The result is element-equal to ``list_files`` (same
-        suffix + hidden-basename filter, applied to the union),
-        just unordered differently — callers sort by path."""
-        if threshold < 0:
-            return None
-        fs, path = self._resolve(uri)
-        try:
-            # no stat probe: a FILE path makes the shallow list raise
-            # (or come back empty) and the serial path handles it —
-            # keeping this to ONE wire request per plan
-            top = fs.list(path, recursive=False)
-        except (NotADirectoryError, FileNotFoundError):
-            return None  # file / race: serial path has the self-heal
-        dirs = sorted(s.path for s in top if s.is_dir)
-        if len(dirs) <= threshold:
-            return None
-        try:
-            listed = self.run_tasks(spark, dirs, _list_slice,
-                                    slices=min(len(dirs),
-                                               max(1, parallelism)))
-        except Exception:  # noqa: BLE001 — job trouble: the serial
-            return None    # LIST is always correct
-        files = [s for s in top if not s.is_dir]
-        files.extend(st for chunk in listed for st in chunk)
-        return [s for s in files
-                if s.path.endswith(suffix)
-                and not os.path.basename(s.path).startswith(("_", "."))]
+        Files below the root follow Spark's hidden-path rule
+        (``_hidden``) and must end in ``suffix``."""
+        fs, root = self._resolve(uri)
+        top = _ls(fs, root, recursive=False)
+        dirs = sorted(s.path for s in top or ()
+                      if s.is_dir and not _hidden(root, s.path))
+        listed = top
+        if dirs:
+            listed = None
+            if spark is not None and 0 <= _listing_threshold(spark) \
+                    < len(dirs):
+                try:
+                    chunks = self.run_tasks(
+                        spark, dirs, functools.partial(_list_slice, root),
+                        slices=min(len(dirs), _LIST_JOB_MAX_SLICES))
+                    listed = ([s for s in top if not s.is_dir]
+                              + [s for chunk in chunks for s in chunk])
+                except Exception:  # noqa: BLE001 — job trouble: the
+                    pass           # recursive LIST is always correct
+            if listed is None:
+                listed = _ls(fs, root, recursive=True)
+        if not listed:
+            st = fs.stat(root)
+            return [st] if st is not None and not st.is_dir else []
+        return [s for s in listed if not s.is_dir
+                and s.path.endswith(suffix) and not _hidden(root, s.path)]
 
     # ---- Spark integration: the mirror's fill policy ------------------------------
 
@@ -1022,7 +1002,7 @@ class CacheManager:
         ``SidecarCachingInputStream.java:1008-1038``)."""
         fs, path = self._resolve(uri)
         if files is None:
-            files = self.list_files(path, suffix=suffix)
+            files = self.list_files(path, suffix=suffix, spark=spark)
         admitted, veto = self.admit(files)
         if veto:
             self.stats.add("total_scans_detected")
@@ -1080,9 +1060,7 @@ class CacheManager:
         (``admit``) is not warmed — filling it would only churn every
         node's cache — and counts one ``total_scans_detected``."""
         if files is None:
-            files = self.list_files(
-                uri if "://" in uri else os.path.abspath(uri),
-                suffix=suffix)
+            files = self.list_files(uri, suffix=suffix, spark=spark)
         admitted, veto = self.admit(files)
         cold = [st for st in admitted
                 if self.mirror.lookup(st.path, st.mtime) is None]
@@ -1126,7 +1104,8 @@ class CacheManager:
         if self.write_cache is None:
             return 0
         fs_uri = uri if "://" in uri else os.path.abspath(uri)
-        work = [st for st in self.list_files(fs_uri, suffix=suffix)
+        work = [st for st in self.list_files(fs_uri, suffix=suffix,
+                                             spark=spark)
                 if not self.conf.write_excluded(st.path)]
         if not self._on_tasks(fs_uri, sum(st.length for st in work)):
             return sum(_mirror_write(self, st) for st in work)
@@ -1191,19 +1170,60 @@ class CacheManager:
                 del CacheManager._instances[key]
 
 
+# ---- listing rules --------------------------------------------------------
+
+#: session conf: visible subdirectories above which ``list_files`` lists
+#: a tree as a Spark job (negative disables the job)
+_LIST_JOB_THRESHOLD_KEY = "spark.sidecar.parallelListing.threshold"
+#: slices of that job at most (one per subdirectory below this)
+_LIST_JOB_MAX_SLICES = 10000
+
+
+def _listing_threshold(spark) -> int:
+    try:
+        return int(spark.conf.get(_LIST_JOB_THRESHOLD_KEY, "32"))
+    except Exception:  # noqa: BLE001 — unreadable or malformed: default
+        return 32
+
+
+def _ls(fs: RemoteFS, path: str, recursive: bool) -> Optional[List[FileStat]]:
+    """One LIST of ``path``; None when it is a file or vanished."""
+    try:
+        return fs.list(path, recursive=recursive)
+    except (NotADirectoryError, FileNotFoundError):
+        return None
+
+
+def _hidden(root: str, path: str) -> bool:
+    """Spark's hidden-path rule (``HadoopFSUtils.shouldFilterOutPathName``)
+    over every segment of ``path`` below ``root``: a name starting with
+    ``_`` and holding no ``=``, starting with ``.``, or ending in
+    ``._COPYING_`` hides itself and everything under it. Directories
+    named ``_metadata*``/``_common_metadata*`` are Spark's exceptions and
+    are still descended; as a leaf such a file is not data (the index's
+    ``isDataPath``), so the leaf takes the rule without them."""
+    *dirs, leaf = path[len(root.rstrip("/")):].strip("/").split("/")
+
+    def excluded(name: str) -> bool:
+        return ((name.startswith("_") and "=" not in name)
+                or name.startswith(".") or name.endswith("._COPYING_"))
+
+    return excluded(leaf) or any(
+        excluded(d) and not d.startswith(("_metadata", "_common_metadata"))
+        for d in dirs)
+
+
 # ---- task steps (run by ``CacheManager.run_tasks`` on a worker's manager) ----
 
-def _list_slice(mgr: CacheManager, dirs):
-    """Recursive LIST of each directory (``maybe_list_files_job``)."""
+def _list_slice(root: str, mgr: CacheManager, dirs):
+    """Recursive LIST of each directory under ``root``, visible files
+    only (``list_files``' job)."""
     out = []
     for d in dirs:
         fs, p = mgr._resolve(d)  # noqa: SLF001
-        try:
-            sub = fs.list(p)
-        except (NotADirectoryError, FileNotFoundError):
-            continue  # vanished mid-job: same self-heal as the serial
-            # path — absent means empty, the read layer re-heals per file
-        out.extend(s for s in sub if not s.is_dir)
+        # vanished mid-job: absent means empty, as in the serial path
+        out.extend(s for s in _ls(fs, p, recursive=True) or ()
+                   if not s.is_dir and not _hidden(root, s.path))
     yield out
 
 

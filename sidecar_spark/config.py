@@ -58,10 +58,6 @@ _KEYMAP = {
     "write.cache.size": "write_cache_size",
     "data.page.size": "data_page_size",
     "io.buffer.size": "io_buffer_size",
-    "io.pool.size": "io_pool_size",
-    "jmx.metrics.enabled": "metrics_enabled",
-    "jmx.metrics.domain.name": "metrics_domain",
-    "test.mode": "test_mode",
     "data.cache.type": "data_cache_type",
     "cache.persistent": "cache_persistent",
     "caching.hint.detector.impl": "hint_detector",
@@ -69,7 +65,6 @@ _KEYMAP = {
     "read.exclude.path.list": "read_exclude_paths",
     "write.include.path.list": "write_include_paths",
     "write.cache.mode": "write_cache_mode",
-    "install.shutdown.hook": "install_shutdown_hook",
     "remote.files.mutable": "remote_files_mutable",
     "data.cache.mode": "data_cache_mode",
     "cache.minsize.threshold": "minsize_threshold",
@@ -82,6 +77,18 @@ _KEYMAP = {
     "auto.warm.bytes": "auto_warm_bytes",
     "resolve.mode": "resolve_mode",
     "mirror.size": "mirror_size",
+}
+
+# reference keys accepted and ignored, so reference configs still load:
+# nothing here has their subject — no JMX beans, no test mode, no JVM
+# shutdown hook (the owning Engine closes the manager), and the I/O
+# work runs on the one pool sized by thread.pool.max.size
+_IGNORED_KEYS = {
+    "io.pool.size",
+    "jmx.metrics.enabled",
+    "jmx.metrics.domain.name",
+    "test.mode",
+    "install.shutdown.hook",
 }
 
 _TRUE = {"true", "1", "yes", "on"}
@@ -132,7 +139,6 @@ class SidecarConfig:
     # data (page) cache
     data_page_size: int = 1 * MiB  # sidecar.data.page.size
     io_buffer_size: int = 4 * MiB  # sidecar.io.buffer.size (prefetch)
-    io_pool_size: int = 32  # sidecar.io.pool.size
     data_cache_type: SidecarDataCacheType = SidecarDataCacheType.FILE
     data_cache_mode: DataCacheMode = DataCacheMode.ALL
     data_cache_size: int = 0  # engine addition: page-store capacity (0 = unlimited)
@@ -172,14 +178,8 @@ class SidecarConfig:
 
     # lifecycle
     cache_persistent: bool = True  # sidecar.cache.persistent
-    install_shutdown_hook: bool = False  # sidecar.install.shutdown.hook
     remote_files_mutable: bool = False  # sidecar.remote.files.mutable
     thread_pool_size: int = 8  # sidecar.thread.pool.max.size
-    test_mode: bool = False  # sidecar.test.mode
-
-    # observability
-    metrics_enabled: bool = True  # sidecar.jmx.metrics.enabled
-    metrics_domain: str = "SidecarFS"  # sidecar.jmx.metrics.domain.name
 
     # engine-side root for all local cache state (pages, mirror, snapshots)
     cache_dir: Optional[str] = None
@@ -209,6 +209,8 @@ class SidecarConfig:
             else:
                 if raw_key not in _KEYMAP:
                     continue  # non-sidecar spark key
+            if key in _IGNORED_KEYS:
+                continue
             fname = _KEYMAP.get(key)
             if fname is None:
                 raise KeyError(f"unknown sidecar config key: {raw_key}")
@@ -236,12 +238,11 @@ class SidecarConfig:
         coerced: dict = {}
         for k, v in kwargs.items():
             if k in ("write_cache_size", "data_page_size", "io_buffer_size",
-                     "io_pool_size", "thread_pool_size", "minsize_threshold",
+                     "thread_pool_size", "minsize_threshold",
                      "scan_detector_threshold", "data_cache_size",
                      "auto_warm_bytes", "mirror_size"):
                 coerced[k] = _to_int(v)
-            elif k in ("metrics_enabled", "test_mode", "cache_persistent",
-                       "install_shutdown_hook", "remote_files_mutable",
+            elif k in ("cache_persistent", "remote_files_mutable",
                        "scan_detector_enabled"):
                 coerced[k] = _to_bool(v)
             elif k == "data_cache_type":

@@ -236,6 +236,11 @@ class Engine:
                 reader = reader.schema(schema)
             return reader.load(list(paths) if paths else location)
 
+        def _cached(df):
+            # None: the executor read declined (empty or unlistable
+            # location, out-of-matrix ORC footer) — read it raw
+            return df if df is not None else _select(_raw())
+
         if self.cache is None:
             return _select(_raw())
         if (self.conf.resolve_mode == "executor"
@@ -280,9 +285,9 @@ class Engine:
                             self.spark,
                             "spark.sql.sources.binaryFile.maxLength",
                             "2147483647")
-                    return self._read_executor_resolved(
+                    return _cached(self._read_executor_resolved(
                         location, columns, split_bytes=split_bytes,
-                        fmt=fl, raw_opts=raw_opts)
+                        fmt=fl, raw_opts=raw_opts))
                 return _select(_raw())
             if fl in ("csv", "json") and schema is not None:
                 # EXPLICIT user schema: no inference to reproduce
@@ -296,12 +301,9 @@ class Engine:
                 # value-level options ride; record-level ones
                 # (header, multiLine, lineSep, encoding, comment,
                 # non-PERMISSIVE modes) route raw.
-                composed = self._read_csv_json_composed(
+                return _cached(self._read_csv_json_composed(
                     location, fl, schema, rest, columns,
-                    split_bytes, listing)
-                if composed is not None:
-                    return composed
-                return _select(_raw())
+                    split_bytes, listing))
             user_schema = None
             if schema is not None and fmt in ("parquet",
                                               "orc") and not rest:
@@ -312,12 +314,8 @@ class Engine:
                 # partition columns relocated/typed like the JVM
                 # (probed). mergeSchema is irrelevant under a user
                 # schema (the JVM skips merging too). For ORC a
-                # FOOTER GATE checks the first file's conversions
-                # up front: cells outside the probed matrix
-                # (temporal cross-kinds, string→numeric parses,
-                # Java-rendered float→string, ...) route the whole
-                # read to the raw JVM scan, which applies its own
-                # semantics.
+                # footer gate (_orc_user_schema_ok) routes
+                # out-of-matrix conversions raw.
                 try:
                     if isinstance(schema, str):
                         from pyspark.sql.types import (
@@ -329,9 +327,6 @@ class Engine:
                         user_schema = schema
                 except Exception:  # noqa: BLE001 — unparseable DDL:
                     return _select(_raw())  # let the JVM error on it
-                if fmt == "orc" and not self._orc_user_schema_ok(
-                        location, user_schema, listing):
-                    return _select(_raw())
             if fmt in ("parquet", "orc") and not rest and (
                     schema is None or user_schema is not None):
                 if merge is None:
@@ -348,10 +343,10 @@ class Engine:
                     # cached: the symlink view preserves basenames,
                     # so the JVM applies the same order there.
                     return _select(_raw())
-                return self._read_executor_resolved(
+                return _cached(self._read_executor_resolved(
                     location, columns, split_bytes=split_bytes,
                     merge=merge, fmt=fmt, user_schema=user_schema,
-                    raw_opts=listing)
+                    raw_opts=listing))
             # the Python sources decode parquet and ORC (both
             # self-describing) with the default option set plus
             # mergeSchema. csv/json schema INFERENCE cannot be
@@ -394,23 +389,9 @@ class Engine:
             # peel) is about the ORIGINAL paths — read the original
             # tree raw, correctness over caching
             return _select(_raw())
-        try:
-            files = self.cache.list_files(location)
-        except Exception:  # noqa: BLE001 — listing trouble: let Spark
-            return _select(_raw())  # read it raw
-        if driver_listing:
-            from sidecar_spark.sources.cached_parquet import (
-                _listing_args,
-                listing_filter,
-            )
-
-            files = listing_filter(files,
-                                   *_listing_args(driver_listing))
-            if not files:
-                # empty-after-filter: the JVM raises its own error
-                # (UNABLE_TO_INFER_SCHEMA / path-not-found) on the
-                # original tree — never a silent empty result
-                return _select(_raw())
+        files = self._table_files(location, driver_listing)
+        if not files:
+            return _select(_raw())
         # ONE remote listing feeds the resolve, including its
         # auto-warm choice (a cold table at/over auto_warm_bytes is
         # filled by Spark tasks, so the driver never funnels table
@@ -418,8 +399,6 @@ class Engine:
         # step would dominate the metadata path
         paths = self.cache.resolve_for_spark(location, files=files,
                                              spark=self.spark)
-        if not paths:
-            return _select(_raw())
         view_read = self._view_read(location, files, paths,
                                     resolved_opts["v"],
                                     fmt=fmt, schema=schema)
@@ -529,7 +508,15 @@ class Engine:
         docstring for the full design). Registered once per Engine.
         Every session-dependent setting travels as an option — the
         source's plan/scan stages run in worker processes with no
-        active session."""
+        active session — and so does the read's one listing
+        (``_ship_listing``). Returns None when the read must go raw:
+        an empty listing, or an ORC footer outside the user schema's
+        conversion matrix."""
+        files = self._table_files(location, raw_opts)
+        if not files or (fmt == "orc" and user_schema is not None
+                         and not self._orc_user_schema_ok(files,
+                                                          user_schema)):
+            return None
         if not getattr(self, "_cached_source_registered", False):
             from sidecar_spark.sources.cached_orc import CachedOrcSource
             from sidecar_spark.sources.cached_parquet import (
@@ -603,11 +590,7 @@ class Engine:
                   "text": "sidecar_cached_text",
                   "binaryfile": "sidecar_cached_binaryfile",
                   }.get(fmt, "sidecar_cached_parquet")
-        # distributed listing (VERDICT r9 #1): above a subdirectory-
-        # count threshold the recursive LIST fans out as a Spark job
-        # and the result ships to the plan worker as a driver-local
-        # manifest (plan workers run on the driver node)
-        manifest, listed = self._maybe_listing_manifest(location)
+        manifest = self._ship_listing(files)
         reader = (self.spark.read.format(source)
                   .option("path", location)
                   .option("conf", self.conf.to_json())
@@ -645,10 +628,9 @@ class Engine:
                 "user_schema", json.dumps(user_schema.jsonValue()))
         if merge and fmt == "parquet" and user_schema is None:
             merged = self._maybe_merged_schema_job(
-                location, ntz="true" == str(ntz).lower(),
+                files, ntz="true" == str(ntz).lower(),
                 nanos_long="true" == str(nanos_long).lower(),
                 case_sensitive="true" == str(case_sensitive).lower(),
-                listing=raw_opts, files=listed,
                 binary_as_string="true" == str(bin_str).lower())
             if merged is not None:
                 import json
@@ -968,6 +950,8 @@ class Engine:
         text = self._read_executor_resolved(
             location, split_bytes=split_bytes, fmt="text",
             raw_opts=framing)
+        if text is None:
+            return None
         part_cols = [c for c in text.columns if c != "value"]
         corrupt = next((v for k, v in fwd.items()
                         if k.lower() == "columnnameofcorruptrecord"),
@@ -1038,19 +1022,18 @@ class Engine:
             out = out.select(*columns)
         return out
 
-    def _orc_user_schema_ok(self, location: str, user_schema,
-                            listing=None) -> bool:
+    def _orc_user_schema_ok(self, files, user_schema) -> bool:
         """Footer gate for ORC reads with an explicit user schema
         (round 9): every user field that exists in the FIRST data
-        file must convert through the probed ORC matrix
-        (``cached_orc._orc_cast_gate``); complex types must match
-        exactly. Fields absent from the footer null-fill or come from
-        partition directories — both fine. One metadata-only footer
-        read (mirror-first), the same read the source's own schema()
-        pays. Any trouble → False (raw JVM scan, correct always).
-        Later files with drifted types conform per-file at scan
-        through the same gate — an out-of-matrix cell there fails
-        LOUDLY instead of serving silently-wrong values
+        file of ``files`` (the read's listing) must convert through
+        the probed ORC matrix (``cached_orc._orc_cast_gate``); complex
+        types must match exactly. Fields absent from the footer
+        null-fill or come from partition directories — both fine. One
+        metadata-only footer read (mirror-first), the same read the
+        source's own schema() pays. Any trouble → False (raw JVM scan,
+        correct always). Later files with drifted types conform
+        per-file at scan through the same gate — an out-of-matrix cell
+        there fails LOUDLY instead of serving silently-wrong values
         (PARITY.md)."""
         try:
             import pyarrow.orc as po
@@ -1060,19 +1043,8 @@ class Engine:
                 _orc_arrow_target,
                 _orc_cast_gate,
             )
-            from sidecar_spark.sources.cached_parquet import (
-                _listing_args,
-                listing_filter,
-            )
 
-            files = self.cache.list_files(location)
-            if listing:
-                files = listing_filter(files,
-                                       *_listing_args(listing))
-            files = sorted(files, key=lambda s: s.path)
-            if not files:
-                return False  # JVM raises its own empty-listing error
-            st = files[0]
+            st = min(files, key=lambda s: s.path)
             fs, path = self.cache._resolve(st.path)  # noqa: SLF001
             local = (self.cache.mirror.lookup(path, st.mtime)
                      if self.cache.mirror is not None else None)
@@ -1104,43 +1076,34 @@ class Engine:
         except Exception:  # noqa: BLE001 — footer/parse trouble:
             return False   # the raw JVM scan handles it
 
-    def _maybe_listing_manifest(self, location: str):
-        """Distributed file listing for the cached-source plan
-        (VERDICT r9 #1 — the last driver-side serial step at 100 TB).
-        Above ``spark.sidecar.parallelListing.threshold`` immediate
-        subdirectories (default 32 — the JVM's
-        parallelPartitionDiscovery.threshold), the recursive LIST
-        runs as a Spark job (``CacheManager.maybe_list_files_job``)
-        and the result is written to a driver-local JSONL manifest
-        under the cache root; the source's plan stages (which run in
-        worker processes ON THE DRIVER NODE and cannot launch jobs
-        themselves) read it instead of issuing their own serial
-        LIST. Returns ``(manifest_path, files)`` or ``(None, None)``
-        below the threshold / on any trouble — the source's own
-        listing is always correct.
+    def _table_files(self, location: str, listing=None):
+        """The read's one listing: ``CacheManager.list_files`` with
+        this session (so a wide tree lists as a Spark job), with the
+        listing-level options applied once (``listing_filter``:
+        pathGlobFilter on basenames, strict modified windows). Empty
+        for a missing or empty location, a filter that keeps nothing,
+        or a listing that failed: the caller then reads the original
+        location raw, and the JVM gives its own answer."""
+        from sidecar_spark.sources.cached_parquet import (
+            _listing_args,
+            listing_filter,
+        )
 
-        A manifest freezes the listing for the DataFrame's lifetime,
-        exactly like the JVM's InMemoryFileIndex snapshot; manifests
-        older than an hour are pruned opportunistically (a stale or
-        deleted manifest makes the source fall back to listing
-        itself, so pruning is safe)."""
-        if self.cache is None:
-            return None, None
-        thr = _session_conf(self.spark,
-                            "spark.sidecar.parallelListing.threshold",
-                            "32", int)
-        if thr < 0:
-            return None, None  # disabled
-        par = _session_conf(self.spark,
-                            "spark.sidecar.parallelListing.parallelism",
-                            "10000", int)
         try:
-            files = self.cache.maybe_list_files_job(
-                self.spark, location, threshold=thr, parallelism=par)
-        except Exception:  # noqa: BLE001
-            return None, None
-        if files is None:
-            return None, None
+            files = self.cache.list_files(location, spark=self.spark)
+        except Exception:  # noqa: BLE001 — listing trouble: read raw
+            return []
+        return listing_filter(files, *_listing_args(listing or {}))
+
+    def _ship_listing(self, files):
+        """Write the read's listing to a driver-local JSONL manifest
+        under the cache root and return its path, for the source's
+        ``files_manifest`` option: the source's plan stages run in
+        worker processes ON THE DRIVER NODE and read it instead of
+        listing again. The listing is frozen for the DataFrame's
+        lifetime, like the JVM's InMemoryFileIndex. Manifests older
+        than an hour are pruned; a pruned or unwritable manifest
+        (None) makes the source list itself, correct always."""
         import glob
         import json
         import tempfile
@@ -1163,54 +1126,34 @@ class Engine:
                     f.write(json.dumps(
                         {"p": s.path, "l": s.length, "m": s.mtime})
                         + "\n")
-        except Exception:  # noqa: BLE001 — manifest trouble: the
-            return None, None  # source lists itself, correct always
-        return mpath, files
+        except Exception:  # noqa: BLE001
+            return None
+        return mpath
 
-    def _maybe_merged_schema_job(self, location: str, ntz: bool,
+    def _maybe_merged_schema_job(self, files, ntz: bool,
                                  nanos_long: bool,
-                                 case_sensitive: bool, listing=None,
-                                 files=None,
+                                 case_sensitive: bool,
                                  binary_as_string: bool = False):
         """mergeSchema planning at LARGE file counts: the plan worker
         process cannot launch Spark jobs, so its footer fold is a
         16-thread pool — honest to ~10k files (round-7 BASELINE.md).
         The Engine HAS a session, so past a threshold
         (``spark.sidecar.mergeSchema.jobThreshold``, default 1000
-        files) it pre-folds the footers in a SPARK JOB — each task
-        reads its slice of footers against ITS node's mirror and
-        left-folds them in path order; the driver folds the per-slice
-        results in slice order (the merge is associative in name-case
-        pick, decimal widening and column-append order, so the
-        distributed fold equals the sequential one) — and ships the
-        merged StructType to the source as an option (round-7 verdict
-        #2). Costs one extra LIST per planned query above the
-        threshold; saves N-per-worker footer reads. Returns None
-        below the threshold or on any trouble (the source's own fold
-        then applies, correct either way)."""
+        files) it pre-folds the footers of ``files`` (the read's
+        filtered listing, so no excluded file contributes columns) in
+        a SPARK JOB — each task reads its slice of footers against ITS
+        node's mirror and left-folds them in path order; the driver
+        folds the per-slice results in slice order (the merge is
+        associative in name-case pick, decimal widening and
+        column-append order, so the distributed fold equals the
+        sequential one) — and ships the merged StructType to the
+        source as an option (round-7 verdict #2). Returns None below
+        the threshold or on any trouble (the source's own fold then
+        applies, correct either way)."""
         threshold = _session_conf(
             self.spark, "spark.sidecar.mergeSchema.jobThreshold", "1000",
             int)
-        if threshold <= 0:
-            return None
-        try:
-            if files is None:
-                files = self.cache.list_files(location)
-        except Exception:  # noqa: BLE001 — let the source list/fail
-            return None
-        if listing:
-            # fold over the FILTERED listing: mergeSchema combined
-            # with pathGlobFilter/modified windows must not ship a
-            # merged schema carrying columns from excluded files (the
-            # source's own fold — which this job bypasses — filters
-            # via listing_filter too; ADVICE r8 #2)
-            from sidecar_spark.sources.cached_parquet import (
-                _listing_args,
-                listing_filter,
-            )
-
-            files = listing_filter(files, *_listing_args(listing))
-        if len(files) <= threshold:
+        if threshold <= 0 or len(files) <= threshold:
             return None
         items = [(st.path, st.mtime)
                  for st in sorted(files, key=lambda s: s.path)]

@@ -34,9 +34,14 @@ def norm(a) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
+def cosine_of(dot_ab, denom) -> Column:
+    """Cosine from a dot product and its norm product: 0.0 when the
+    product is 0 (a zero vector), the one zero-denominator guard."""
+    return F.when(denom == 0, F.lit(0.0)).otherwise(dot_ab / denom)
+
+
 def cosine(a, b) -> Column:
-    d = norm(a) * norm(b)
-    return F.when(d == 0, F.lit(0.0)).otherwise(dot(a, b) / d)
+    return cosine_of(dot(a, b), norm(a) * norm(b))
 
 
 def as_double(a) -> Column:
@@ -67,9 +72,8 @@ def brute_force_topk(
         F.col(id_col).alias("vec_id"),
         as_double(F.col(vec_col)).alias("v_vec"),
     ).withColumn("v_nrm", norm(F.col("v_vec")))
-    denom = F.col("v_nrm") * F.col("q_nrm")
-    cos = F.when(denom == 0, F.lit(0.0)).otherwise(
-        dot(F.col("q_vec"), F.col("v_vec")) / denom)
+    cos = cosine_of(dot(F.col("q_vec"), F.col("v_vec")),
+                    F.col("v_nrm") * F.col("q_nrm"))
     scored = (
         v.crossJoin(F.broadcast(q))
         .where(F.col("vec_id") != F.col("query_id"))
@@ -142,9 +146,8 @@ def lsh_topk(
         as_double(F.col(vec_col)).alias("q_vec"),
     ).withColumn("bucket", hyperplane_signature(F.col("q_vec"), dim, num_planes)) \
      .withColumn("q_nrm", norm(F.col("q_vec")))
-    denom = F.col("q_nrm") * F.col("v_nrm")
-    cos = F.when(denom == 0, F.lit(0.0)).otherwise(
-        dot(F.col("q_vec"), F.col("v_vec")) / denom)
+    cos = cosine_of(dot(F.col("q_vec"), F.col("v_vec")),
+                    F.col("q_nrm") * F.col("v_nrm"))
     scored = (
         v.join(F.broadcast(q), "bucket")
         .where(F.col("vec_id") != F.col("query_id"))
@@ -225,9 +228,8 @@ def ivf_topk(
         .withColumn("v_nrm", norm(F.col("v_vec")))
     q_probes = _ivf_assign(q, cent, "query_id", "q_vec", nprobe=nprobe) \
         .withColumn("q_nrm", norm(F.col("q_vec")))
-    denom = F.col("q_nrm") * F.col("v_nrm")
-    cos = F.when(denom == 0, F.lit(0.0)).otherwise(
-        dot(F.col("q_vec"), F.col("v_vec")) / denom)
+    cos = cosine_of(dot(F.col("q_vec"), F.col("v_vec")),
+                    F.col("q_nrm") * F.col("v_nrm"))
     scored = (
         v_assigned.join(F.broadcast(q_probes), "list_id")
         .where(F.col("vec_id") != F.col("query_id"))
@@ -286,9 +288,8 @@ def cosine_near_dup_pairs(
         pairs = a.join(
             b, (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col("a.vid") < F.col("b.vid")))
-        denom = F.col("a.nrm") * F.col("b.nrm")
-        cos = F.when(denom == 0, F.lit(0.0)).otherwise(
-            dot(F.col("a.vec"), F.col("b.vec")) / denom)
+        cos = cosine_of(dot(F.col("a.vec"), F.col("b.vec")),
+                        F.col("a.nrm") * F.col("b.nrm"))
         return (
             pairs.select(
                 F.col("a.vid").alias("id_a"),

@@ -1533,9 +1533,8 @@ def knn_classifier_eval(spark, sf_dir):
         F.col("vec_id").alias("rid"), F.col("label").alias("n_label"),
         S.as_double(F.col("embedding")).alias("r_vec")) \
         .withColumn("r_nrm", S.norm(F.col("r_vec")))
-    denom = F.col("q_nrm") * F.col("r_nrm")
-    cos = F.when(denom == 0, F.lit(0.0)).otherwise(
-        S.dot(F.col("q_vec"), F.col("r_vec")) / denom)
+    cos = S.cosine_of(S.dot(F.col("q_vec"), F.col("r_vec")),
+                      F.col("q_nrm") * F.col("r_nrm"))
     nn = (train.crossJoin(F.broadcast(test))
           .withColumn("rk", F.row_number().over(
               W.partitionBy("qid").orderBy(F.desc(cos), F.asc("rid"))))
@@ -1854,9 +1853,9 @@ def hybrid_search_rrf(spark, sf_dir):
         q_acc += float(_x) * float(_x)
     q_nrm = F.lit(math.sqrt(q_acc))
     v_nrm = S.norm(F.col("embedding").cast("array<double>"))
-    denom = v_nrm * q_nrm
-    cos = F.when(denom == 0, F.lit(0.0)).otherwise(
-        S.dot(F.col("embedding").cast("array<double>"), lit_q) / denom)
+    cos = S.cosine_of(
+        S.dot(F.col("embedding").cast("array<double>"), lit_q),
+        v_nrm * q_nrm)
     dense = (emb.where(F.col("vec_id") != 0)
              .select(F.col("vec_id").alias("doc_id"),
                      F.round(cos, 6).alias("cos_sim"))

@@ -1591,10 +1591,10 @@ def parallel_listing_read_agg(spark, sf_dir):
     path (round 10, VERDICT r9 #1): orders written as 40 hive
     partitions x ~40 files each (~1.6k objects). 40 subdirectories
     exceed ``spark.sidecar.parallelListing.threshold`` (32 — the
-    JVM's parallelPartitionDiscovery threshold), so the Engine fans
-    the recursive LIST out as a Spark job
-    (``CacheManager.maybe_list_files_job``) and ships the listing to
-    the plan worker as a manifest; the scan then aggregates across
+    JVM's parallelPartitionDiscovery threshold), so the Engine's
+    ``CacheManager.list_files`` fans the recursive LIST out as a
+    Spark job and ships the listing to the plan worker as a
+    manifest; the scan then aggregates across
     every partition, so a single missing/duplicated file breaks the
     hash match. At 100 TB this is the path that keeps a
     multi-million-object prefix from serializing its LIST on the

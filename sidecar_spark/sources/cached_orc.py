@@ -406,8 +406,8 @@ def _orc_cast_gate(src, dst):
 
 
 class CachedOrcReader(CachedParquetReader):
-    def __init__(self, options, schema=None, files=None):
-        super().__init__(options, schema, files=files)
+    def __init__(self, options, schema=None):
+        super().__init__(options, schema)
         # stripes are not byte-ADDRESSABLE through pyarrow, so the
         # parquet byte-range splitter cannot apply — partitions()
         # splits big files by stripe INDEX ranges instead (one footer
@@ -536,9 +536,6 @@ class CachedOrcSource(CachedParquetSource):
         return True
 
     def reader(self, schema) -> CachedOrcReader:
-        files = getattr(self, "_files_snapshot", None)
-        self._files_snapshot = None  # one-shot: re-plans re-list
         if str(self.options.get("pushdown", "false")).lower() == "true":
-            return PruningCachedOrcReader(self.options, schema,
-                                          files=files)
-        return CachedOrcReader(self.options, schema, files=files)
+            return PruningCachedOrcReader(self.options, schema)
+        return CachedOrcReader(self.options, schema)

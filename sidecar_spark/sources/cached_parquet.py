@@ -835,13 +835,12 @@ def listing_filter(files, glob: str = "", mod_before=None,
 
 
 def load_manifest(manifest):
-    """Files pre-listed by the Engine's distributed listing job
-    (``Engine._maybe_listing_manifest`` — the
-    parallelPartitionDiscovery analog, VERDICT r9 #1): a driver-local
-    JSONL file, readable here because the Python DataSource's plan
-    stages run in worker processes ON the driver node. None when the
-    option is absent or the file is gone/unreadable (pruned manifest,
-    foreign node) — the caller lists itself, correct always."""
+    """The read's listing as shipped by the Engine
+    (``Engine._ship_listing``): a driver-local JSONL file, readable
+    here because the Python DataSource's plan stages run in worker
+    processes ON the driver node. None when the option is absent or
+    the file is gone/unreadable (pruned manifest, foreign node) — the
+    caller lists itself, correct always."""
     if not manifest:
         return None
     try:
@@ -860,6 +859,17 @@ def load_manifest(manifest):
         return out
     except Exception:  # noqa: BLE001
         return None
+
+
+def table_files(mgr, options):
+    """A source's listing of its table: the Engine's shipped manifest
+    (already filtered by the listing-level options), else one
+    ``CacheManager.list_files`` with those options applied here."""
+    files = load_manifest(options.get("files_manifest"))
+    if files is None:
+        files = listing_filter(mgr.list_files(options.get("path")),
+                               *_listing_args(options))
+    return files
 
 
 def _listing_args(options):
@@ -1726,21 +1736,12 @@ def _filter_matches(raw: str, op: str, ref) -> bool:
 
 
 class CachedParquetReader(DataSourceReader):
-    def __init__(self, options, schema=None, files=None):
+    def __init__(self, options, schema=None):
         path = options.get("path")
         if not path:
             raise ValueError("sidecar_cached_parquet requires option 'path'")
         self.path = path
-        #: one-shot listing snapshot handed down from schema() — the
-        #: FIRST partitions() call consumes it (one object-store LIST
-        #: per planned query instead of two, and schema + partitions
-        #: see the same snapshot); re-executions re-list fresh so a
-        #: mutated table is never served from a stale listing
-        self._files_once = files
-        #: Engine-written distributed-listing manifest (plan-worker
-        #: fallback when no snapshot was handed down — e.g. a
-        #: re-plan after the one-shot snapshot was consumed)
-        self.manifest = options.get("files_manifest")
+        self.options = options  # table_files reads the listing here
         self.conf_json = options.get("conf")
         if not self.conf_json:
             raise ValueError("sidecar_cached_parquet requires option 'conf'")
@@ -1780,10 +1781,6 @@ class CachedParquetReader(DataSourceReader):
         #: set from the "rfl" option by the raw-file readers
         self.flatten = (str(options.get("rfl") or "false").lower()
                         == "true")
-        #: listing-level options (round-8): basename glob + strict
-        #: mtime windows, shipped pre-parsed by the Engine
-        self.glob, self.mod_before, self.mod_after = _listing_args(
-            options)
         #: small-file bin-packing knobs (round-9): the JVM scan packs
         #: whole files into FilePartitions by exactly these two
         try:
@@ -1812,16 +1809,11 @@ class CachedParquetReader(DataSourceReader):
         # down here would pay FileMirror._rebuild + adopt_disk (two
         # full cache-root walks) per query planned
         mgr = CacheManager.get_or_create(self._conf())
-        files, self._files_once = self._files_once, None
-        if files is None:
-            files = load_manifest(self.manifest)
-        if files is None:
-            files = mgr.list_files(self.path)
-        # listing-level exclusions (pathGlobFilter basename match,
-        # binaryFile's empty-file drop, provable length-filter prunes)
-        # happen BEFORE the veto math: excluded files are never read,
-        # so they must not count toward the mirror-floor check either
-        files = self._filter_files(files)
+        # format-specific exclusions (binaryFile's empty-file drop,
+        # provable length-filter prunes) happen BEFORE the veto math:
+        # excluded files are never read, so they must not count
+        # toward the mirror-floor check either
+        files = self._filter_files(table_files(mgr, self.options))
         # the same veto as resolve_for_spark (CacheManager.admit): a
         # table bigger than the mirror floor is not FILLED on any node
         # (existing hits still serve locally in read()); the
@@ -1882,13 +1874,11 @@ class CachedParquetReader(DataSourceReader):
         return out
 
     def _filter_files(self, files):
-        """Listing-level file exclusions, applied before veto math and
-        partition planning: pathGlobFilter + modifiedBefore/After
-        (probed semantics, ``listing_filter``). The raw-file readers
-        (cached_rawfile.py) extend this (empty-file drop, provable
-        length prunes)."""
-        return listing_filter(files, self.glob, self.mod_before,
-                              self.mod_after)
+        """Format-specific file drops, applied to the table's listing
+        before veto math and partition planning; none for parquet/ORC.
+        The raw-file readers (cached_rawfile.py) drop empty files and
+        provable length prunes here."""
+        return files
 
     def _splittable(self, st) -> bool:
         """May this file be byte-range split? Parquet/ORC: always
@@ -2082,27 +2072,20 @@ class CachedParquetSource(DataSource):
         conf = SidecarConfig.from_json(self.options["conf"])
         # keep-alive singleton (no release) — see partitions()
         mgr = CacheManager.get_or_create(conf)
-        files = load_manifest(self.options.get("files_manifest"))
-        if files is None:
-            files = mgr.list_files(path)
-        if not files:
-            raise FileNotFoundError(f"no data files under {path!r}")
         # deterministic footer pick: FIRST file by path, matching the
         # JVM scan's choice under schema evolution (a listing in OS
         # order sampled a different file and diverged the schema).
-        # Listing-level options apply FIRST — the JVM's footer pick,
-        # mergeSchema fold and partition shapes all see the filtered
-        # file set (round-8: pathGlobFilter, modifiedBefore/After)
-        files = sorted(listing_filter(files, *_listing_args(
-            self.options)), key=lambda s: s.path)
+        # The listing is already filtered by the listing-level options
+        # (round-8: pathGlobFilter, modifiedBefore/After), so the
+        # footer pick, mergeSchema fold and partition shapes all see
+        # the filtered file set, as in the JVM
+        files = sorted(table_files(mgr, self.options),
+                       key=lambda s: s.path)
         if not files:
             raise FileNotFoundError(
-                f"no data files under {path!r} after pathGlobFilter/"
-                "modifiedBefore/modifiedAfter — the JVM scan cannot "
+                f"no data files under {path!r} (after any pathGlobFilter"
+                "/modifiedBefore/modifiedAfter) — the JVM scan cannot "
                 "infer a schema from an empty listing either")
-        # hand the listing down to the reader: one object-store LIST
-        # per planned query, and schema/partitions share a snapshot
-        self._files_snapshot = files
         user_json = self.options.get("user_schema")
         if user_json:
             # explicit USER schema: no footer inference at all — the
@@ -2361,12 +2344,9 @@ class CachedParquetSource(DataSource):
         # hard-rejects while spark.sql.python.filterPushdown.enabled
         # is false — the Engine ships the session conf's query-time
         # value as the "pushdown" option
-        files = getattr(self, "_files_snapshot", None)
-        self._files_snapshot = None  # one-shot: re-plans re-list
         if str(self.options.get("pushdown", "false")).lower() == "true":
-            return PruningCachedParquetReader(self.options, schema,
-                                              files=files)
-        return CachedParquetReader(self.options, schema, files=files)
+            return PruningCachedParquetReader(self.options, schema)
+        return CachedParquetReader(self.options, schema)
 
 
 def _ddl_type(ddl: str):

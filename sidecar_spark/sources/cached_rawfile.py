@@ -315,20 +315,6 @@ def render_path(p: str) -> str:
     return "file:" + p
 
 
-def filter_stats(files, glob: str = "", drop_empty: bool = False,
-                 mod_before=None, mod_after=None):
-    """Listing-level exclusions shared by schema() and partitions():
-    pathGlobFilter on basenames + strict mtime windows
-    (cached_parquet.listing_filter), and the JVM's
-    no-row-for-empty-files behavior for binaryFile/wholetext."""
-    from sidecar_spark.sources.cached_parquet import listing_filter
-
-    files = listing_filter(files, glob, mod_before, mod_after)
-    if not drop_empty:
-        return files
-    return [st for st in files if st.length]
-
-
 def _line_spans(read_chunk, start: int, end: int, sep,
                 discard=None):
     """Yield line byte-strings for the split [start, end) under the
@@ -701,8 +687,8 @@ class CachedTextReader(CachedParquetReader):
     """Executor-mode cached ``text``: node-local resolve + Hadoop
     line framing (module docstring for the probed semantics)."""
 
-    def __init__(self, options, schema=None, files=None):
-        super().__init__(options, schema, files)
+    def __init__(self, options, schema=None):
+        super().__init__(options, schema)
         self.wholetext = (str(options.get("wholetext") or "false")
                           .lower() == "true")
         #: non-UTF8 charset transcode (round 10, probed — set by the
@@ -763,7 +749,6 @@ class CachedTextReader(CachedParquetReader):
             self.split_bytes = 0
 
     def _filter_files(self, files):
-        files = super()._filter_files(files)  # glob + mtime windows
         if self.wholetext:
             # PHYSICAL length drives the drop (probed: a gz of empty
             # payload — 26 bytes on disk — still yields one row, with
@@ -946,8 +931,8 @@ class CachedBinaryFileReader(CachedParquetReader):
     probed semantics). Not splittable; empty files yield no row; a
     projection without ``content`` never opens the file."""
 
-    def __init__(self, options, schema=None, files=None):
-        super().__init__(options, schema, files)
+    def __init__(self, options, schema=None):
+        super().__init__(options, schema)
         try:
             self.max_length = int(options.get("maxlength")
                                   or _MAX_INT)
@@ -956,7 +941,6 @@ class CachedBinaryFileReader(CachedParquetReader):
         self.split_bytes = 0  # one task per file, like the JVM
 
     def _filter_files(self, files):
-        files = super()._filter_files(files)  # glob + mtime windows
         files = [st for st in files if st.length]  # empty: no row
         # provable length-filter prunes: the 100 TB win is skipping
         # whole files at plan time (Spark re-applies every filter as
@@ -1084,7 +1068,7 @@ class _RawSchemaMixin:
     """schema() for fixed-schema raw-file sources: no footers — the
     fixed fields plus hive partition columns discovered exactly like
     the parquet source (same layout_specs/infer ladder), with the
-    same one-listing-per-planned-query economy."""
+    same listing (``table_files``)."""
 
     _FIXED = ()       # ((name, spark_type_factory), ...)
     _DROP_EMPTY = False
@@ -1112,24 +1096,15 @@ class _RawSchemaMixin:
         path = self.options.get("path")
         conf = SidecarConfig.from_json(self.options["conf"])
         mgr = CacheManager.get_or_create(conf)
-        from sidecar_spark.sources.cached_parquet import (
-            _listing_args,
-            load_manifest,
-        )
+        from sidecar_spark.sources.cached_parquet import table_files
 
-        files = load_manifest(self.options.get("files_manifest"))
-        if files is None:
-            files = mgr.list_files(path)
-        files = sorted(files, key=lambda s: s.path)
-        glob, mb, ma = _listing_args(self.options)
-        kept = filter_stats(files, glob=glob,
-                            drop_empty=self._DROP_EMPTY,
-                            mod_before=mb, mod_after=ma)
+        files = sorted(table_files(mgr, self.options),
+                       key=lambda s: s.path)
         if not files:
             raise FileNotFoundError(f"no data files under {path!r}")
-        # partitions() re-filters (readers own the rule); hand down
-        # the UNfiltered snapshot so both see one listing
-        self._files_snapshot = files
+        # the JVM's no-row-for-empty-files rule (binaryFile/wholetext)
+        kept = ([st for st in files if st.length] if self._DROP_EMPTY
+                else files)
         base = StructType(self._fixed_fields())
         flatten = (str(self.options.get("rfl") or "false").lower()
                    == "true")
@@ -1204,12 +1179,9 @@ class CachedTextSource(_RawSchemaMixin, CachedParquetSource):
                 == "true")
 
     def reader(self, schema):
-        files = getattr(self, "_files_snapshot", None)
-        self._files_snapshot = None
         if str(self.options.get("pushdown", "false")).lower() == "true":
-            return PruningCachedTextReader(self.options, schema,
-                                           files=files)
-        return CachedTextReader(self.options, schema, files=files)
+            return PruningCachedTextReader(self.options, schema)
+        return CachedTextReader(self.options, schema)
 
 
 class CachedBinaryFileSource(_RawSchemaMixin, CachedParquetSource):
@@ -1238,10 +1210,6 @@ class CachedBinaryFileSource(_RawSchemaMixin, CachedParquetSource):
                 ("content", BinaryType))
 
     def reader(self, schema):
-        files = getattr(self, "_files_snapshot", None)
-        self._files_snapshot = None
         if str(self.options.get("pushdown", "false")).lower() == "true":
-            return PruningCachedBinaryFileReader(self.options, schema,
-                                                 files=files)
-        return CachedBinaryFileReader(self.options, schema,
-                                      files=files)
+            return PruningCachedBinaryFileReader(self.options, schema)
+        return CachedBinaryFileReader(self.options, schema)

@@ -2132,10 +2132,11 @@ class TestRound5AdviceFixes:
 class TestListFilesMutationRace:
     def test_stat_to_list_race_self_heals(self, cache_dir, remote_dir,
                                           monkeypatch):
-        """A path that is ABSENT at stat time but reappears as a FILE
-        before the list runs (delete+recreate cycling remote) must
-        resolve to that file, not raise NotADirectoryError — caught
-        live by the warm+evict soak."""
+        """A path that is ABSENT at list time but reappears as a FILE
+        before the stat runs (delete+recreate cycling remote) must
+        resolve to that file, not to an empty table — the race first
+        caught live by the warm+evict soak, in list_files' order of
+        requests (LIST first, stat only on an empty listing)."""
         p = os.path.join(remote_dir, "f0.parquet")
         with open(p, "wb") as f:
             f.write(b"x" * 128)
@@ -2144,16 +2145,16 @@ class TestListFilesMutationRace:
                                     cache_persistent=False)
         mgr = CacheManager(conf)
         try:
-            real_stat = RemoteFS.stat
+            real_list = RemoteFS.list
             state = {"first": True}
 
-            def flaky_stat(self, path):
+            def flaky_list(self, path, recursive=True):
                 if state["first"]:
                     state["first"] = False
-                    return None  # the mid-recreate window
-                return real_stat(self, path)
+                    return []  # the mid-recreate window
+                return real_list(self, path, recursive)
 
-            monkeypatch.setattr(RemoteFS, "stat", flaky_stat)
+            monkeypatch.setattr(RemoteFS, "list", flaky_list)
             out = mgr.list_files(p)
             assert len(out) == 1 and out[0].path == p
             # and resolve_for_spark over the same window stays whole

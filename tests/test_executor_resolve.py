@@ -977,12 +977,14 @@ class TestHintDetectorSingletonKey:
 
 
 class TestSingleListingPerPlan:
-    """Round-6 metadata-path economy: schema() hands its listing down
-    to the reader, so planning one executor-mode query costs ONE
-    object-store LIST, not two — and a re-execution re-lists fresh
-    (never a stale snapshot for a mutated table)."""
+    """Metadata-path economy: a read lists its table once
+    (``CacheManager.list_files``), and in executor mode the Engine
+    ships that listing to the source, so schema() and partitions()
+    make no request of their own."""
 
     def test_one_list_request_per_planned_query(self, spark, cache_dir):
+        """A warm read of a flat 4-object s3:// table costs exactly one
+        LIST and no HEAD, in both resolve modes."""
         import io
 
         from sidecar_spark import Engine
@@ -995,37 +997,26 @@ class TestSingleListingPerPlan:
             os.environ["SIDECAR_S3_ENDPOINT"] = srv.endpoint
             try:
                 fs, _ = RemoteFS.from_uri("s3://lake")
-                buf = io.BytesIO()
-                pq.write_table(pa.table({"a": [1, 2, 3]}), buf)
-                fs.write_all("s3://lake/one.parquet/part-0.parquet",
-                             buf.getvalue())
-                eng = Engine(spark, conf=_conf(cache_dir))
-                try:
-                    srv.store.clear_requests()
-                    assert eng.read_parquet("s3://lake/one.parquet") \
-                        .count() == 3
-                    # one full RECURSIVE list for the plan
-                    # (schema+partitions share the snapshot — the
-                    # pre-round-6 path listed twice); the max-keys=1
-                    # request alongside is list_files' own stat
-                    # probe, and the delimiter-scoped request is the
-                    # round-10 distributed-listing shallow probe
-                    # (O(immediate children), one page — not a tree
-                    # walk)
-                    full_lists = [r for r in srv.store.requests
-                                  if r[0] == "GET"
-                                  and "list-type" in r[1]
-                                  and "max-keys=1&" not in r[1]
-                                  and "delimiter=" not in r[1]]
-                    assert len(full_lists) == 1, srv.store.requests
-                    shallow = [r for r in srv.store.requests
-                               if r[0] == "GET"
-                               and "delimiter=" in r[1]
-                               and "max-keys=1&" not in r[1]]
-                    assert len(shallow) <= 1, srv.store.requests
-                finally:
-                    eng.close()
-                    CacheManager.clear_instances()
+                for i in range(4):
+                    buf = io.BytesIO()
+                    pq.write_table(pa.table({"a": [i, i + 10]}), buf)
+                    fs.write_all(f"s3://lake/t.parquet/part-{i}.parquet",
+                                 buf.getvalue())
+                for mode in ("driver", "executor"):
+                    eng = Engine(spark, conf=_conf(
+                        os.path.join(cache_dir, mode), resolve_mode=mode))
+                    try:
+                        loc = "s3://lake/t.parquet"
+                        assert eng.read_parquet(loc).count() == 8  # cold
+                        srv.store.clear_requests()
+                        assert eng.read_parquet(loc).count() == 8
+                        reqs = list(srv.store.requests)
+                        assert len(reqs) == 1, (mode, reqs)
+                        assert reqs[0][0] == "GET" \
+                            and "list-type" in reqs[0][1], (mode, reqs)
+                    finally:
+                        eng.close()
+                        CacheManager.clear_instances()
             finally:
                 os.environ.pop("SIDECAR_S3_ENDPOINT", None)
 

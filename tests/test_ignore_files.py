@@ -207,8 +207,10 @@ class TestIgnoreMissing:
         assert got.count() == 3  # the head file's rows only
 
     def test_reader_scan_skip_unit(self, spark, cache_dir, tmp_path):
-        # drive the reader directly with a listing snapshot naming a
+        # drive the reader directly with a shipped listing naming a
         # ghost file: the SCAN-level skip (not a listing refresh)
+        import json
+
         import pyarrow as pa
 
         from sidecar_spark.cache.fs import FileStat
@@ -231,13 +233,16 @@ class TestIgnoreMissing:
             cache_dir=str(tmp_path / "cache"),
             data_cache_type="file", cache_persistent=False,
             resolve_mode="executor")
+        manifest = tmp_path / "listing.jsonl"
+        manifest.write_text("".join(
+            json.dumps({"p": f.path, "l": f.length, "m": f.mtime})
+            + "\n" for f in files))
         base = {"path": d, "conf": conf.to_json(),
-                "split_bytes": "0"}
+                "split_bytes": "0", "files_manifest": str(manifest)}
         for flags, expect_rows, expect_err in (
                 ({"ignore_missing": "true"}, 2, False),
                 ({}, None, True)):
-            rdr = CachedParquetReader({**base, **flags}, None,
-                                      files=list(files))
+            rdr = CachedParquetReader({**base, **flags}, None)
             parts = rdr.partitions()
             if expect_err:
                 with pytest.raises(Exception):

@@ -1,10 +1,13 @@
-"""Distributed file listing (round 10, VERDICT r9 #1).
+"""Distributed file listing and the hidden-path rule.
 
-``CacheManager.maybe_list_files_job`` is the
-``spark.sql.sources.parallelPartitionDiscovery`` analog: above a
-subdirectory-count threshold the recursive LIST fans out as a Spark
-job; the Engine ships the result to the plan worker as a driver-local
-JSONL manifest (``files_manifest`` option → ``load_manifest``).
+``CacheManager.list_files(uri, spark=...)`` is the one listing of a
+table. Above ``spark.sidecar.parallelListing.threshold`` visible
+subdirectories it lists the tree as a Spark job — the
+``spark.sql.sources.parallelPartitionDiscovery`` analog. In executor
+mode the Engine always ships its listing to the plan worker as a
+driver-local JSONL manifest (``files_manifest`` option →
+``load_manifest``). Every listing hides names the way Spark's
+``HadoopFSUtils.shouldFilterOutPathName`` does.
 
 Also covers the S3 stub's round-10 ListObjectsV2 pagination (LISTs
 truncate at max-keys with NextContinuationToken, like real S3) —
@@ -12,23 +15,40 @@ without it a 100k-object prefix listed in one response and the
 serial-vs-distributed comparison measured nothing.
 """
 
+import glob
 import json
 import os
-import tempfile
+import shutil
+import uuid
 
 import pytest
 
+THRESHOLD = "spark.sidecar.parallelListing.threshold"
 
-def _conf(cache_dir):
+
+def _conf(cache_dir, resolve_mode="executor"):
     from sidecar_spark.config import SidecarConfig
 
     return SidecarConfig.create(
         cache_dir=cache_dir, data_cache_type="file",
-        cache_persistent=False, resolve_mode="executor")
+        cache_persistent=False, resolve_mode=resolve_mode)
 
 
 def _key(s):
     return (s.path, s.length, s.mtime)
+
+
+def _with_jobs(spark, fn):
+    """``(fn(), ids of the Spark jobs fn ran)``, told apart from other
+    jobs by a job group the statusTracker reports on."""
+    sc = spark.sparkContext
+    group = f"listing-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "listing probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
 @pytest.fixture()
@@ -46,6 +66,8 @@ def deep_tree(tmp_path):
     (root / "nest").mkdir()  # a non-hive 42nd dir, nested two deep
     (root / "nest" / "deep").mkdir()
     (root / "nest" / "deep" / "leaf.bin").write_bytes(b"xyz")
+    (root / "_temporary" / "0").mkdir(parents=True)  # hidden dir
+    (root / "_temporary" / "0" / "stale.bin").write_bytes(b"s")
     (root / "root_file.bin").write_bytes(b"r")
     (root / "_SUCCESS").write_bytes(b"")
     return str(root)
@@ -58,35 +80,40 @@ class TestManagerJob:
         mgr = CacheManager.get_or_create(_conf(cache_dir))
         try:
             serial = sorted(map(_key, mgr.list_files(deep_tree)))
-            job = mgr.maybe_list_files_job(spark, deep_tree,
-                                           threshold=32)
-            assert job is not None
+            assert len(serial) == 41 * 3 + 2
+            job, jobs = _with_jobs(
+                spark, lambda: mgr.list_files(deep_tree, spark=spark))
+            assert len(jobs) == 1
             assert sorted(map(_key, job)) == serial
             # suffix filter applies identically
             s2 = sorted(map(_key, mgr.list_files(deep_tree,
-                                                 suffix=".bin")))
-            j2 = mgr.maybe_list_files_job(spark, deep_tree,
-                                          suffix=".bin", threshold=32)
-            assert sorted(map(_key, j2)) == s2
+                                                 suffix="1.bin")))
+            j2 = mgr.list_files(deep_tree, suffix="1.bin", spark=spark)
+            assert sorted(map(_key, j2)) == s2 and len(s2) == 41
         finally:
             mgr.release()
             CacheManager.clear_instances()
 
-    def test_below_threshold_and_disabled_return_none(
+    def test_below_threshold_disabled_and_file_run_no_job(
             self, spark, cache_dir, deep_tree):
         from sidecar_spark.cache.manager import CacheManager
 
         mgr = CacheManager.get_or_create(_conf(cache_dir))
+        serial = sorted(map(_key, mgr.list_files(deep_tree)))
+        one = os.path.join(deep_tree, "root_file.bin")
         try:
-            assert mgr.maybe_list_files_job(
-                spark, deep_tree, threshold=100) is None
-            assert mgr.maybe_list_files_job(
-                spark, deep_tree, threshold=-1) is None
-            # a FILE path is the serial path's fast case
-            one = os.path.join(deep_tree, "root_file.bin")
-            assert mgr.maybe_list_files_job(
-                spark, one, threshold=0) is None
+            for thr, path, want in (("100", deep_tree, serial),
+                                    ("-1", deep_tree, serial),
+                                    # a FILE path is listed as itself
+                                    ("0", one, [_key(mgr.list_files(
+                                        one)[0])])):
+                spark.conf.set(THRESHOLD, thr)
+                got, jobs = _with_jobs(
+                    spark, lambda: mgr.list_files(path, spark=spark))
+                assert jobs == [], (thr, path)
+                assert sorted(map(_key, got)) == want, (thr, path)
         finally:
+            spark.conf.unset(THRESHOLD)
             mgr.release()
             CacheManager.clear_instances()
 
@@ -111,19 +138,71 @@ class TestManagerJob:
                     serial = sorted(map(_key,
                                         mgr.list_files("s3://pl/t")))
                     assert len(serial) == 1200
-                    job = mgr.maybe_list_files_job(
-                        spark, "s3://pl/t", threshold=32)
-                    assert job is not None
-                    assert sorted(map(_key, job)) == serial
                     # pagination actually engaged: >1 page of keys
                     lists = [p for m, p in st.requests
                              if m == "GET" and "prefix=" in p]
-                    assert len(lists) >= 2
+                    assert len(lists) >= 3  # shallow + 2 pages
+                    job, jobs = _with_jobs(spark, lambda: mgr.list_files(
+                        "s3://pl/t", spark=spark))
+                    assert len(jobs) == 1
+                    assert sorted(map(_key, job)) == serial
                 finally:
                     mgr.release()
                     CacheManager.clear_instances()
             finally:
                 os.environ.pop("SIDECAR_S3_ENDPOINT", None)
+
+
+class TestHiddenPaths:
+    def test_rule_matches_spark_names(self):
+        from sidecar_spark.cache.manager import _hidden
+
+        for rel, hidden in (
+                ("part-0.parquet", False),
+                ("k=1/part-0.parquet", False),
+                ("_k=1/part-0.parquet", False),  # "=": a partition dir
+                ("_SUCCESS", True),
+                (".part-0.parquet.crc", True),
+                ("part-9.parquet._COPYING_", True),
+                ("_temporary/0/part-0.parquet", True),
+                ("k=1/.hive-staging/part-0.parquet", True),
+                ("_metadata", True),  # a leaf: not data
+                ("_common_metadata", True),
+                ("_metadata/part-0.parquet", False)):  # descended
+            assert _hidden("/t", "/t/" + rel) is hidden, rel
+
+    def test_stray_files_match_spark_read(self, spark, cache_dir,
+                                          tmp_path):
+        """A Spark-written table plus a stale task-attempt copy of its
+        part file under ``_temporary/0/`` and an in-flight
+        ``._COPYING_`` upload: Spark's listing hides both, so every
+        Engine read must return Spark's rows, and the driver-mode
+        resolve must fill only the real data file."""
+        from sidecar_spark import Engine
+        from sidecar_spark.cache.manager import CacheManager
+
+        root = str(tmp_path / "t")
+        (spark.range(0, 100).selectExpr("id", "id * 2 AS v")
+         .coalesce(1).write.parquet(root))
+        part = glob.glob(os.path.join(root, "part-*.parquet"))[0]
+        os.makedirs(os.path.join(root, "_temporary", "0"))
+        shutil.copy(part, os.path.join(root, "_temporary", "0",
+                                       "part-stale.parquet"))
+        shutil.copy(part, os.path.join(root, "part-9.parquet._COPYING_"))
+        want = sorted(map(tuple, spark.read.parquet(root).collect()))
+        assert len(want) == 100
+        for mode in ("driver", "executor"):
+            eng = Engine(spark, conf=_conf(os.path.join(cache_dir, mode),
+                                           resolve_mode=mode))
+            try:
+                got = sorted(map(tuple, eng.read_parquet(root).collect()))
+                assert got == want, mode
+            finally:
+                eng.close()
+                CacheManager.clear_instances()
+        mirrored = os.listdir(os.path.join(cache_dir, "driver", "mirror"))
+        assert [n.split("-", 1)[1] for n in mirrored] == [
+            os.path.basename(part)]
 
 
 class TestManifestChannel:
@@ -170,8 +249,6 @@ class TestManifestChannel:
             self, spark, cache_dir, tmp_path):
         """Manifest pruned/unreadable → the source lists itself; the
         read stays correct (the safety property pruning relies on)."""
-        import shutil
-
         from sidecar_spark import Engine
 
         root = str(tmp_path / "t")
@@ -190,6 +267,8 @@ class TestManifestChannel:
 
     def test_threshold_conf_disables(self, spark, cache_dir,
                                      tmp_path):
+        """Threshold -1: the 41-partition read lists without a Spark
+        job; by default the same read runs exactly one."""
         from sidecar_spark import Engine
 
         root = str(tmp_path / "t")
@@ -197,14 +276,15 @@ class TestManifestChannel:
          .selectExpr("id", "id % 41 AS k")
          .coalesce(1)
          .write.partitionBy("k").mode("overwrite").parquet(root))
-        spark.conf.set("spark.sidecar.parallelListing.threshold",
-                       "-1")
+        eng = Engine(spark, conf=_conf(cache_dir))
+        _, jobs = _with_jobs(spark,
+                             lambda: eng.read_format(root, "parquet"))
+        assert len(jobs) == 1
+        spark.conf.set(THRESHOLD, "-1")
         try:
-            eng = Engine(spark, conf=_conf(cache_dir))
-            got = eng.read_format(root, "parquet")
+            got, jobs = _with_jobs(
+                spark, lambda: eng.read_format(root, "parquet"))
+            assert jobs == []
             assert got.count() == 410
-            mdir = os.path.join(cache_dir, ".listing_manifests")
-            assert (not os.path.isdir(mdir)
-                    or not os.listdir(mdir))
         finally:
-            spark.conf.unset("spark.sidecar.parallelListing.threshold")
+            spark.conf.unset(THRESHOLD)

@@ -96,7 +96,6 @@ class TestConfig:
         # SidecarConfig.java:121-155 defaults
         assert c.data_page_size == 1024 * 1024
         assert c.io_buffer_size == 4 * 1024 * 1024
-        assert c.io_pool_size == 32
         assert c.thread_pool_size == 8
         assert c.scan_detector_threshold == 10
         assert c.minsize_threshold == 100 * 1024 * 1024
@@ -115,6 +114,15 @@ class TestConfig:
         assert c.data_page_size == 65536
         assert c.write_cache_mode == WriteCacheMode.ASYNC_CLOSE
         assert c.scan_detector_enabled is True
+
+    def test_ignored_reference_keys_load(self):
+        # reference keys with no subject here are accepted, not stored
+        for key, value in (("sidecar.io.pool.size", "32"),
+                           ("sidecar.jmx.metrics.enabled", "true"),
+                           ("sidecar.jmx.metrics.domain.name", "SidecarFS"),
+                           ("spark.sidecar.test.mode", "false"),
+                           ("sidecar.install.shutdown.hook", "true")):
+            assert SidecarConfig.from_mapping({key: value}) == SidecarConfig()
 
     def test_unknown_key_raises(self):
         with pytest.raises(KeyError):

@@ -3,14 +3,14 @@
 Measures wall time to produce the full leaf-file listing of a
 many-directory tree four ways:
 
-* ``serial``  — ``CacheManager.list_files`` (one recursive LIST,
-  driver-side; the pre-round-10 path);
+* ``serial``  — ``CacheManager.list_files`` without a session (one
+  shallow plus one recursive LIST, driver-side);
 * ``threads`` — driver-side 16-thread pool over per-subdir recursive
   LISTs (the mergeSchema plan-worker shape — measured here to justify
   choosing a Spark job over a bigger thread pool);
-* ``job``     — ``CacheManager.maybe_list_files_job`` (the
-  parallelPartitionDiscovery analog: shallow root LIST + one Spark
-  job over the subdirectories);
+* ``job``     — ``CacheManager.list_files`` with a session and the
+  threshold at 0 (the parallelPartitionDiscovery analog: shallow
+  root LIST + one Spark job over the subdirectories);
 * ``jvm``     — Spark's own InMemoryFileIndex listing of the same
   tree (``spark.read.format("binaryFile")`` load + inputFiles, which
   forces the file index; schema is fixed so planning IS listing).
@@ -87,9 +87,13 @@ def t_threads(mgr, root, workers=16):
 
 
 def t_job(mgr, spark, root):
-    t0 = time.perf_counter()
-    files = mgr.maybe_list_files_job(spark, root, threshold=0)
-    return time.perf_counter() - t0, len(files or [])
+    spark.conf.set("spark.sidecar.parallelListing.threshold", "0")
+    try:
+        t0 = time.perf_counter()
+        n = len(mgr.list_files(root, spark=spark))
+        return time.perf_counter() - t0, n
+    finally:
+        spark.conf.unset("spark.sidecar.parallelListing.threshold")
 
 
 def t_jvm(spark, root):
