@@ -197,7 +197,6 @@ class WriteCache:
         self.file_list.put(caching_path, length)
         with self._size_lock:
             self._size += length - (prev or 0)
-        self.stats.add("total_bytes_read", 0)  # touch-free; counters live in stats
 
     def put_file(self, remote_uri: str, data: bytes, synced: bool = True) -> str:
         """Convenience: mirror a whole file from bytes in memory."""

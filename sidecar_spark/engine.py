@@ -32,6 +32,10 @@ TPCH_TABLES = (
 _PATH_SEMANTIC_OPTS = {"basepath", "pathglobfilter",
                        "modifiedbefore", "modifiedafter"}
 
+#: an executor-mode mergeSchema read of more files than this folds its
+#: footers in a Spark job (``Engine._maybe_merged_schema_job``)
+MERGE_SCHEMA_JOB_THRESHOLD = 1000
+
 
 def _session_conf(spark, key: str, default: Optional[str], parse=None):
     """``spark.conf.get(key, default)``, passed through ``parse`` when
@@ -1043,17 +1047,12 @@ class Engine:
                 _orc_arrow_target,
                 _orc_cast_gate,
             )
+            from sidecar_spark.sources.cached_parquet import open_footer
 
             st = min(files, key=lambda s: s.path)
-            fs, path = self.cache._resolve(st.path)  # noqa: SLF001
-            local = (self.cache.mirror.lookup(path, st.mtime)
-                     if self.cache.mirror is not None else None)
-            if local is not None:
-                fschema = po.ORCFile(local).schema
-            else:
-                with fs.open_read(path) as f:
-                    fschema = po.ORCFile(f).schema
-            target = _orc_arrow_target(fschema)
+            target = _orc_arrow_target(open_footer(
+                self.cache, st.path, st.mtime,
+                lambda src: po.ORCFile(src).schema))
             cs = _session_conf(self.spark, "spark.sql.caseSensitive",
                                "false").lower() == "true"
             by_key = {(f.name if cs else f.name.lower()): f
@@ -1137,12 +1136,12 @@ class Engine:
         """mergeSchema planning at LARGE file counts: the plan worker
         process cannot launch Spark jobs, so its footer fold is a
         16-thread pool — honest to ~10k files (round-7 BASELINE.md).
-        The Engine HAS a session, so past a threshold
-        (``spark.sidecar.mergeSchema.jobThreshold``, default 1000
-        files) it pre-folds the footers of ``files`` (the read's
-        filtered listing, so no excluded file contributes columns) in
-        a SPARK JOB — each task reads its slice of footers against ITS
-        node's mirror and left-folds them in path order; the driver
+        The Engine HAS a session, so past
+        ``MERGE_SCHEMA_JOB_THRESHOLD`` files it pre-folds the footers
+        of ``files`` (the read's filtered listing, so no excluded file
+        contributes columns) in a SPARK JOB — each task reads its
+        slice of footers against ITS node's mirror and left-folds them
+        in path order (``merge_structs``); the driver
         folds the per-slice results in slice order (the merge is
         associative in name-case pick, decimal widening and
         column-append order, so the distributed fold equals the
@@ -1150,10 +1149,7 @@ class Engine:
         source as an option (round-7 verdict #2). Returns None below
         the threshold or on any trouble (the source's own fold then
         applies, correct either way)."""
-        threshold = _session_conf(
-            self.spark, "spark.sidecar.mergeSchema.jobThreshold", "1000",
-            int)
-        if threshold <= 0 or len(files) <= threshold:
+        if len(files) <= MERGE_SCHEMA_JOB_THRESHOLD:
             return None
         items = [(st.path, st.mtime)
                  for st in sorted(files, key=lambda s: s.path)]
@@ -1163,39 +1159,30 @@ class Engine:
 
         def fold(mgr, pairs):
             from sidecar_spark.sources.cached_parquet import (
-                _merge_struct_types,
                 footer_spark_struct,
+                merge_structs,
             )
 
             for idx, chunk in pairs:
-                acc = None
-                for p, mt in chunk:
-                    s = footer_spark_struct(
+                yield idx, merge_structs(
+                    (footer_spark_struct(
                         mgr, p, mt, ntz, nanos_long,
                         binary_as_string=binary_as_string)
-                    acc = (s if acc is None
-                           else _merge_struct_types(acc, s,
-                                                    case_sensitive))
-                yield idx, acc.json()
+                     for p, mt in chunk), case_sensitive).json()
+
+        import json
 
         from pyspark.sql.types import StructType
 
-        from sidecar_spark.sources.cached_parquet import (
-            _merge_struct_types,
-        )
+        from sidecar_spark.sources.cached_parquet import merge_structs
 
         try:
             parts = self.cache.run_tasks(self.spark, chunks, fold,
                                          slices=len(chunks))
-            import json
-
-            base = None
-            for _, js in sorted(parts, key=lambda x: x[0]):
-                s = StructType.fromJson(json.loads(js))
-                base = (s if base is None
-                        else _merge_struct_types(base, s,
-                                                 case_sensitive))
-            return base
+            return merge_structs(
+                (StructType.fromJson(json.loads(js))
+                 for _, js in sorted(parts, key=lambda x: x[0])),
+                case_sensitive)
         except Exception:  # noqa: BLE001 — job trouble (including a
             # genuine CANNOT_MERGE raised inside a task): fall back to
             # the source's sequential fold, which re-detects real

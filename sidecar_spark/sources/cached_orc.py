@@ -61,7 +61,9 @@ from sidecar_spark.sources.cached_parquet import (
     CachedParquetSource,
     PruningCachedParquetReader,
     _FilePart,
+    _flag,
     _resolve_file_columns,
+    open_footer,
 )
 
 #: field metadata key Spark stamps on ORC columns it wrote
@@ -472,13 +474,8 @@ class CachedOrcReader(CachedParquetReader):
         table's split planning costs zero remote requests)."""
         import pyarrow.orc as po
 
-        fs, path = mgr._resolve(p.path)  # noqa: SLF001
-        local = (mgr.mirror.lookup(path, p.mtime)
-                 if mgr.mirror is not None else None)
-        if local is not None:
-            return po.ORCFile(local).nstripes
-        with fs.open_read(path) as f:
-            return po.ORCFile(f).nstripes
+        return open_footer(mgr, p.path, p.mtime,
+                           lambda src: po.ORCFile(src).nstripes)
 
     def _file_pass(self, fobj, part, columns, stat_filters):
         return _orc_pass(fobj, part, columns, self.case_sensitive,
@@ -501,12 +498,15 @@ class CachedOrcSource(CachedParquetSource):
     ``Engine.read_format(location, "orc")`` when
     ``sidecar.resolve.mode = executor``."""
 
+    _reader_cls = CachedOrcReader
+    _pruning_reader_cls = PruningCachedOrcReader
+
     @classmethod
     def name(cls) -> str:
         return "sidecar_cached_orc"
 
-    def schema(self):
-        if str(self.options.get("merge", "false")).lower() == "true":
+    def _data_schema(self, mgr, files, parts):
+        if _flag(self.options, "merge"):
             # the JVM's ORC mergeSchema column order follows an
             # internal hash order over file basenames (probed) —
             # refusing beats silently declaring a differently-ordered
@@ -517,7 +517,7 @@ class CachedOrcSource(CachedParquetSource):
                 "original location with spark.read.option("
                 "'mergeSchema','true').orc(...) (Engine.read_format "
                 "does this automatically)")
-        return super().schema()
+        return super()._data_schema(mgr, files, parts)
 
     @staticmethod
     def _file_arrow_schema(src, nanos_long: bool = False):
@@ -534,8 +534,3 @@ class CachedOrcSource(CachedParquetSource):
         # metadata); parquet's NTZ-inference session setting is
         # parquet-only and must not leak in
         return True
-
-    def reader(self, schema) -> CachedOrcReader:
-        if str(self.options.get("pushdown", "false")).lower() == "true":
-            return PruningCachedOrcReader(self.options, schema)
-        return CachedOrcReader(self.options, schema)

@@ -47,6 +47,12 @@ task reads only their parquet column chunks — at 100 TB the
 difference between scanning 2 columns and 16. Use executor mode where
 it is the only correct choice (``sidecar.resolve.mode = executor`` on
 real clusters with node-local cache roots).
+
+The source and reader here are the one skeleton every executor source
+shares: ``schema()`` (listing, layout, per-format data schema, then the
+duplicate-name check and projection), ``partitions()``, ``read()`` and
+``reader()``. ORC (``cached_orc.py``) and text/binaryFile
+(``cached_rawfile.py``) override only their format hooks.
 """
 
 from __future__ import annotations
@@ -54,6 +60,15 @@ from __future__ import annotations
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 _BATCH_ROWS = 65536
+
+
+def _flag(options, key: str, default: bool = False) -> bool:
+    """A boolean reader option: ``"true"`` in any case is True, any
+    other set value False, an unset or empty one ``default``."""
+    v = options.get(key)
+    if v is None or v == "":
+        return default
+    return str(v).lower() == "true"
 
 
 class _PageCachedFile:
@@ -730,6 +745,15 @@ def _merge_struct_types(left, right, case_sensitive: bool):
     return StructType(out)
 
 
+def merge_structs(structs, case_sensitive: bool):
+    """mergeSchema's left fold of footer schemas, in the given (path)
+    order, through ``_merge_struct_types``. ``structs`` is non-empty."""
+    import functools
+
+    return functools.reduce(
+        lambda a, b: _merge_struct_types(a, b, case_sensitive), structs)
+
+
 def _binary_as_string_type(dt):
     """spark.sql.parquet.binaryAsString=true: unannotated BINARY
     infers as string — NESTED included (round 10, probed B5:
@@ -771,10 +795,24 @@ def _partition_types(specs, options):
     from sidecar_spark.cache.partitions import infer_partition_types
 
     inferred = infer_partition_types(specs)
-    if str(options.get("pt_inference", "true")).lower() == "false":
+    if not _flag(options, "pt_inference", True):
         return [(k, ddl if ddl == "void" else "string")
                 for k, ddl in inferred]
     return inferred
+
+
+def open_footer(mgr, path: str, mtime: int, decode):
+    """``decode(src)`` over one data file, mirror-first through the
+    node-local manager: ``src`` is the mirror copy's local path when
+    this node holds one (a warmed node's footer reads cost zero remote
+    requests), else an open remote stream."""
+    fs_, p_ = mgr._resolve(path)  # noqa: SLF001
+    local = (mgr.mirror.lookup(p_, mtime)
+             if mgr.mirror is not None else None)
+    if local is not None:
+        return decode(local)
+    with fs_.open_read(p_) as f:
+        return decode(f)
 
 
 def footer_spark_struct(mgr, path: str, mtime: int, ntz: bool,
@@ -782,23 +820,16 @@ def footer_spark_struct(mgr, path: str, mtime: int, ntz: bool,
                         binary_as_string: bool = False):
     """ONE file's footer → the Spark StructType the JVM would derive
     for it: INT96/ns coercion, NTZ inference, then relaxed to
-    all-nullable (FileFormat asNullable). Mirror-first through the
-    node-local manager (a warmed node's footers cost zero remote
-    requests). Shared by the plan worker's thread fold and the
+    all-nullable (FileFormat asNullable), read through
+    ``open_footer``. Shared by the plan worker's thread fold and the
     Engine's distributed mergeSchema job."""
     from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.types import StructField, StructType
 
     if arrow_schema_of is None:
         arrow_schema_of = CachedParquetSource._file_arrow_schema
-    fs_, p_ = mgr._resolve(path)  # noqa: SLF001
-    local = (mgr.mirror.lookup(p_, mtime)
-             if mgr.mirror is not None else None)
-    if local is not None:
-        arrow = arrow_schema_of(local, nanos_long)
-    else:
-        with fs_.open_read(p_) as f:
-            arrow = arrow_schema_of(f, nanos_long)
+    arrow = open_footer(mgr, path, mtime,
+                        lambda src: arrow_schema_of(src, nanos_long))
     s = from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
     out = StructType([StructField(f.name, f.dataType, True,
                                   f.metadata) for f in s.fields])
@@ -883,6 +914,29 @@ def _listing_args(options):
 
     return (options.get("pathglob") or "", ms("mod_before"),
             ms("mod_after"))
+
+
+def table_layout(mgr, options, files):
+    """Per-file hive partition specs of ``files``, shared by schema()
+    and partitions(). Under recursiveFileLookup (the "rfl" option) the
+    directory structure is not semantic: files at any depth, no
+    partition columns (JVM-probed). A layout that is not a clean hive
+    tree is refused, as Spark's partition discovery refuses it."""
+    if _flag(options, "rfl"):
+        return [[] for _ in files]
+    from sidecar_spark.cache.partitions import layout_specs
+
+    path = options.get("path")
+    _, root = mgr._resolve(path)  # noqa: SLF001
+    specs = layout_specs(root, files)
+    if specs is None:
+        raise ValueError(
+            f"{path!r} is not a clean hive-partitioned layout (non "
+            "key=value subdirectories, or files at mixed depths) — "
+            "Spark's partition discovery refuses these too; read the "
+            "original root with spark.read (add recursiveFileLookup="
+            "true to flatten nested dirs)")
+    return specs
 
 
 class _FilePart(InputPartition):
@@ -1737,20 +1791,16 @@ def _filter_matches(raw: str, op: str, ref) -> bool:
 
 class CachedParquetReader(DataSourceReader):
     def __init__(self, options, schema=None):
-        path = options.get("path")
-        if not path:
+        if not options.get("path"):
             raise ValueError("sidecar_cached_parquet requires option 'path'")
-        self.path = path
-        self.options = options  # table_files reads the listing here
+        self.options = options  # table_files/table_layout read these
         self.conf_json = options.get("conf")
         if not self.conf_json:
             raise ValueError("sidecar_cached_parquet requires option 'conf'")
         self.endpoint = options.get("endpoint")
         self.schema = schema
         self.tz = options.get("tz") or "UTC"
-        self.case_sensitive = (str(options.get("case_sensitive",
-                                               "false")).lower()
-                               == "true")
+        self.case_sensitive = _flag(options, "case_sensitive")
         # rebase modes for NON-Spark-written files (footer markers /
         # spark.version win over these — rebase.rebase_batches);
         # defaults match Spark 4's CORRECTED, so direct format() use
@@ -1759,16 +1809,13 @@ class CachedParquetReader(DataSourceReader):
                              or "CORRECTED").upper()
         self.i96_rebase = str(options.get("i96_rebase")
                               or "CORRECTED").upper()
-        self.ntz = str(options.get("ntz") or "true").lower() == "true"
-        self.nanos_long = (str(options.get("nanos_long")
-                               or "false").lower() == "true")
+        self.ntz = _flag(options, "ntz", True)
+        self.nanos_long = _flag(options, "nanos_long")
         #: per-file scan skips (round 10, probed
         #: tests/test_ignore_files.py): resolved option-over-conf by
         #: the Engine (plan/scan workers have no session)
-        self.ignore_corrupt = (str(options.get("ignore_corrupt")
-                                   or "false").lower() == "true")
-        self.ignore_missing = (str(options.get("ignore_missing")
-                                   or "false").lower() == "true")
+        self.ignore_corrupt = _flag(options, "ignore_corrupt")
+        self.ignore_missing = _flag(options, "ignore_missing")
         try:
             # clamp: a negative value must mean "no splitting", never
             # an empty range list that silently drops a file's rows
@@ -1776,11 +1823,6 @@ class CachedParquetReader(DataSourceReader):
         except ValueError:
             self.split_bytes = 0
         self._part_filters = []
-        #: recursiveFileLookup: directory structure is NON-semantic —
-        #: files at any depth, no partition discovery (JVM-probed);
-        #: set from the "rfl" option by the raw-file readers
-        self.flatten = (str(options.get("rfl") or "false").lower()
-                        == "true")
         #: small-file bin-packing knobs (round-9): the JVM scan packs
         #: whole files into FilePartitions by exactly these two
         try:
@@ -1801,7 +1843,6 @@ class CachedParquetReader(DataSourceReader):
 
     def partitions(self):
         from sidecar_spark.cache.manager import CacheManager
-        from sidecar_spark.cache.partitions import layout_specs
 
         _apply_endpoint(self.endpoint)
         # keep-alive singleton (no release), like read(): the planner
@@ -1821,23 +1862,8 @@ class CachedParquetReader(DataSourceReader):
         # partition — once per EXECUTED scan, not once per planning
         # call
         _, veto = mgr.admit(files)
-        if self.flatten:
-            # recursiveFileLookup: flatten — every file at any depth,
-            # no partition columns (JVM-probed)
-            specs = [[] for _ in files]
-        else:
-            _, root = mgr._resolve(self.path)  # noqa: SLF001
-            specs = layout_specs(root, files)
-            if specs is None:
-                raise ValueError(
-                    f"{self.path!r} is not a clean hive-partitioned "
-                    "layout (non key=value subdirectories, or files "
-                    "at mixed depths) — Spark's partition discovery "
-                    "refuses these too; read the original root with "
-                    "spark.read (add recursiveFileLookup=true to "
-                    "flatten nested dirs)")
         out = []
-        for st, spec in zip(files, specs):
+        for st, spec in zip(files, table_layout(mgr, self.options, files)):
             if spec and self._part_filters:
                 from sidecar_spark.cache.partitions import decode_key
 
@@ -1925,39 +1951,32 @@ class CachedParquetReader(DataSourceReader):
             # exact-once would need a driver-side scan-id dedup, a
             # heavier mechanism than a monitoring counter warrants
             mgr.stats.add("total_scans_detected")
+        from sidecar_spark.cache.partitions import decode_key
+
+        keys = [decode_key(k) for k, _ in part.parts]
         columns = None
         if self.schema is not None:
             # read only the declared schema's data columns from the
             # file: partition (and shadowed) columns come from the
-            # directory name, dropped columns are never moved
-            from sidecar_spark.cache.partitions import decode_key
-
-            # same case normalization as the schema()-side split: a
+            # directory name, dropped columns are never moved. Same
+            # case normalization as the schema()-side split: a
             # case-colliding data column under caseSensitive=true
             # reads from the FILE, not the directory (ADVICE r7 #2)
-            part_keys = {
-                decode_key(k) if self.case_sensitive
-                else decode_key(k).lower() for k, _ in part.parts}
-            columns = [
-                f.name for f in self.schema.fields
-                if (f.name if self.case_sensitive
-                    else f.name.lower()) not in part_keys]
+            def norm(n):
+                return n if self.case_sensitive else n.lower()
+
+            part_keys = {norm(k) for k in keys}
+            columns = [f.name for f in self.schema.fields
+                       if norm(f.name) not in part_keys]
         # row-group statistics pruning from the pushed filters —
         # partition-column filters are excluded: their values live in
         # the DIRECTORY (already file-pruned in partitions()), and a
         # missing-from-file partition column must not read as
         # all-NULL here
-        stat_filters = ()
-        if self._part_filters:
-            from sidecar_spark.cache.partitions import decode_key as _dk
-
-            pk = {_dk(k).lower() for k, _ in part.parts}
-            stat_filters = [f for f in self._part_filters
-                            if f[0].lower() not in pk]
-        batches = _read_file_batches(
-            mgr, part,
-            lambda fobj: self._file_pass(fobj, part, columns,
-                                         stat_filters))
+        pk = {k.lower() for k in keys}
+        stat_filters = [f for f in self._part_filters
+                        if f[0].lower() not in pk]
+        batches = self._file_batches(mgr, part, columns, stat_filters)
         if self.ignore_corrupt or self.ignore_missing:
             batches = _skip_file_errors(batches, self.ignore_corrupt,
                                         self.ignore_missing)
@@ -1967,6 +1986,19 @@ class CachedParquetReader(DataSourceReader):
                                         case_sensitive=self.case_sensitive,
                                         gate=self._gate())
         yield from batches
+
+    def _file_batches(self, mgr, part, columns, stat_filters):
+        """The per-file batch hook of ``read()``: Arrow batches of one
+        file (or split) holding ``columns`` (None = every column),
+        served hit-or-materialize-or-remote by ``_read_file_batches``
+        and decoded by ``_file_pass``. binaryFile overrides this (its
+        metadata-only scan never opens the file). Errors raised here,
+        before the first batch, bypass the ignoreCorrupt/MissingFiles
+        skip."""
+        return _read_file_batches(
+            mgr, part,
+            lambda fobj: self._file_pass(fobj, part, columns,
+                                         stat_filters))
 
     def _gate(self):
         """The format's scalar cast-conversion matrix for conforming
@@ -2032,7 +2064,14 @@ class CachedParquetSource(DataSource):
     """``spark.read.format("sidecar_cached_parquet")
     .option("path", uri).option("conf", conf.to_json()).load()`` —
     wired automatically by ``Engine.read_parquet`` when
-    ``sidecar.resolve.mode = executor``."""
+    ``sidecar.resolve.mode = executor``. The base of every executor
+    source: the others override ``_data_schema`` (or the footer hooks
+    under it) and the two reader classes."""
+
+    #: ``reader()`` picks the plain class, or the pushFilters variant
+    #: when the session allows Python filter pushdown
+    _reader_cls = CachedParquetReader
+    _pruning_reader_cls = PruningCachedParquetReader
 
     @classmethod
     def name(cls) -> str:
@@ -2060,18 +2099,19 @@ class CachedParquetSource(DataSource):
         return ntz
 
     def schema(self):
-        """Schema from the first data file's footer, read through the
-        cache fs (driver-side metadata only — no data bytes)."""
-        from pyspark.sql.pandas.types import from_arrow_schema
-
+        """The declared schema, one pipeline for every format: the
+        table's listing and hive layout, the format's data schema
+        (``_data_schema``), then the duplicate-name check and the
+        ``columns`` projection (``_schema_tail``). Driver-side
+        metadata only — no data bytes."""
         from sidecar_spark.cache.manager import CacheManager
         from sidecar_spark.config import SidecarConfig
 
         _apply_endpoint(self.options.get("endpoint"))
-        path = self.options.get("path")
-        conf = SidecarConfig.from_json(self.options["conf"])
-        # keep-alive singleton (no release) — see partitions()
-        mgr = CacheManager.get_or_create(conf)
+        # keep-alive singleton (no release) — see the reader's
+        # partitions()
+        mgr = CacheManager.get_or_create(
+            SidecarConfig.from_json(self.options["conf"]))
         # deterministic footer pick: FIRST file by path, matching the
         # JVM scan's choice under schema evolution (a listing in OS
         # order sampled a different file and diverged the schema).
@@ -2083,68 +2123,82 @@ class CachedParquetSource(DataSource):
                        key=lambda s: s.path)
         if not files:
             raise FileNotFoundError(
-                f"no data files under {path!r} (after any pathGlobFilter"
-                "/modifiedBefore/modifiedAfter) — the JVM scan cannot "
-                "infer a schema from an empty listing either")
+                f"no data files under {self.options.get('path')!r} "
+                "(after any pathGlobFilter/modifiedBefore/"
+                "modifiedAfter) — the JVM scan cannot plan an empty "
+                "listing either")
+        # hive partition columns live in the DIRECTORY names of the
+        # files the scan plans (the reader's _filter_files: binaryFile
+        # and wholetext drop empty files, which yield no row), typed
+        # exactly as Spark's partition discovery would
+        # (cache/partitions.py ladder, JVM-probed)
+        scanned = self._reader_cls(self.options)._filter_files(files)
+        parts = _partition_types(
+            table_layout(mgr, self.options, scanned), self.options)
+        return self._schema_tail(self._data_schema(mgr, files, parts))
+
+    def _data_schema(self, mgr, files, parts):
+        """The format's schema before the shared tail: the user schema
+        with the partition columns relocated, else the footer schema
+        with them appended. ``parts``: (name, ddl) partition columns."""
         user_json = self.options.get("user_schema")
         if user_json:
-            # explicit USER schema: no footer inference at all — the
-            # declared schema is the user's, reshaped by partition
-            # discovery exactly like the JVM (probed): partition
-            # columns RELOCATE to the end (even when the user listed
-            # them first), typed by the USER when named in the
-            # schema, by the inference ladder otherwise; an omitted
-            # partition column is APPENDED anyway. Data columns keep
-            # the user's order and case; per-file conformance
-            # (subset/superset/upcasts) happens in _finalize_batches
-            # through the _cast_gate matrix.
-            import json as _json
+            import json
 
-            from pyspark.sql.types import StructField as _SF
-            from pyspark.sql.types import StructType as _ST
+            from pyspark.sql.types import StructType
 
-            from sidecar_spark.cache.partitions import (
-                infer_partition_types,
-                layout_specs,
-            )
+            return self._user_schema(
+                StructType.fromJson(json.loads(user_json)), parts)
+        return self._append_partitions(
+            self._footer_schema(mgr, files), parts)
 
-            user = _ST.fromJson(_json.loads(user_json))
-            cs = (str(self.options.get("case_sensitive",
-                                       "false")).lower() == "true")
-            _, p_root = mgr._resolve(path)  # noqa: SLF001
-            specs = layout_specs(p_root, files)
-            if specs is None:
-                raise ValueError(
-                    f"{path!r} is not a clean hive-partitioned "
-                    "layout (non key=value subdirectories, or files "
-                    "at mixed depths) — Spark's partition discovery "
-                    "refuses these too")
-            inferred = _partition_types(specs, self.options)
+    def _user_schema(self, user, parts):
+        """Explicit USER schema: no footer inference at all — the
+        declared schema is the user's, reshaped by partition discovery
+        exactly like the JVM (probed): partition columns RELOCATE to
+        the end (even when the user listed them first), typed by the
+        USER when named in the schema, by the inference ladder
+        otherwise; an omitted partition column is APPENDED anyway.
+        Data columns keep the user's order and case; per-file
+        conformance (subset/superset/upcasts) happens in
+        _finalize_batches through the _cast_gate matrix."""
+        from pyspark.sql.types import StructField, StructType
 
-            def key(n):
-                return n if cs else n.lower()
+        cs = _flag(self.options, "case_sensitive")
 
-            # the data/partition split uses the SAME normalization as
-            # the partition match: under caseSensitive=true a user
-            # data column whose lowercase merely collides with a
-            # directory key (PART_K vs part_k=) is a distinct column
-            # and must stay in the data fields (ADVICE r7 #2)
-            pk_keys = {key(k) for k, _ in inferred}
-            user_by_key = {}
-            for f in user.fields:
-                user_by_key.setdefault(key(f.name), f)
-            data_fields = [
-                _SF(f.name, f.dataType, True, f.metadata)
-                for f in user.fields if key(f.name) not in pk_keys]
-            part_fields = []
-            for k, ddl in inferred:
-                uf = user_by_key.get(key(k))
-                if uf is not None:
-                    part_fields.append(_SF(uf.name, uf.dataType, True,
-                                           uf.metadata))
-                else:
-                    part_fields.append(_SF(k, _ddl_type(ddl), True))
-            return _ST(data_fields + part_fields)
+        def key(n):
+            return n if cs else n.lower()
+
+        # the data/partition split uses the SAME normalization as the
+        # partition match: under caseSensitive=true a user data column
+        # whose lowercase merely collides with a directory key (PART_K
+        # vs part_k=) is a distinct column and must stay in the data
+        # fields (ADVICE r7 #2)
+        pk_keys = {key(k) for k, _ in parts}
+        user_by_key = {}
+        for f in user.fields:
+            user_by_key.setdefault(key(f.name), f)
+        data_fields = [
+            StructField(f.name, f.dataType, True, f.metadata)
+            for f in user.fields if key(f.name) not in pk_keys]
+        part_fields = []
+        for k, ddl in parts:
+            uf = user_by_key.get(key(k))
+            if uf is not None:
+                part_fields.append(StructField(uf.name, uf.dataType,
+                                               True, uf.metadata))
+            else:
+                part_fields.append(StructField(k, _ddl_type(ddl), True))
+        return StructType(data_fields + part_fields)
+
+    def _footer_schema(self, mgr, files):
+        """Footer inference over the sorted listing: the head file's
+        footer, or under mergeSchema the fold of every footer."""
+        import json
+
+        from pyspark.sql.types import StructType
+
+        path = self.options.get("path")
         # match the JVM parquet reader's NTZ inference (tz-less
         # parquet timestamps read as timestamp_ntz when
         # spark.sql.parquet.inferTimestampNTZ.enabled, default true) —
@@ -2153,9 +2207,8 @@ class CachedParquetSource(DataSource):
         # code runs in the plan worker process, which has no active
         # session; the probe below covers direct format() use from the
         # driver, and the Spark default covers everything else.
-        ntz_opt = self.options.get("ntz")
-        if ntz_opt is not None:
-            ntz = str(ntz_opt).lower() == "true"
+        if self.options.get("ntz") is not None:
+            ntz = _flag(self.options, "ntz")
         else:
             ntz = True
             try:
@@ -2168,126 +2221,89 @@ class CachedParquetSource(DataSource):
                         "true").lower() == "true")
             except Exception:  # noqa: BLE001 — keep the default
                 pass
-
-        from pyspark.sql.types import StructField as _SF
-        from pyspark.sql.types import StructType as _ST
-
         ntz = self._ntz_flag(ntz)
-        nanos_long = (str(self.options.get("nanos_long")
-                          or "false").lower() == "true")
-
-        def footer_struct(st):
-            return footer_spark_struct(
-                mgr, st.path, st.mtime, ntz, nanos_long,
-                arrow_schema_of=self._file_arrow_schema,
-                binary_as_string=(str(self.options.get(
-                    "binary_as_string") or "false").lower()
-                    == "true"))
-
+        nanos_long = _flag(self.options, "nanos_long")
+        binary_as_string = _flag(self.options, "binary_as_string")
         # ignoreCorrupt/MissingFiles apply to schema INFERENCE too
         # (probed: the JVM skips a corrupt footer and infers from
         # the next file); None marks a skipped file
-        _icf = (str(self.options.get("ignore_corrupt")
-                    or "false").lower() == "true")
-        _imf = (str(self.options.get("ignore_missing")
-                    or "false").lower() == "true")
+        icf = _flag(self.options, "ignore_corrupt")
+        imf = _flag(self.options, "ignore_missing")
 
-        def footer_struct_opt(st):
+        def footer_struct(st):
             try:
-                return footer_struct(st)
+                return footer_spark_struct(
+                    mgr, st.path, st.mtime, ntz, nanos_long,
+                    arrow_schema_of=self._file_arrow_schema,
+                    binary_as_string=binary_as_string)
             except FileNotFoundError:
-                if _imf:
+                if imf:
                     return None
                 raise
             except Exception:
-                if _icf:
+                if icf:
                     return None
                 raise
 
-        merge = str(self.options.get("merge", "false")).lower() == "true"
-        case_sensitive = (str(self.options.get("case_sensitive",
-                                               "false")).lower()
-                          == "true")
-        merged_opt = self.options.get("merged_schema")
-        if merge and merged_opt:
-            # the Engine pre-folded the footers in a SPARK JOB (large
-            # file counts — _merged_schema_job) and ships the result;
-            # partition-column append and dup checks still run below.
-            # A table mutated between the Engine's listing and this
-            # one could make the fold stale — the same TOCTOU window
-            # every re-planned query has; re-executions re-list AND
-            # re-fold.
-            import json as _json
+        if _flag(self.options, "merge"):
+            merged = self.options.get("merged_schema")
+            if merged:
+                # the Engine pre-folded the footers in a SPARK JOB
+                # (large file counts — _maybe_merged_schema_job) and
+                # ships the result. A table mutated between the
+                # Engine's listing and this one could make the fold
+                # stale — the same TOCTOU window every re-planned
+                # query has; re-executions re-list AND re-fold.
+                return StructType.fromJson(json.loads(merged))
+            if len(files) > 1:
+                # mergeSchema=true: the declared schema is the left
+                # fold of EVERY footer in path order (JVM-probed:
+                # path-sorted seed, new columns appended, case-
+                # insensitive name match keeping the first spelling,
+                # decimal same-scale→max-precision, anything else
+                # CANNOT_MERGE_SCHEMAS). Footers are metadata-only
+                # reads fanned over a thread pool — the JVM
+                # distributes this over tasks; a plan worker has no
+                # session to launch jobs from, so I/O-parallel threads
+                # are the honest equivalent up to ~10k files.
+                from concurrent.futures import ThreadPoolExecutor
 
-            base = _ST.fromJson(_json.loads(merged_opt))
-        elif merge and len(files) > 1:
-            # mergeSchema=true: the declared schema is the left fold
-            # of EVERY footer in path order (JVM-probed: path-sorted
-            # seed, new columns appended, case-insensitive name match
-            # keeping the first spelling, decimal same-scale→max-
-            # precision, anything else CANNOT_MERGE_SCHEMAS). Footers
-            # are metadata-only reads fanned over a thread pool — the
-            # JVM distributes this over tasks; a plan worker has no
-            # session to launch jobs from, so I/O-parallel threads are
-            # the honest equivalent up to ~10k files.
-            from concurrent.futures import ThreadPoolExecutor
+                with ThreadPoolExecutor(min(16, len(files))) as pool:
+                    structs = [s for s in pool.map(footer_struct, files)
+                               if s is not None]
+                if not structs:
+                    raise FileNotFoundError(
+                        f"every data file under {path!r} was skipped "
+                        "by ignoreCorruptFiles/ignoreMissingFiles — "
+                        "the JVM cannot infer a schema either")
+                return merge_structs(
+                    structs, _flag(self.options, "case_sensitive"))
+        # WITHOUT mergeSchema the JVM infers from the HEAD file only —
+        # ignoreCorruptFiles skipping it leaves nothing to infer from
+        # and the read fails UNABLE_TO_INFER_SCHEMA (probed: it does
+        # NOT fall through to the next footer)
+        base = footer_struct(files[0])
+        if base is None:
+            raise FileNotFoundError(
+                f"the head data file under {path!r} was skipped by "
+                "ignoreCorruptFiles/ignoreMissingFiles — the JVM "
+                "cannot infer a schema either (UNABLE_TO_INFER_SCHEMA)")
+        return base
 
-            with ThreadPoolExecutor(min(16, len(files))) as pool:
-                structs = [s for s in pool.map(footer_struct_opt,
-                                               files)
-                           if s is not None]
-            if not structs:
-                raise FileNotFoundError(
-                    f"every data file under {path!r} was skipped by "
-                    "ignoreCorruptFiles/ignoreMissingFiles — the JVM "
-                    "cannot infer a schema either")
-            base = structs[0]
-            for s in structs[1:]:
-                base = _merge_struct_types(base, s, case_sensitive)
-        elif not (_icf or _imf):
-            base = footer_struct(files[0])
-        else:
-            # WITHOUT mergeSchema the JVM infers from the HEAD file
-            # only — ignoreCorruptFiles skipping it leaves nothing to
-            # infer from and the read fails UNABLE_TO_INFER_SCHEMA
-            # (probed: it does NOT fall through to the next footer)
-            base = footer_struct_opt(files[0])
-            if base is None:
-                raise FileNotFoundError(
-                    f"the head data file under {path!r} was skipped "
-                    "by ignoreCorruptFiles/ignoreMissingFiles — the "
-                    "JVM cannot infer a schema either "
-                    "(UNABLE_TO_INFER_SCHEMA)")
-        # hive partition columns live in the DIRECTORY names, not the
-        # files — append them, typed exactly as Spark's partition
-        # discovery would (cache/partitions.py ladder, JVM-probed)
+    @staticmethod
+    def _append_partitions(base, parts):
+        """Footer schema + partition columns: a data column with a
+        partition key's name is served the DIRECTORY value with the
+        partition-inferred type at the file position, and takes the
+        DIRECTORY's case (probed); the other keys append."""
         from pyspark.sql.types import StructField, StructType
 
-        from sidecar_spark.cache.partitions import (
-            infer_partition_types,
-            layout_specs,
-        )
-
-        _, p_root = mgr._resolve(path)  # noqa: SLF001
-        specs = layout_specs(p_root, files)  # files already sorted
-        if specs is None:
-            raise ValueError(
-                f"{path!r} is not a clean hive-partitioned layout "
-                "(non key=value subdirectories, or files at mixed "
-                "depths) — Spark's partition discovery refuses these "
-                "too; read the original root with spark.read (add "
-                "recursiveFileLookup=true to flatten nested dirs)")
-        inferred = _partition_types(specs, self.options)
-        base_by_lower = {f.name.lower(): f.name for f in base.fields}
+        base_lower = {f.name.lower() for f in base.fields}
         shadowed = {}    # lower(name) -> (directory-case name, type)
         part_fields = []
-        for k, ddl in inferred:
+        for k, ddl in parts:
             dt = _ddl_type(ddl)
-            if k.lower() in base_by_lower:
-                # a data column with a partition key's name: the JVM
-                # scan serves the DIRECTORY value with the partition-
-                # inferred type at the file position, and the column
-                # takes the DIRECTORY's case (probed) — mirror both
+            if k.lower() in base_lower:
                 shadowed[k.lower()] = (k, dt)
             else:
                 part_fields.append(StructField(k, dt))
@@ -2299,7 +2315,16 @@ class CachedParquetSource(DataSource):
                 for f in base.fields])
         if part_fields:
             base = StructType(list(base.fields) + part_fields)
-        if not case_sensitive:
+        return base
+
+    def _schema_tail(self, base):
+        """The steps every schema branch ends with: the duplicate-name
+        check, then the explicit ``columns`` projection."""
+        from pyspark.sql.types import StructType
+
+        path = self.options.get("path")
+        cs = _flag(self.options, "case_sensitive")
+        if not cs:
             # JVM parity (probed): a schema with case-duplicate names
             # is refused at PLAN time under the default
             # spark.sql.caseSensitive=false — COLUMN_ALREADY_EXISTS
@@ -2315,38 +2340,34 @@ class CachedParquetSource(DataSource):
         # explicit projection (Engine.read_parquet(columns=[...])):
         # the declared schema shrinks to the requested columns in the
         # requested order — the DataSource API has no automatic prune
-        # hook, so this is the 100 TB column-pruning path
+        # hook, so this is the 100 TB column-pruning path. Resolution
+        # follows the session's case rule, like the JVM's own select:
+        # under caseSensitive=true a wrong-case name is an error
         cols_opt = self.options.get("columns")
-        if cols_opt:
-            import json
+        if not cols_opt:
+            return base
+        import json
 
-            requested = json.loads(cols_opt)
-            # projection resolution follows the session's case rule
-            # (shipped as an option), like the JVM's own select: under
-            # caseSensitive=true a wrong-case name is an error
-            cs = (str(self.options.get("case_sensitive",
-                                       "false")).lower() == "true")
-            by_key = {(f.name if cs else f.name.lower()): f
-                      for f in base.fields}
-            picked = []
-            for c in requested:
-                f = by_key.get(str(c) if cs else str(c).lower())
-                if f is None:
-                    raise ValueError(
-                        f"column {c!r} not found in {path!r}; "
-                        f"available: {[x.name for x in base.fields]}")
-                picked.append(f)
-            base = StructType(picked)
-        return base
+        by_key = {(f.name if cs else f.name.lower()): f
+                  for f in base.fields}
+        picked = []
+        for c in json.loads(cols_opt):
+            f = by_key.get(str(c) if cs else str(c).lower())
+            if f is None:
+                raise ValueError(
+                    f"column {c!r} not found in {path!r}; "
+                    f"available: {[x.name for x in base.fields]}")
+            picked.append(f)
+        return StructType(picked)
 
     def reader(self, schema) -> CachedParquetReader:
         # the pruning variant defines pushFilters, which Spark 4.1
         # hard-rejects while spark.sql.python.filterPushdown.enabled
         # is false — the Engine ships the session conf's query-time
         # value as the "pushdown" option
-        if str(self.options.get("pushdown", "false")).lower() == "true":
-            return PruningCachedParquetReader(self.options, schema)
-        return CachedParquetReader(self.options, schema)
+        cls = (self._pruning_reader_cls
+               if _flag(self.options, "pushdown") else self._reader_cls)
+        return cls(self.options, schema)
 
 
 def _ddl_type(ddl: str):

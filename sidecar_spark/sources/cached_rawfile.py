@@ -79,6 +79,8 @@ from sidecar_spark.sources.cached_parquet import (
     CachedParquetReader,
     CachedParquetSource,
     PruningCachedParquetReader,
+    _ddl_type,
+    _flag,
     _read_file_batches,
 )
 
@@ -88,6 +90,9 @@ _BATCH_BYTES = 64 * 1024 * 1024
 
 #: JVM default for spark.sql.sources.binaryFile.maxLength
 _MAX_INT = 2147483647
+
+#: binaryFile's fixed columns, in schema order
+_BINARY_COLUMNS = ("path", "modificationTime", "length", "content")
 
 _CHUNK = 4 * 1024 * 1024
 
@@ -689,16 +694,14 @@ class CachedTextReader(CachedParquetReader):
 
     def __init__(self, options, schema=None):
         super().__init__(options, schema)
-        self.wholetext = (str(options.get("wholetext") or "false")
-                          .lower() == "true")
+        self.wholetext = _flag(options, "wholetext")
         #: non-UTF8 charset transcode (round 10, probed — set by the
         #: Engine's composed csv/json paths, never by plain text: the
         #: JVM text format IGNORES the encoding option, probed E15)
         self.transcode = options.get("transcode") or None
         #: json multiLine: Jackson charset auto-detect + BOM consume
         #: on the wholetext value (round 10, probed K1-K7)
-        self.strip_bom = (str(options.get("strip_bom") or "false")
-                          .lower() == "true")
+        self.strip_bom = _flag(options, "strip_bom")
         sep = options.get("linesep")
         if sep and self.transcode in _TRANSCODE:
             # the separator matches ENCODED bytes (probed F10/F11:
@@ -712,16 +715,14 @@ class CachedTextReader(CachedParquetReader):
         #: neither blank (Java trim: all bytes <= 0x20) nor a comment
         #: (raw startswith — whitespace before the char disqualifies).
         #: Set by the Engine's composed csv path, never by plain text.
-        self.skip_header = (str(options.get("skip_header") or "false")
-                            .lower() == "true")
+        self.skip_header = _flag(options, "skip_header")
         cmt = options.get("comment") or ""
         self.comment = cmt.encode("utf-8") if cmt else None
         #: multiLine csv record framing (round 10, probed — set by the
         #: Engine's composed csv path only): quote-aware record spans,
         #: never split (probed p13: one partition regardless of
         #: maxPartitionBytes, exactly the JVM)
-        self.ml_csv = (str(options.get("multiline_csv") or "false")
-                       .lower() == "true")
+        self.ml_csv = _flag(options, "multiline_csv")
         if self.ml_csv:
             def _ch(key, dflt):
                 v = options.get(key, dflt)
@@ -739,8 +740,7 @@ class CachedTextReader(CachedParquetReader):
             else:
                 self.ml_ceqe = None
             self.ml_sep = (options.get("ml_sep") or ",").encode("utf-8")
-            self.ml_ilw = (str(options.get("ml_ilw") or "false")
-                           .lower() == "true")
+            self.ml_ilw = _flag(options, "ml_ilw")
         if self.wholetext or self.linesep is not None or self.ml_csv:
             # wholetext: one row per file by definition. Custom
             # lineSep: self-overlapping separators make local split
@@ -959,17 +959,6 @@ class CachedBinaryFileReader(CachedParquetReader):
                 continue
         return files
 
-    def _columns_of(self, part):
-        if self.schema is None:
-            return ["path", "modificationTime", "length", "content"]
-        from sidecar_spark.cache.partitions import decode_key
-
-        pk = {decode_key(k) if self.case_sensitive
-              else decode_key(k).lower() for k, _ in part.parts}
-        return [f.name for f in self.schema.fields
-                if (f.name if self.case_sensitive
-                    else f.name.lower()) not in pk]
-
     def _meta_arrays(self, part, columns, content):
         import pyarrow as pa
 
@@ -997,26 +986,10 @@ class CachedBinaryFileReader(CachedParquetReader):
             names.append(c)
         return pa.RecordBatch.from_arrays(arrays, names=names)
 
-    def read(self, part):
-        from sidecar_spark.cache.manager import CacheManager
-        from sidecar_spark.sources.cached_parquet import (
-            _PackedPart,
-            _apply_endpoint,
-            _finalize_batches,
-        )
-
-        if isinstance(part, _PackedPart):
-            # one task, several whole small files (bin-packing)
-            for sub in part.subs:
-                yield from self.read(sub)
-            return
-        _apply_endpoint(self.endpoint)
-        mgr = CacheManager.get_or_create(self._conf())
-        if part.first and part.veto:
-            mgr.stats.add("total_scans_detected")
-        columns = self._columns_of(part)
-        want_content = any(c.lower() == "content" for c in columns)
-        if not want_content:
+    def _file_batches(self, mgr, part, columns, stat_filters):
+        if columns is None:
+            columns = list(_BINARY_COLUMNS)
+        if not any(c.lower() == "content" for c in columns):
             # metadata-only projection: zero data bytes move — the
             # listing already knows path/mtime/length. maxLength is
             # NOT checked here: the JVM's BinaryFileFormat throws only
@@ -1029,33 +1002,19 @@ class CachedBinaryFileReader(CachedParquetReader):
                 try:
                     fs, p = mgr._resolve(part.path)  # noqa: SLF001
                     if fs.stat(p) is None:
-                        return
+                        return iter(())
                 except FileNotFoundError:
-                    return
-            batches = iter([self._meta_arrays(part, columns, None)])
-        else:
-            if part.length > self.max_length:
-                raise ValueError(
-                    f"The length of {render_path(part.path)} is "
-                    f"{part.length}, which exceeds the max length "
-                    f"allowed: {self.max_length}.")
-            def one_pass(fobj):
-                yield self._meta_arrays(part, columns, fobj.read())
-
-            batches = _read_file_batches(mgr, part, one_pass)
-            if self.ignore_corrupt or self.ignore_missing:
-                from sidecar_spark.sources.cached_parquet import (
-                    _skip_file_errors,
-                )
-
-                batches = _skip_file_errors(batches,
-                                            self.ignore_corrupt,
-                                            self.ignore_missing)
-        if self.schema is not None:
-            batches = _finalize_batches(
-                batches, self.schema, part.parts, tz=self.tz,
-                case_sensitive=self.case_sensitive)
-        yield from batches
+                    return iter(())
+            return iter([self._meta_arrays(part, columns, None)])
+        if part.length > self.max_length:
+            raise ValueError(
+                f"The length of {render_path(part.path)} is "
+                f"{part.length}, which exceeds the max length "
+                f"allowed: {self.max_length}.")
+        return _read_file_batches(
+            mgr, part,
+            lambda fobj: iter([self._meta_arrays(part, columns,
+                                                 fobj.read())]))
 
 
 class PruningCachedBinaryFileReader(PruningCachedParquetReader,
@@ -1064,139 +1023,61 @@ class PruningCachedBinaryFileReader(PruningCachedParquetReader,
     AND provable length predicates — see _filter_files)."""
 
 
-class _RawSchemaMixin:
-    """schema() for fixed-schema raw-file sources: no footers — the
-    fixed fields plus hive partition columns discovered exactly like
-    the parquet source (same layout_specs/infer ladder), with the
-    same listing (``table_files``)."""
-
-    _FIXED = ()       # ((name, spark_type_factory), ...)
-    _DROP_EMPTY = False
+class _RawFileSource(CachedParquetSource):
+    """Fixed-schema raw-file sources: no footers — the data schema is
+    the format's fixed fields plus the hive partition columns of the
+    shared ``schema()`` pipeline."""
 
     def _fixed_fields(self):
-        from pyspark.sql.types import StructField
+        """The format's fixed (name, Spark type) fields."""
+        raise NotImplementedError
 
-        return [StructField(n, t(), True) for n, t in self._FIXED]
-
-    def schema(self):
+    def _data_schema(self, mgr, files, parts):
         from pyspark.sql.types import StructField, StructType
 
-        from sidecar_spark.cache.manager import CacheManager
-        from sidecar_spark.cache.partitions import (
-            infer_partition_types,
-            layout_specs,
-        )
-        from sidecar_spark.config import SidecarConfig
-        from sidecar_spark.sources.cached_parquet import (
-            _apply_endpoint,
-            _ddl_type,
-        )
-
-        _apply_endpoint(self.options.get("endpoint"))
-        path = self.options.get("path")
-        conf = SidecarConfig.from_json(self.options["conf"])
-        mgr = CacheManager.get_or_create(conf)
-        from sidecar_spark.sources.cached_parquet import table_files
-
-        files = sorted(table_files(mgr, self.options),
-                       key=lambda s: s.path)
-        if not files:
-            raise FileNotFoundError(f"no data files under {path!r}")
-        # the JVM's no-row-for-empty-files rule (binaryFile/wholetext)
-        kept = ([st for st in files if st.length] if self._DROP_EMPTY
-                else files)
-        base = StructType(self._fixed_fields())
-        flatten = (str(self.options.get("rfl") or "false").lower()
-                   == "true")
-        if not flatten and kept:
-            _, p_root = mgr._resolve(path)  # noqa: SLF001
-            specs = layout_specs(p_root, kept)
-            if specs is None:
+        fixed = [StructField(n, t, True) for n, t in self._fixed_fields()]
+        fixed_lower = {f.name.lower() for f in fixed}
+        for k, _ in parts:
+            if k.lower() in fixed_lower:
                 raise ValueError(
-                    f"{path!r} is not a clean hive-partitioned "
-                    "layout (non key=value subdirectories, or files "
-                    "at mixed depths) — Spark's partition discovery "
-                    "refuses these too")
-            fixed_lower = {f.name.lower() for f in base.fields}
-            part_fields = []
-            from sidecar_spark.sources.cached_parquet import (
-                _partition_types,
-            )
-
-            for k, ddl in _partition_types(specs, self.options):
-                if k.lower() in fixed_lower:
-                    raise ValueError(
-                        f"partition column {k!r} in {path!r} "
-                        "collides with a fixed column of the "
-                        f"{self.name()} schema — rename the "
-                        "directory key or read the original raw")
-                part_fields.append(StructField(k, _ddl_type(ddl)))
-            if part_fields:
-                base = StructType(list(base.fields) + part_fields)
-        cols_opt = self.options.get("columns")
-        if cols_opt:
-            import json
-
-            requested = json.loads(cols_opt)
-            # projection resolution follows the session's case rule
-            # (shipped as an option), like the JVM's own select: under
-            # caseSensitive=true a wrong-case name is an error
-            cs = (str(self.options.get("case_sensitive",
-                                       "false")).lower() == "true")
-            by_key = {(f.name if cs else f.name.lower()): f
-                      for f in base.fields}
-            picked = []
-            for c in requested:
-                f = by_key.get(str(c) if cs else str(c).lower())
-                if f is None:
-                    raise ValueError(
-                        f"column {c!r} not found in {path!r}; "
-                        f"available: {[x.name for x in base.fields]}")
-                picked.append(f)
-            base = StructType(picked)
-        return base
+                    f"partition column {k!r} in "
+                    f"{self.options.get('path')!r} collides with a "
+                    f"fixed column of the {self.name()} schema — "
+                    "rename the directory key or read the original raw")
+        return StructType(fixed + [StructField(k, _ddl_type(ddl))
+                                   for k, ddl in parts])
 
 
-class CachedTextSource(_RawSchemaMixin, CachedParquetSource):
+class CachedTextSource(_RawFileSource):
     """``spark.read.format("sidecar_cached_text")`` — wired by
     ``Engine.read_format(location, "text")`` under executor mode."""
+
+    _reader_cls = CachedTextReader
+    _pruning_reader_cls = PruningCachedTextReader
 
     @classmethod
     def name(cls) -> str:
         return "sidecar_cached_text"
 
-    @property
-    def _FIXED(self):
+    def _fixed_fields(self):
         from pyspark.sql.types import StringType
 
-        return (("value", StringType),)
-
-    @property
-    def _DROP_EMPTY(self):
-        # wholetext drops empty files (probed: no row); the line
-        # reader keeps them (they just have no lines)
-        return (str(self.options.get("wholetext") or "false").lower()
-                == "true")
-
-    def reader(self, schema):
-        if str(self.options.get("pushdown", "false")).lower() == "true":
-            return PruningCachedTextReader(self.options, schema)
-        return CachedTextReader(self.options, schema)
+        return [("value", StringType())]
 
 
-class CachedBinaryFileSource(_RawSchemaMixin, CachedParquetSource):
+class CachedBinaryFileSource(_RawFileSource):
     """``spark.read.format("sidecar_cached_binaryfile")`` — wired by
     ``Engine.read_format(location, "binaryFile")`` under executor
     mode."""
+
+    _reader_cls = CachedBinaryFileReader
+    _pruning_reader_cls = PruningCachedBinaryFileReader
 
     @classmethod
     def name(cls) -> str:
         return "sidecar_cached_binaryfile"
 
-    _DROP_EMPTY = True  # probed: empty files yield no row
-
-    @property
-    def _FIXED(self):
+    def _fixed_fields(self):
         from pyspark.sql.types import (
             BinaryType,
             LongType,
@@ -1204,12 +1085,6 @@ class CachedBinaryFileSource(_RawSchemaMixin, CachedParquetSource):
             TimestampType,
         )
 
-        return (("path", StringType),
-                ("modificationTime", TimestampType),
-                ("length", LongType),
-                ("content", BinaryType))
-
-    def reader(self, schema):
-        if str(self.options.get("pushdown", "false")).lower() == "true":
-            return PruningCachedBinaryFileReader(self.options, schema)
-        return CachedBinaryFileReader(self.options, schema)
+        return list(zip(_BINARY_COLUMNS,
+                        (StringType(), TimestampType(), LongType(),
+                         BinaryType())))

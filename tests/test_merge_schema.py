@@ -365,15 +365,16 @@ class TestDistributedMergeJob:
         return _mk(files)
 
     def test_job_path_matches_thread_path_and_jvm(self, spark,
-                                                  cache_dir):
-        from sidecar_spark import Engine
+                                                  cache_dir,
+                                                  monkeypatch):
+        from sidecar_spark import Engine, engine
 
         root = self._evolving_table()
         jvm = spark.read.option("mergeSchema", "true").parquet(root)
         want_schema = jvm.schema.simpleString()
         want = sorted(map(str, jvm.collect()))
-        spark.conf.set("spark.sidecar.mergeSchema.jobThreshold", "4")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(engine, "MERGE_SCHEMA_JOB_THRESHOLD", 4)
             eng = Engine(spark, conf=_conf(cache_dir))
             try:
                 got = eng.read_parquet(root, mergeSchema="true")
@@ -381,8 +382,6 @@ class TestDistributedMergeJob:
                 assert sorted(map(str, got.collect())) == want
             finally:
                 eng.close()
-        finally:
-            spark.conf.unset("spark.sidecar.mergeSchema.jobThreshold")
         # threshold back at default (1000): the same read folds in
         # the plan worker — results identical
         eng = Engine(spark, conf=_conf(cache_dir))
@@ -397,38 +396,34 @@ class TestDistributedMergeJob:
                                       monkeypatch):
         """The job actually runs above the threshold (and not below):
         observed via the merged-schema option hook."""
-        from sidecar_spark import Engine
+        from sidecar_spark import Engine, engine
 
         root = self._evolving_table(6)
         calls = []
-        spark.conf.set("spark.sidecar.mergeSchema.jobThreshold", "4")
+        monkeypatch.setattr(engine, "MERGE_SCHEMA_JOB_THRESHOLD", 4)
+        eng = Engine(spark, conf=_conf(cache_dir))
+        orig = Engine._maybe_merged_schema_job
+
+        def spy(self, *a, **kw):
+            out = orig(self, *a, **kw)
+            calls.append(out)
+            return out
+
+        monkeypatch.setattr(Engine, "_maybe_merged_schema_job", spy)
         try:
-            eng = Engine(spark, conf=_conf(cache_dir))
-            orig = Engine._maybe_merged_schema_job
-
-            def spy(self, *a, **kw):
-                out = orig(self, *a, **kw)
-                calls.append(out)
-                return out
-
-            monkeypatch.setattr(Engine, "_maybe_merged_schema_job",
-                                spy)
-            try:
-                eng.read_parquet(root, mergeSchema="true").collect()
-                assert calls and calls[-1] is not None
-                spark.conf.set(
-                    "spark.sidecar.mergeSchema.jobThreshold", "100")
-                eng.read_parquet(root, mergeSchema="true").collect()
-                assert calls[-1] is None  # below threshold: no job
-            finally:
-                eng.close()
+            eng.read_parquet(root, mergeSchema="true").collect()
+            assert calls and calls[-1] is not None
+            monkeypatch.setattr(engine, "MERGE_SCHEMA_JOB_THRESHOLD", 100)
+            eng.read_parquet(root, mergeSchema="true").collect()
+            assert calls[-1] is None  # below threshold: no job
         finally:
-            spark.conf.unset("spark.sidecar.mergeSchema.jobThreshold")
+            eng.close()
 
-    def test_type_conflict_still_raises(self, spark, cache_dir):
+    def test_type_conflict_still_raises(self, spark, cache_dir,
+                                        monkeypatch):
         """A CANNOT_MERGE conflict under the job path still fails the
         read loudly (job falls back, the sequential fold raises)."""
-        from sidecar_spark import Engine
+        from sidecar_spark import Engine, engine
 
         root = _mk([
             ("a.parquet", pa.table({"x": pa.array([1], pa.int64())})),
@@ -437,24 +432,22 @@ class TestDistributedMergeJob:
             ("d.parquet", pa.table({"x": pa.array([3], pa.int64())})),
             ("e.parquet", pa.table({"x": pa.array([4], pa.int64())})),
         ])
-        spark.conf.set("spark.sidecar.mergeSchema.jobThreshold", "3")
+        monkeypatch.setattr(engine, "MERGE_SCHEMA_JOB_THRESHOLD", 3)
+        eng = Engine(spark, conf=_conf(cache_dir))
         try:
-            eng = Engine(spark, conf=_conf(cache_dir))
-            try:
-                with pytest.raises(Exception, match="(?i)merge"):
-                    eng.read_parquet(root, mergeSchema="true").collect()
-            finally:
-                eng.close()
+            with pytest.raises(Exception, match="(?i)merge"):
+                eng.read_parquet(root, mergeSchema="true").collect()
         finally:
-            spark.conf.unset("spark.sidecar.mergeSchema.jobThreshold")
+            eng.close()
 
-    def test_job_folds_filtered_listing_only(self, spark, cache_dir):
+    def test_job_folds_filtered_listing_only(self, spark, cache_dir,
+                                             monkeypatch):
         """ADVICE r8 #2: mergeSchema + pathGlobFilter above the job
         threshold must fold footers of the SURVIVING files only — a
         column that exists only in glob-excluded files must not leak
         into the merged schema (the JVM's own filtered fold is the
         oracle)."""
-        from sidecar_spark import Engine
+        from sidecar_spark import Engine, engine
 
         files = [(f"keep{i:02d}.parquet",
                   pa.table({"a": pa.array([i], pa.int64())}))
@@ -470,16 +463,13 @@ class TestDistributedMergeJob:
                .parquet(root))
         assert "z" not in jvm.columns  # oracle sanity
         want = sorted(map(str, jvm.collect()))
-        spark.conf.set("spark.sidecar.mergeSchema.jobThreshold", "4")
+        monkeypatch.setattr(engine, "MERGE_SCHEMA_JOB_THRESHOLD", 4)
+        eng = Engine(spark, conf=_conf(cache_dir))
         try:
-            eng = Engine(spark, conf=_conf(cache_dir))
-            try:
-                got = eng.read_parquet(root, mergeSchema="true",
-                                       pathGlobFilter="keep*")
-                assert got.schema.simpleString() == \
-                    jvm.schema.simpleString()
-                assert sorted(map(str, got.collect())) == want
-            finally:
-                eng.close()
+            got = eng.read_parquet(root, mergeSchema="true",
+                                   pathGlobFilter="keep*")
+            assert got.schema.simpleString() == \
+                jvm.schema.simpleString()
+            assert sorted(map(str, got.collect())) == want
         finally:
-            spark.conf.unset("spark.sidecar.mergeSchema.jobThreshold")
+            eng.close()
