@@ -15,10 +15,12 @@ stream can fetch individual pages (the S3 ranged-GET analog of
 
 from __future__ import annotations
 
+import calendar
 import os
 import posixpath
 import shutil
 import threading
+import time
 from dataclasses import dataclass
 from typing import List, Optional, Tuple
 
@@ -43,6 +45,25 @@ def _mtime_ms(info: pafs.FileInfo) -> int:
     return mt // 1_000_000
 
 
+def _opened_stat(path: str, fh) -> Optional[FileStat]:
+    """The status an open already fetched, or None when the handle
+    carries none. pyarrow's S3 input file keeps the headers of the HEAD
+    its open sent in ``metadata()``: ``str`` keys, ``bytes`` values,
+    ``Last-Modified`` as ISO 8601 UTC (``b"2023-11-14T22:13:21Z"``).
+    Local, HDFS and ``mem://`` handles carry no ``Last-Modified``."""
+    try:
+        modified = fh.metadata().get("Last-Modified")
+        if modified is None:
+            return None
+        stamp, _, frac = modified.decode().rstrip("Z").partition(".")
+        secs = calendar.timegm(time.strptime(stamp, "%Y-%m-%dT%H:%M:%S"))
+        ms = int((frac + "000")[:3]) if frac else 0
+        return FileStat(path=path, length=fh.size(),
+                        mtime=secs * 1000 + ms, is_dir=False)
+    except (AttributeError, ValueError, OSError):
+        return None
+
+
 class RemoteFS:
     """Thin verb layer over a pyarrow FileSystem.
 
@@ -57,6 +78,9 @@ class RemoteFS:
         self.fs = fs
         self.root = root
         self.key_prefix = key_prefix
+        # an S3 open is a HEAD whose result the handle keeps
+        # (``_opened_stat``); other stores' opens carry no status
+        self.status_on_open = isinstance(fs, pafs.S3FileSystem)
 
     def _p(self, path: str) -> str:
         """Scheme-qualified cache key → native in-fs path."""
@@ -146,6 +170,29 @@ class RemoteFS:
     def open_read(self, path: str):
         """Random-access reader supporting read_at(nbytes, offset)."""
         return self.fs.open_input_file(self._p(path))
+
+    def open_stat(self, path: str):
+        """``(status, handle)`` of ``path`` for one remote request
+        where the store allows it — the S3A
+        ``openFile().withFileStatus()`` economy taken the other way
+        round: instead of handing the open a known status, the status
+        is taken from the open. ``handle`` is the opened reader when
+        its open supplied the status, else None and the status is a
+        plain ``stat`` (stores whose opens carry none, and paths that
+        do not open as a file). A missing file is ``(None, None)``."""
+        if not self.status_on_open:
+            return self.stat(path), None
+        try:
+            fh = self.open_read(path)
+        except FileNotFoundError:
+            return None, None
+        except OSError:  # a bucket or a directory marker: not a file
+            return self.stat(path), None
+        st = _opened_stat(path, fh)
+        if st is None:
+            fh.close()
+            return self.stat(path), None
+        return st, fh
 
     def read_range(self, path: str, offset: int, length: int) -> bytes:
         with self.fs.open_input_file(self._p(path)) as f:
@@ -253,18 +300,33 @@ class RemoteFS:
             self.fs.delete_file(self._p(s))
 
 
-def download(fs: RemoteFS, path: str, dest: str) -> None:
-    """Copy the whole file at ``path`` on ``fs`` to the local file
+def download(fs: RemoteFS, st: FileStat, dest: str) -> None:
+    """Copy the version ``st`` of a file on ``fs`` to the local file
     ``dest`` atomically — the one fill copy of both whole-file tiers
     (``FileMirror.materialize``, the write mirror): a chunked read into
     a ``.tmp-`` staging file beside ``dest``, then ``os.replace``, so a
     reader never sees a partial file. A failed copy must not leak its
     staging file: the tiers skip ``.tmp-`` names when they rebuild, so
-    an orphan would sit outside capacity accounting forever."""
+    an orphan would sit outside capacity accounting forever.
+
+    The tiers key a copy by ``st``, so only that version is stored:
+    the opened file must have ``st``'s length and, where the open
+    carries a status, its mtime to the second (some S3-compatible
+    stores list with milliseconds and HEAD with seconds). A file
+    replaced since it was listed raises ``OSError``."""
     tmp = f"{dest}.tmp-{os.getpid()}-{threading.get_ident()}"
     try:
-        with fs.open_read(path) as src, open(tmp, "wb") as dst:
-            shutil.copyfileobj(src, dst, 8 * 1024 * 1024)
+        with fs.open_read(st.path) as src:
+            size, got = src.size(), _opened_stat(st.path, src)
+            if size != st.length or (
+                    got is not None
+                    and got.mtime // 1000 != st.mtime // 1000):
+                raise OSError(
+                    f"{st.path} changed since it was listed: "
+                    f"{st.length} B at {st.mtime} ms, now {size} B"
+                    f" at {got.mtime if got else '?'} ms")
+            with open(tmp, "wb") as dst:
+                shutil.copyfileobj(src, dst, 8 * 1024 * 1024)
         os.replace(tmp, dest)
     except BaseException:
         try:

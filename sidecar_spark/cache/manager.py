@@ -21,15 +21,23 @@ files of a listing are admitted and whether the scan veto applies,
 ``_on_tasks`` decides whether a fill runs on Spark tasks or in this
 process, ``run_tasks`` is the one task fan-out, and
 ``cache.fs.download`` the one atomic whole-file copy.
+
+A file version costs one remote status request on the byte-level
+path: ``open()`` and the post-write refresh take the status from
+opening the file (``RemoteFS.open_stat``), and the manager keeps that
+handle (``_Handles``), so the version's later page misses are one
+ranged GET each.
 """
 
 from __future__ import annotations
 
 import concurrent.futures
+import dataclasses
 import functools
 import os
 import threading
 import time
+from collections import OrderedDict
 from typing import Dict, List, Optional, Tuple
 
 from sidecar_spark.cache.fs import FileStat, RemoteFS, download
@@ -192,7 +200,7 @@ class FileMirror:
             ev.wait()
         try:
             t0 = time.monotonic_ns()
-            download(fs, st.path, lp)
+            download(fs, st, lp)
             with self._lock:
                 self.stats.add("total_read_requests_from_remote")
                 self.stats.add("total_bytes_read_remote", st.length)
@@ -266,6 +274,58 @@ class FileMirror:
                 os.remove(victim)
             except OSError:
                 pass
+
+
+#: remote handles a manager keeps, one per file version (``_Handles``)
+KEPT_HANDLES = 128
+
+
+class _Handles:
+    """Opened remote readers kept per file version ``(path, mtime,
+    length)``: a bounded LRU, so a version's page misses after its
+    first open cost one ranged GET each and no status request. Only
+    handles whose open supplied the version's status are kept — object
+    store handles, which hold no fd and no socket (pyarrow's S3 file
+    is a client plus the HEAD's headers). Reads on one handle may run
+    concurrently. Eviction, ``drop`` and ``close`` only let go of the
+    manager's reference: a handle is freed when its last read ends."""
+
+    def __init__(self, capacity: int) -> None:
+        self.capacity = capacity
+        self._lock = threading.Lock()
+        self._lru: "OrderedDict[tuple, object]" = OrderedDict()
+
+    def read_at(self, version: tuple, offset: int,
+                length: int) -> Optional[bytes]:
+        """The bytes from the kept handle, or None when none is kept."""
+        with self._lock:
+            fh = self._lru.get(version)
+            if fh is None:
+                return None
+            self._lru.move_to_end(version)
+        return fh.read_at(length, offset)
+
+    def put(self, version: tuple, fh) -> None:
+        with self._lock:
+            self._lru[version] = fh
+            self._lru.move_to_end(version)
+            while len(self._lru) > self.capacity:
+                self._lru.popitem(last=False)
+
+    def drop(self, path: str, mtime_length: Optional[tuple] = None,
+             below: bool = False) -> None:
+        """Drop ``path``'s handles, or only the one of that version;
+        with ``below``, also those of every path under ``path/``."""
+        under = path.rstrip("/") + "/"
+        with self._lock:
+            for k in [k for k in self._lru
+                      if (k[0] == path and mtime_length in (None, k[1:]))
+                      or (below and k[0].startswith(under))]:
+                del self._lru[k]
+
+    def close(self) -> None:
+        with self._lock:
+            self._lru.clear()
 
 
 class CacheManager:
@@ -374,6 +434,7 @@ class CacheManager:
         self._refs = 0
         self._pending: List[concurrent.futures.Future] = []
         self._fs_cache: Dict[str, RemoteFS] = {}
+        self._handles = _Handles(KEPT_HANDLES)
         self._closed = False
         if conf.cache_persistent:
             self.load()
@@ -442,6 +503,12 @@ class CacheManager:
 
     def get_file_status(self, uri: str) -> Optional[FileStat]:
         fs, path = self._resolve(uri)
+        return self._status(path, fs.stat)
+
+    def _status(self, path: str, probe) -> Optional[FileStat]:
+        """getFileStatus of ``path``, with ``probe(path)`` as the remote
+        status source: ``RemoteFS.stat`` for ``get_file_status``, which
+        may be asked about a directory, ``_open_status`` for ``open``."""
         # local-first (ASYNC_COPY) read-your-writes: while a moniker
         # marks the upload pending, the remote copy may be absent OR
         # half-written — the mirror is authoritative until sync
@@ -456,7 +523,7 @@ class CacheManager:
         if cached is not None and not self.conf.remote_files_mutable:
             return FileStat(path=path, length=cached.length,
                             mtime=cached.mtime, is_dir=cached.is_dir)
-        st = fs.stat(path)
+        st = probe(path)
         if st is None:
             if self.write_cache is not None:
                 lp = self.write_cache.local_path(path)
@@ -489,7 +556,18 @@ class CacheManager:
             self.meta.put_stat(st)
         return st
 
+    def _open_status(self, fs: RemoteFS, path: str) -> Optional[FileStat]:
+        """The remote status of ``path`` from opening it
+        (``RemoteFS.open_stat``); a handle whose open supplied the
+        status is kept for the version it names."""
+        st, fh = fs.open_stat(path)
+        if fh is not None:
+            self._handles.put((path, st.mtime, st.length), fh)
+        return st
+
     def _invalidate_async(self, path: str, old: FileMeta) -> None:
+        self._handles.drop(path, (old.mtime, old.length))
+
         def work():
             if self.pages is not None:
                 self.pages.delete_file_pages(path, old.mtime, old.length)
@@ -510,7 +588,7 @@ class CacheManager:
 
     def open(self, uri: str) -> CachingInputStream:
         fs, path = self._resolve(uri)
-        st = self.get_file_status(uri)
+        st = self._status(path, functools.partial(self._open_status, fs))
         if st is None:
             raise FileNotFoundError(uri)
         self.stats.add("total_files_opened")
@@ -526,22 +604,28 @@ class CacheManager:
             self.stats.add("total_files_opened_in_write_cache")
             wc_read = lambda off, ln: self.write_cache.read_range(path, off, ln)  # noqa: E731
 
-        # lazy remote stream (the reference wraps both streams in
-        # Callables, :1599-1608): with a warm cache or a pending
-        # local-first write the remote may never be opened at all
-        reader_box: list = []
+        # the remote reader: the manager's kept handle of this version,
+        # else the stream's own, opened lazily (the reference wraps both
+        # streams in Callables, :1599-1608) — with a warm cache or a
+        # pending local-first write the remote may never be opened
+        version = (path, st.mtime, st.length)
+        owned: list = []
 
         def remote_read(off: int, ln: int) -> bytes:
-            if not reader_box:
-                reader_box.append(fs.open_read(path))
-            return reader_box[0].read_at(ln, off)
+            if not owned:
+                data = self._handles.read_at(version, off, ln)
+                if data is not None:
+                    return data
+                owned.append(fs.open_read(path))
+            return owned[0].read_at(ln, off)
 
         def release_remote() -> None:
-            # stream.close() releases the lazily-opened remote handle
+            # stream.close() releases a handle the stream opened itself
             # (otherwise the fd/connection lives until GC — a leak on
-            # long-lived drivers opening many cache-missing files)
-            if reader_box:
-                reader_box.pop().close()
+            # long-lived drivers opening many cache-missing files); a
+            # kept handle stays with the manager
+            if owned:
+                owned.pop().close()
 
         return CachingInputStream(
             path=path, mtime=st.mtime, length=st.length,
@@ -557,6 +641,7 @@ class CacheManager:
     def create(self, uri: str) -> CachingOutputStream:
         fs, path = self._resolve(uri)
         self.stats.add("total_files_created")
+        self._handles.drop(path)
         # overwrite coherence (deliberate hardening over the reference,
         # whose metaSave is put-if-absent — SidecarCachingFileSystem.java:
         # 1283-1289 — leaving stale meta/pages when an EXISTING path is
@@ -684,7 +769,9 @@ class CacheManager:
                             dst.write(chunk)
                     finally:
                         dst.close()
-            st = fs.stat(path)
+            # the refresh opens the new version (one HEAD on S3), and
+            # the manager keeps the handle for the version's reads
+            st = self._open_status(fs, path)
             if st is not None:
                 if old_meta is not None:
                     # overwrite of a known file: refresh the entry and
@@ -726,6 +813,7 @@ class CacheManager:
     def delete(self, uri: str, recursive: bool = False) -> bool:
         fs, path = self._resolve(uri)
         meta = self.meta.get(path)
+        self._handles.drop(path, below=recursive)
         ok = fs.delete(path, recursive=recursive)
         self.stats.add("total_files_deleted")
         self.meta.delete(path)
@@ -750,6 +838,8 @@ class CacheManager:
             if dst_st is not None and not dst_st.is_dir:
                 dst_meta = FileMeta(dst_st.mtime, dst_st.length,
                                     dst_st.is_dir)
+        self._handles.drop(src, below=True)
+        self._handles.drop(dst, below=True)
         ok = fs.rename(src, dst)
         if not ok:
             return False
@@ -1164,6 +1254,7 @@ class CacheManager:
         if save and self.conf.cache_persistent:
             self.save()
         self.pool.shutdown(wait=True)
+        self._handles.close()
         with CacheManager._instances_lock:
             key = CacheManager._key(self.conf)
             if CacheManager._instances.get(key) is self:
@@ -1254,7 +1345,7 @@ def _mirror_write(mgr: CacheManager, st: FileStat) -> bool:
         fs, p = mgr._resolve(st.path)  # noqa: SLF001
         cp = mgr.write_cache.caching_path(p)
         os.makedirs(os.path.dirname(cp), exist_ok=True)
-        download(fs, p, cp)
+        download(fs, dataclasses.replace(st, path=p), cp)
         mgr.write_cache.register(cp, st.length)
         mgr.meta.save(p, FileMeta(st.mtime, st.length, False))
         mgr.write_cache.check_eviction()

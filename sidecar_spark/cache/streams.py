@@ -92,7 +92,7 @@ class CachingInputStream:
         self._closed = True
         if self._on_close is not None:
             try:
-                self._on_close()  # release the lazily-opened remote
+                self._on_close()  # release a remote handle it owns
             except Exception:  # noqa: BLE001 — close is best-effort
                 pass
 

@@ -5,6 +5,10 @@ import tempfile
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+# the S3 tests talk to a localhost stub with explicit keys: without
+# this, every new S3FileSystem first waits seconds for the AWS SDK's
+# EC2 instance-metadata lookup to time out
+os.environ.setdefault("AWS_EC2_METADATA_DISABLED", "true")
 
 
 @pytest.fixture()

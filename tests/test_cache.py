@@ -2163,3 +2163,233 @@ class TestListFilesMutationRace:
             assert len(paths) == 1
         finally:
             mgr.close(save=False)
+
+
+@pytest.fixture()
+def s3_stub():
+    from sidecar_spark.testing.s3server import S3StubServer
+
+    with S3StubServer() as srv:
+        os.environ["SIDECAR_S3_ENDPOINT"] = srv.endpoint
+        try:
+            yield srv
+        finally:
+            os.environ.pop("SIDECAR_S3_ENDPOINT", None)
+
+
+def _wire(srv):
+    """Request methods on the stub's journal since the last call."""
+    with srv.store.lock:
+        out = [m for m, _ in srv.store.requests]
+        srv.store.requests.clear()
+    return out
+
+
+class TestOneHeadPerVersion:
+    """A file version costs one remote HEAD on the byte-level path:
+    ``open()`` and the post-write refresh take its status from opening
+    it, and the manager keeps that handle for the version's reads."""
+
+    URI = "s3://heads/obj"
+
+    def _mgr(self, cache_dir, **kw):
+        base = dict(cache_dir=cache_dir, data_cache_type="file",
+                    cache_persistent=False, data_page_size=PAGE,
+                    io_buffer_size=PAGE)
+        base.update(kw)
+        return CacheManager(SidecarConfig.create(**base))
+
+    def _publish(self, data):
+        fs, path = RemoteFS.from_uri(self.URI)
+        fs.write_all(path, data)
+
+    def test_cold_open_read_is_one_head_one_get(self, cache_dir, s3_stub):
+        data = os.urandom(8 * PAGE)
+        self._publish(data)
+        mgr = self._mgr(cache_dir)
+        try:
+            _wire(s3_stub)
+            s = mgr.open(self.URI)
+            assert s.read_at(10, 100) == data[10:110]
+            s.close()
+            assert _wire(s3_stub) == ["HEAD", "GET"]
+        finally:
+            mgr.close(save=False)
+
+    def test_page_miss_of_known_version_is_one_get(self, cache_dir,
+                                                   s3_stub):
+        data = os.urandom(8 * PAGE)
+        self._publish(data)
+        mgr = self._mgr(cache_dir)
+        try:
+            s = mgr.open(self.URI)
+            s.read_at(0, 100)
+            s.close()
+            _wire(s3_stub)
+            s = mgr.open(self.URI)
+            assert s.read_at(5 * PAGE, 100) == data[5 * PAGE:5 * PAGE + 100]
+            s.close()
+            assert _wire(s3_stub) == ["GET"]
+        finally:
+            mgr.close(save=False)
+
+    def test_write_refresh_serves_next_read(self, cache_dir, s3_stub):
+        self._publish(os.urandom(4 * PAGE))
+        mgr = self._mgr(cache_dir, write_cache_mode="disabled")
+        try:
+            s = mgr.open(self.URI)
+            s.read_at(0, 100)
+            s.close()
+            new = os.urandom(6 * PAGE)
+            _wire(s3_stub)
+            out = mgr.create(self.URI)
+            out.write(new)
+            out.close()
+            assert _wire(s3_stub) == ["POST", "PUT", "POST", "HEAD"]
+            s = mgr.open(self.URI)
+            assert s.length == len(new)
+            assert s.read_at(PAGE, 100) == new[PAGE:PAGE + 100]
+            s.close()
+            assert _wire(s3_stub) == ["GET"]
+        finally:
+            mgr.close(save=False)
+
+    def test_mutable_republish_between_opens(self, cache_dir, s3_stub):
+        old = os.urandom(4 * PAGE)
+        self._publish(old)
+        mgr = self._mgr(cache_dir, remote_files_mutable=True)
+        try:
+            s = mgr.open(self.URI)
+            assert s.read_at(0, 100) == old[:100]
+            s.close()
+            new = os.urandom(5 * PAGE)
+            self._publish(new)
+            with s3_stub.store.lock:  # a strictly newer Last-Modified
+                s3_stub.store.buckets["heads"]["obj"].mtime += 10
+            s = mgr.open(self.URI)
+            assert s.length == len(new)
+            assert s.read_at(0, 100) == new[:100]
+            s.close()
+        finally:
+            mgr.close(save=False)
+
+    def test_delete_then_open_raises(self, cache_dir, s3_stub):
+        self._publish(os.urandom(2 * PAGE))
+        mgr = self._mgr(cache_dir)
+        try:
+            s = mgr.open(self.URI)
+            s.read_at(0, 100)
+            s.close()
+            assert mgr.delete(self.URI)
+            with pytest.raises(FileNotFoundError):
+                mgr.open(self.URI)
+        finally:
+            mgr.close(save=False)
+
+    def test_threads_share_one_version(self, cache_dir, s3_stub):
+        data = os.urandom(80 * PAGE)
+        self._publish(data)
+        mgr = self._mgr(cache_dir)
+        try:
+            mgr.open(self.URI).close()
+            _wire(s3_stub)
+            bad = []
+
+            def reader(t):
+                for i in range(10):
+                    off = (t * 10 + i) * PAGE + t
+                    s = mgr.open(self.URI)
+                    if s.read_at(off, 100) != data[off:off + 100]:
+                        bad.append(off)
+                    s.close()
+
+            threads = [threading.Thread(target=reader, args=(t,))
+                       for t in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in threads)
+            assert bad == []
+            assert _wire(s3_stub) == ["GET"] * 80
+        finally:
+            mgr.close(save=False)
+
+    def test_delete_dir_then_open_child_raises(self, cache_dir, s3_stub):
+        """A recursive delete drops the kept handles of the files below
+        the directory: a child's page miss reopens the remote and finds
+        it gone instead of reading through the deleted version's
+        handle."""
+        child = "s3://heads/dir/child"
+        fs, path = RemoteFS.from_uri(child)
+        fs.write_all(path, os.urandom(4 * PAGE))
+        mgr = self._mgr(cache_dir)
+        try:
+            s = mgr.open(child)
+            s.read_at(0, 100)
+            s.close()
+            assert mgr.delete("s3://heads/dir", recursive=True)
+            with pytest.raises(FileNotFoundError):
+                s = mgr.open(child)
+                try:
+                    s.read_at(3 * PAGE, 100)
+                finally:
+                    s.close()
+        finally:
+            mgr.close(save=False)
+
+    def test_kept_handles_bounded_and_released(self):
+        import gc
+        import weakref
+
+        from sidecar_spark.cache.manager import _Handles
+
+        class Fh:
+            def read_at(self, n, off):
+                return b"x" * n
+
+        def put(h, version):
+            fh = Fh()
+            h.put(version, fh)
+            return weakref.ref(fh)
+
+        h = _Handles(2)
+        a = put(h, ("p", 1, 1))
+        b = put(h, ("q", 1, 1))
+        c = put(h, ("r", 1, 1))  # evicts the least recently used
+        d = put(h, ("d/x", 1, 1))  # evicts q
+        gc.collect()
+        assert a() is None and b() is None and c() is not None
+        assert h.read_at(("p", 1, 1), 0, 1) is None
+        assert h.read_at(("r", 1, 1), 0, 2) == b"xx"
+        h.drop("d")
+        assert d() is not None  # not below "d" without ``below``
+        h.drop("d", below=True)
+        gc.collect()
+        assert d() is None
+        h.close()
+        gc.collect()
+        assert c() is None
+
+
+class TestMirrorFillVersion:
+    def test_stale_listing_fills_nothing(self, cache_dir, s3_stub):
+        """The mirror stores only the version it was asked for: a file
+        republished with a new length since it was listed is not
+        copied under the listed key, and resolves to its remote path."""
+        fs, path = RemoteFS.from_uri("s3://lake/t/part-0.parquet")
+        fs.write_all(path, b"PAR1" + b"a" * 100)
+        mgr = CacheManager(SidecarConfig.create(
+            cache_dir=cache_dir, data_cache_type="file",
+            cache_persistent=False))
+        try:
+            stale = mgr.list_files("s3://lake/t")
+            assert [st.length for st in stale] == [104]
+            fs.write_all(path, b"PAR1" + b"b" * 300)
+            got = mgr.resolve_for_spark("s3://lake/t", files=stale)
+            assert got == [path]
+            assert mgr.mirror.lookup(path, stale[0].mtime) is None
+            assert not os.path.exists(
+                mgr.mirror._local(path, stale[0].mtime))
+        finally:
+            mgr.close(save=False)
