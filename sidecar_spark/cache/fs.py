@@ -234,18 +234,26 @@ class RemoteFS:
         """Hadoop ``FileSystem.delete`` semantics: a directory with
         ``recursive=False`` is deleted only when EMPTY — a non-empty
         one raises (callers use recursive=False as a safety guard;
-        silently wiping the contents would defeat it)."""
-        st = self.stat(path)
-        if st is None:
-            return False
+        silently wiping the contents would defeat it).
+
+        A file is deleted outright: on S3 that is pyarrow's HEAD and
+        the DELETE, with no status request of our own. Only when that
+        fails does one LIST tell a directory from a missing path."""
         p = self._p(path)
-        if st.is_dir:
-            if not recursive and self.list(path, recursive=False):
-                raise OSError(
-                    f"directory not empty (recursive=False): {path}")
-            self.fs.delete_dir(p)
-        else:
+        try:
             self.fs.delete_file(p)
+            return True
+        except OSError as e:  # missing, a directory, or a real failure
+            failed = e
+        try:
+            children = self.fs.get_file_info(pafs.FileSelector(p))
+        except (FileNotFoundError, NotADirectoryError):
+            if isinstance(failed, FileNotFoundError):
+                return False
+            raise failed from None
+        if children and not recursive:
+            raise OSError(f"directory not empty (recursive=False): {path}")
+        self.fs.delete_dir(p)
         return True
 
     def rename(self, src: str, dst: str) -> bool:

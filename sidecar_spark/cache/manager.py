@@ -27,6 +27,9 @@ path: ``open()`` and the post-write refresh take the status from
 opening the file (``RemoteFS.open_stat``), and the manager keeps that
 handle (``_Handles``), so the version's later page misses are one
 ranged GET each.
+
+A file version is dropped from every version-keyed tier in one place:
+``_retire``, called by the status check and every mutation verb.
 """
 
 from __future__ import annotations
@@ -312,16 +315,9 @@ class _Handles:
             while len(self._lru) > self.capacity:
                 self._lru.popitem(last=False)
 
-    def drop(self, path: str, mtime_length: Optional[tuple] = None,
-             below: bool = False) -> None:
-        """Drop ``path``'s handles, or only the one of that version;
-        with ``below``, also those of every path under ``path/``."""
-        under = path.rstrip("/") + "/"
+    def drop(self, version: tuple) -> None:
         with self._lock:
-            for k in [k for k in self._lru
-                      if (k[0] == path and mtime_length in (None, k[1:]))
-                      or (below and k[0].startswith(under))]:
-                del self._lru[k]
+            self._lru.pop(version, None)
 
     def close(self) -> None:
         with self._lock:
@@ -531,28 +527,22 @@ class CacheManager:
                     lst = os.stat(lp)
                     return FileStat(path=path, length=lst.st_size,
                                     mtime=int(lst.st_mtime * 1000), is_dir=False)
-            if cached is not None:
-                self.meta.delete(path)
-                self._invalidate_async(path, cached)
+            self._retire(path)
             return None
-        if cached is not None and cached.mtime != st.mtime:
-            # file changed: update meta, async-invalidate stale pages
-            self._invalidate_async(path, cached)
-            self.meta.update(path, FileMeta(st.mtime, st.length, st.is_dir))
-            if self.write_cache is not None:
-                # the write-cache mirror is the FIRST read tier
-                # (readFromWriteCacheFS order) — a stale synced mirror
-                # of the remotely-mutated file would keep serving old
-                # bytes forever. Only a SYNCED mirror may be dropped:
-                # a moniker marks either a pending ASYNC upload (the
-                # local-first branch above serves it) or a create()
-                # still mid-write (not yet in the file list) — in both
-                # cases the local bytes are the only copy of newer
-                # data and unlinking them would lose the write.
-                cp = self.write_cache.caching_path(path)
-                if not self.write_cache.has_moniker(cp):
-                    self.write_cache.delete_file(path)
-        elif cached is None and not st.is_dir:
+        if cached is not None and (cached.mtime, cached.length) \
+                != (st.mtime, st.length):
+            # the file changed: the write-cache mirror is the FIRST read
+            # tier (readFromWriteCacheFS order) and would keep serving
+            # the old bytes
+            self._retire(path)
+            # only a SYNCED mirror may be dropped: a moniker marks a
+            # pending ASYNC upload or a create() still mid-write, whose
+            # local bytes are the only copy of newer data
+            if self.write_cache is not None and not self.write_cache \
+                    .has_moniker(self.write_cache.caching_path(path)):
+                self.write_cache.delete_file(path)
+            cached = None
+        if cached is None and not st.is_dir:
             self.meta.put_stat(st)
         return st
 
@@ -565,21 +555,27 @@ class CacheManager:
             self._handles.put((path, st.mtime, st.length), fh)
         return st
 
-    def _invalidate_async(self, path: str, old: FileMeta) -> None:
-        self._handles.drop(path, (old.mtime, old.length))
-
-        def work():
+    def _retire(self, path: str, below: bool = False) -> None:
+        """Drop the cached version of ``path`` from every version-keyed
+        tier: its meta entry, kept handles, pages and mirror copy; with
+        ``below``, also those of every path under ``path/``. The one
+        coherence step of the mutation verbs and the status check. It
+        runs synchronously, and a version is ``(mtime, length)``: a
+        republish within one mtime tick at a new length is a new
+        version too. The write cache is keyed by path, not version, so
+        callers drop it themselves."""
+        for p, old in self.meta.pop(path, below=below):
+            self._handles.drop((p, old.mtime, old.length))
             if self.pages is not None:
-                self.pages.delete_file_pages(path, old.mtime, old.length)
+                self.pages.delete_file_pages(p, old.mtime, old.length)
             if self.mirror is not None:
-                self.mirror.invalidate(path, old.mtime)
-        self._submit(work)
+                self.mirror.invalidate(p, old.mtime)
 
     def _submit(self, fn) -> None:
         self._pending.append(self.pool.submit(fn))
 
     def drain(self) -> None:
-        """Wait for all async invalidation/upload work (test aid)."""
+        """Wait for all async upload work (test aid)."""
         pending, self._pending = self._pending, []
         for f in pending:
             f.result()
@@ -641,13 +637,6 @@ class CacheManager:
     def create(self, uri: str) -> CachingOutputStream:
         fs, path = self._resolve(uri)
         self.stats.add("total_files_created")
-        self._handles.drop(path)
-        # overwrite coherence (deliberate hardening over the reference,
-        # whose metaSave is put-if-absent — SidecarCachingFileSystem.java:
-        # 1283-1289 — leaving stale meta/pages when an EXISTING path is
-        # re-created within one mtime(ms) tick): remember the prior
-        # cache identity so close can metaUpdate and purge its pages
-        old_meta = self.meta.get(path)
         caching_fh = None
         caching_path = None
         if self.write_cache is not None and not self.conf.write_excluded(path) \
@@ -660,8 +649,7 @@ class CacheManager:
         remote_fh = None if local_first else fs.open_write(path)
 
         def on_close(stream: CachingOutputStream) -> None:
-            self._closing_remote(fs, path, caching_path, stream,
-                                 old_meta=old_meta)
+            self._closing_remote(fs, path, caching_path, stream)
 
         def on_cache_error(_exc: Exception) -> None:
             # reportException: delete half-written cache file, keep remote
@@ -696,10 +684,9 @@ class CacheManager:
         a fresh moniker.  A file with no mirror appends remote-only
         (the reference's cacheOut=null fallback).  Cloud object stores
         reject remote append (OSError from RemoteFS.open_append), as
-        in the reference.  Data pages are (path, mtime)-addressed, so
-        the close-time meta refresh — recording the new mtime/length —
-        makes every pre-append page unreachable: append is
-        self-invalidating, like rename."""
+        in the reference.  The close retires the pre-append version
+        (``_retire``), seeded from the stat taken here when the file
+        has no meta entry, then records the new one."""
         fs, path = self._resolve(uri)
         st = fs.stat(path)
         if st is None or st.is_dir:
@@ -712,27 +699,13 @@ class CacheManager:
                 and self.conf.should_cache(path, "write"):
             caching_fh, caching_path = self.write_cache.open_append(path)
 
-        old_mtime, old_length = st.mtime, st.length
-
         def on_close(stream: CachingOutputStream) -> None:
             stream.remote_fh.close()
+            self.meta.save(path, FileMeta(st.mtime, st.length, False))
+            self._retire(path)
             nst = fs.stat(path)
             if nst is not None:
-                # metaUpdate, not metaSave: the entry exists (save is
-                # put-if-absent) and must move to the new mtime/length
-                self.meta.update(path, FileMeta(nst.mtime, nst.length,
-                                                nst.is_dir))
-                if nst.mtime == old_mtime:
-                    # append completed within the same mtime(ms) tick:
-                    # (path, mtime)-addressed pages AND the file
-                    # mirror would NOT self-invalidate — evict both
-                    # explicitly (the mirror copy is short by the
-                    # appended bytes)
-                    if self.pages is not None:
-                        self.pages.delete_file_pages(path, old_mtime,
-                                                     old_length)
-                    if self.mirror is not None:
-                        self.mirror.invalidate(path, old_mtime)
+                self.meta.put_stat(nst)
             if caching_path is not None and self.write_cache is not None:
                 self.write_cache.register_append(caching_path,
                                                  stream.bytes_written)
@@ -752,14 +725,18 @@ class CacheManager:
 
     def _closing_remote(self, fs: RemoteFS, path: str,
                         caching_path: Optional[str],
-                        stream: CachingOutputStream,
-                        old_meta: Optional[FileMeta] = None) -> None:
+                        stream: CachingOutputStream) -> None:
         def finish_remote() -> None:
             if stream.remote_fh is not None:
                 stream.remote_fh.close()
             elif caching_path is not None:
-                # ASYNC_COPY upload: copy the finished cache file to remote
-                with open(caching_path, "rb") as src:
+                # ASYNC_COPY upload: copy the finished cache file to
+                # remote, unless a delete, rename or concat dropped it
+                try:
+                    src = open(caching_path, "rb")
+                except FileNotFoundError:
+                    return
+                with src:
                     dst = fs.open_write(path)
                     try:
                         while True:
@@ -769,27 +746,15 @@ class CacheManager:
                             dst.write(chunk)
                     finally:
                         dst.close()
-            # the refresh opens the new version (one HEAD on S3), and
-            # the manager keeps the handle for the version's reads
+            # an overwrite retires the version it replaced (a hardening
+            # over the reference, whose put-if-absent metaSave,
+            # SidecarCachingFileSystem.java:1283-1289, keeps it); the
+            # refresh opens the new version (one HEAD on S3), and the
+            # manager keeps the handle for the version's reads
+            self._retire(path)
             st = self._open_status(fs, path)
             if st is not None:
-                if old_meta is not None:
-                    # overwrite of a known file: refresh the entry and
-                    # purge pages AND the file mirror keyed by its
-                    # previous (mtime, length) identity — both would
-                    # otherwise survive a same-ms overwrite
-                    # (metaUpdate + dataDeleteFile, the delete/rename
-                    # coherence applied to create)
-                    self.meta.update(
-                        path, FileMeta(st.mtime, st.length, st.is_dir))
-                    if self.pages is not None:
-                        self.pages.delete_file_pages(
-                            path, old_meta.mtime, old_meta.length)
-                    if self.mirror is not None:
-                        self.mirror.invalidate(path, old_meta.mtime)
-                else:
-                    self.meta.save(
-                        path, FileMeta(st.mtime, st.length, st.is_dir))
+                self.meta.put_stat(st)
             if caching_path is not None and self.write_cache is not None:
                 self.write_cache.delete_moniker(caching_path)
                 self.write_cache.check_eviction()
@@ -812,57 +777,33 @@ class CacheManager:
 
     def delete(self, uri: str, recursive: bool = False) -> bool:
         fs, path = self._resolve(uri)
-        meta = self.meta.get(path)
-        self._handles.drop(path, below=recursive)
         ok = fs.delete(path, recursive=recursive)
         self.stats.add("total_files_deleted")
-        self.meta.delete(path)
-        if meta is not None:
-            self._invalidate_async(path, meta)
+        self._retire(path, below=recursive)
         if self.write_cache is not None:
-            self.write_cache.delete_file(path)
+            self.write_cache.delete_file(path, below=recursive)
         return ok
 
     def rename(self, src_uri: str, dst_uri: str) -> bool:
         fs, src = self._resolve(src_uri)
         _, dst = self._resolve(dst_uri)
-        meta = self.meta.get(src)
-        # capture the overwritten destination's cache identity BEFORE the
-        # move: POSIX rename preserves the source inode's mtime, so the
-        # new (dst, mtime) page key can collide with the old dst file's
-        # (two creates in the same mtime-ms tick) and stale dst pages
-        # would be served — purge them explicitly, like delete does
-        dst_meta = self.meta.get(dst)
-        if dst_meta is None and src != dst:
-            dst_st = fs.stat(dst)
-            if dst_st is not None and not dst_st.is_dir:
-                dst_meta = FileMeta(dst_st.mtime, dst_st.length,
-                                    dst_st.is_dir)
-        self._handles.drop(src, below=True)
-        self._handles.drop(dst, below=True)
-        ok = fs.rename(src, dst)
-        if not ok:
+        if src != dst:
+            # POSIX rename keeps the source's mtime, so an overwritten
+            # destination of the same ms shares its page keys; _retire
+            # finds its pages only through a meta entry, and pages
+            # outlive a restart, so seed one from the remote
+            self._seed(fs, dst)
+        if not fs.rename(src, dst):
             return False
-        # move meta entry: delete src AND the destination's old entry
-        # (put_stat below may be skipped for write-excluded paths, and
-        # a stale dst meta would keep serving the pre-rename identity)
-        self.meta.delete(src)
-        self.meta.delete(dst)
         st = fs.stat(dst)
+        below = st is None or st.is_dir
+        self._retire(src, below=below)
+        self._retire(dst, below=below)
         if st is not None and not self.conf.write_excluded(dst):
             self.meta.put_stat(st)
-        if meta is not None:
-            self._invalidate_async(src, meta)
-        if dst_meta is not None and src != dst:
-            self._invalidate_async(dst, dst_meta)
-        if self.write_cache is not None:
-            if src != dst:
-                # drop the old dst mirror first: write_cache.rename
-                # would otherwise leave it (src unmirrored) or leak its
-                # file-list accounting (shutil.move overwrites the file
-                # but not the dst list entry)
-                self.write_cache.delete_file(dst)
-            self.write_cache.rename(src, dst)
+        if self.write_cache is not None and src != dst:
+            self.write_cache.delete_file(dst, below=below)
+            self.write_cache.rename(src, dst, below=below)
         return True
 
     def rename_with_options(self, src_uri: str, dst_uri: str, *,
@@ -893,36 +834,25 @@ class CacheManager:
         fs.mkdirs(path)
 
     def concat(self, target_uri: str, source_uris: List[str]) -> None:
-        """concat (:1560-1586): purge sources from caches, delegate.
-
-        The TARGET's content changes too — purge its every tier, not
-        just meta: its pre-concat write-cache mirror is the first read
-        tier and would keep serving the short pre-concat bytes, and a
-        same-ms concat would leave its (path, mtime) pages/mirror
-        reachable."""
+        """concat (:1560-1586): delegate, then retire the sources and
+        the target, whose bytes changed too — in every tier, the
+        write-cache mirror included (the first read tier)."""
         fs, target = self._resolve(target_uri)
-        tgt_meta = self.meta.get(target)
-        if tgt_meta is None:
-            tgt_st = fs.stat(target)
-            if tgt_st is not None and not tgt_st.is_dir:
-                tgt_meta = FileMeta(tgt_st.mtime, tgt_st.length,
-                                    tgt_st.is_dir)
-        srcs = []
-        for s in source_uris:
-            _, sp = self._resolve(s)
-            srcs.append(sp)
-            meta = self.meta.get(sp)
-            self.meta.delete(sp)
-            if meta is not None:
-                self._invalidate_async(sp, meta)
-            if self.write_cache is not None:
-                self.write_cache.delete_file(sp)
+        self._seed(fs, target)
+        srcs = [self._resolve(s)[1] for s in source_uris]
         fs.concat(target, srcs)
-        self.meta.delete(target)
-        if tgt_meta is not None:
-            self._invalidate_async(target, tgt_meta)
-        if self.write_cache is not None:
-            self.write_cache.delete_file(target)
+        for p in srcs + [target]:
+            self._retire(p)
+            if self.write_cache is not None:
+                self.write_cache.delete_file(p)
+
+    def _seed(self, fs: RemoteFS, path: str) -> None:
+        """Give a file without a meta entry one from the remote, so
+        ``_retire`` reaches the pages an earlier process left."""
+        if self.meta.get(path) is None:
+            st = fs.stat(path)
+            if st is not None and not st.is_dir:
+                self.meta.put_stat(st)
 
     def list_files(self, uri: str, suffix: str = "",
                    spark=None) -> List[FileStat]:

@@ -4,9 +4,9 @@ protocol of ``getFileStatus`` (:1529-1550).
 
 Caches (length, mtime, is_dir) per path so hot paths never pay a remote
 ``getFileStatus`` round-trip. Keys are MD5(path) like the reference's
-(we keep the plain path alongside for introspection). mtime-mismatch
-triggers the caller to invalidate that file's pages (stale page keys
-also self-invalidate because mtime is part of the page key).
+(we keep the plain path alongside for introspection). An entry names
+the cached version of its file; ``pop`` hands the versions it removes
+to the caller, which drops their pages and copies.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ import json
 import os
 import threading
 from dataclasses import dataclass
-from typing import Dict, Optional
+from typing import Dict, List, Optional, Tuple
 
 from sidecar_spark.cache.fs import FileStat
 from sidecar_spark.util.hashing import meta_key
@@ -34,10 +34,7 @@ class MetaCache:
         self._d: Dict[str, FileMeta] = {}  # md5(path) -> meta
         self._paths: Dict[str, str] = {}  # md5(path) -> path (for snapshot)
 
-    # ---- CRUD (metaExists/metaPut/metaGet/metaDelete/metaSave/metaUpdate)
-
-    def exists(self, path: str) -> bool:
-        return meta_key(path) in self._d
+    # ---- CRUD (metaPut/metaGet/metaSave; ``pop`` is metaDelete)
 
     def put(self, path: str, meta: FileMeta) -> None:
         k = meta_key(path)
@@ -58,17 +55,16 @@ class MetaCache:
     def get(self, path: str) -> Optional[FileMeta]:
         return self._d.get(meta_key(path))
 
-    def delete(self, path: str) -> bool:
-        k = meta_key(path)
+    def pop(self, path: str, below: bool = False) -> List[Tuple[str, FileMeta]]:
+        """Remove and return ``path``'s entry and, with ``below``, the
+        entry of every path under ``path/``."""
+        under = path.rstrip("/") + "/"
         with self._lock:
-            self._paths.pop(k, None)
-            return self._d.pop(k, None) is not None
-
-    def update(self, path: str, meta: FileMeta) -> None:
-        """delete+put (metaUpdate, :1206-1212)."""
-        with self._lock:
-            self.delete(path)
-            self.put(path, meta)
+            keys = [meta_key(path)] + ([k for k, p in self._paths.items()
+                                        if p.startswith(under)]
+                                       if below else [])
+            return [(self._paths.pop(k), self._d.pop(k))
+                    for k in keys if k in self._d]
 
     def put_stat(self, st: FileStat) -> None:
         self.put(st.path, FileMeta(mtime=st.mtime, length=st.length, is_dir=st.is_dir))

@@ -18,7 +18,7 @@ import os
 import shutil
 import threading
 import time
-from typing import Optional, Tuple
+from typing import List, Optional
 from urllib.parse import urlparse
 
 from sidecar_spark.config import SidecarConfig
@@ -224,36 +224,42 @@ class WriteCache:
 
     # ---- mutation coherence ---------------------------------------------------
 
-    def delete_file(self, remote_uri: str) -> bool:
-        cp = self.caching_path(remote_uri)
-        ln = self.file_list.remove(cp)
-        self.delete_moniker(cp)
-        existed = os.path.exists(cp)
-        if existed:
-            try:
-                os.remove(cp)
-            except OSError:
-                pass
-        if ln is not None:
-            with self._size_lock:
-                self._size -= ln
-        return existed
+    def _listed(self, caching_path: str, below: bool) -> List[str]:
+        """``caching_path`` and, with ``below``, every listed mirror
+        under it."""
+        under = caching_path.rstrip(os.sep) + os.sep
+        return [caching_path] + ([cp for cp, _ in self.file_list.items()
+                                  if cp.startswith(under)] if below else [])
 
-    def rename(self, src_uri: str, dst_uri: str) -> bool:
-        """Mirror a remote rename: move the cached file and fix the file
-        list entry (rename handling, :1807-1857)."""
-        src_cp = self.caching_path(src_uri)
-        dst_cp = self.caching_path(dst_uri)
-        ln = self.file_list.remove(src_cp)
-        if ln is None or not os.path.exists(src_cp):
-            return False
-        os.makedirs(os.path.dirname(dst_cp), exist_ok=True)
-        shutil.move(src_cp, dst_cp)
-        if self.has_moniker(src_cp):
-            self.delete_moniker(src_cp)
-            self.create_moniker(dst_cp)
-        self.file_list.put(dst_cp, ln)
-        return True
+    def delete_file(self, remote_uri: str, below: bool = False) -> None:
+        """Drop the mirror of ``remote_uri`` and, with ``below``, every
+        listed mirror under it, monikers included: a pending upload of
+        a dropped mirror then finds nothing to publish."""
+        for cp in self._listed(self.caching_path(remote_uri), below):
+            self.drop_mirror(cp)
+
+    def rename(self, src_uri: str, dst_uri: str, below: bool = True) -> bool:
+        """Mirror a remote rename (rename handling, :1807-1857): move
+        the mirror of ``src_uri`` and, with ``below``, each listed
+        mirror under it to its place under ``dst_uri``, with its moniker
+        and file-list entry. True when a mirror moved."""
+        src = self.caching_path(src_uri)
+        dst = self.caching_path(dst_uri)
+        moved = False
+        for cp in self._listed(src, below):
+            ln, to = self.file_list.get(cp), dst + cp[len(src):]
+            if ln is None or to == cp or not os.path.exists(cp):
+                continue
+            self.drop_mirror(to)  # an overwritten mirror and its bytes
+            os.makedirs(os.path.dirname(to), exist_ok=True)
+            shutil.move(cp, to)
+            if self.has_moniker(cp):
+                self.delete_moniker(cp)
+                self.create_moniker(to)
+            self.file_list.remove(cp)
+            self.file_list.put(to, ln)
+            moved = True
+        return moved
 
     # ---- capacity / eviction ------------------------------------------------
 

@@ -496,30 +496,6 @@ def observed_metrics(obs, timeout_s: float = OBSERVATION_TIMEOUT_S) -> dict:
     return obs.get
 
 
-def connected_components(edges: DataFrame, nodes: DataFrame,
-                         id_col: str = "doc_id",
-                         src_col: str = "doc_a", dst_col: str = "doc_b",
-                         max_iter: int = 50) -> DataFrame:
-    """Connected components by iterative min-label propagation: every
-    node starts labeled with its own id; each round every node takes
-    the minimum label among itself and its neighbors; at fixpoint the
-    label is the component's minimum id — the canonical duplicate-
-    cluster id.
-
-    This is the transitive-closure step exact/LSH dedup needs (A~B and
-    B~C must land A,B,C in ONE cluster even when A~C was never a
-    candidate pair). Rounds needed = graph diameter; near-dup graphs
-    are unions of small cliques, so 2-3 rounds in practice. Each round
-    is one shuffle join + one aggregation on (id, label) pairs only;
-    ``localCheckpoint`` cuts the lineage so plan size stays constant
-    across rounds (the standard Spark iterative-algorithm pattern —
-    same loop GraphFrames/GraphX run under the hood, minus their
-    dependency)."""
-    return connected_components_star(edges, nodes, id_col=id_col,
-                                     src_col=src_col, dst_col=dst_col,
-                                     max_iter=max_iter)
-
-
 def connected_components_star(edges: DataFrame, nodes: DataFrame,
                               id_col: str = "doc_id",
                               src_col: str = "doc_a",
@@ -527,7 +503,10 @@ def connected_components_star(edges: DataFrame, nodes: DataFrame,
                               max_iter: int = 50) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the 100 TB-scale variant of min-label propagation:
+    SoCC'14): the transitive-closure step exact/LSH dedup needs (A~B
+    and B~C land A, B, C in ONE cluster, labeled by its minimum id,
+    even when A~C was never a candidate pair). It is the 100 TB-scale
+    variant of min-label propagation:
     rounds grow with log(component size), not graph diameter, so a
     20-hop (or 20,000-hop) chain converges in a handful of rounds
     where plain label propagation needs one round per hop.

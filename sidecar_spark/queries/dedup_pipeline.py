@@ -265,7 +265,7 @@ def dedup_clusters(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     pairs = D.minhash_candidate_pairs(
         d, num_hashes=16, bands=4, shingle_k=3, jaccard_threshold=0.1)
-    return D.connected_components(pairs, d.select("doc_id"))
+    return D.connected_components_star(pairs, d.select("doc_id"))
 
 
 @query(
@@ -655,7 +655,7 @@ def dedup_cluster_canonical(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     pairs = D.minhash_candidate_pairs(
         d, num_hashes=16, bands=4, shingle_k=3, jaccard_threshold=0.1)
-    clusters = D.connected_components(pairs, d.select("doc_id"))
+    clusters = D.connected_components_star(pairs, d.select("doc_id"))
     quality = spread(d).select(
         "doc_id", X.quality_score(F.col("text")).alias("q"))
     sized = (clusters.groupBy("cluster_id")
@@ -758,7 +758,7 @@ def leakage_safe_split(spark, sf_dir):
     pairs = D.minhash_candidate_pairs(
         d, num_hashes=16, bands=4, shingle_k=3, jaccard_threshold=0.1) \
         .select("doc_a", "doc_b").localCheckpoint(eager=True)
-    clusters = D.connected_components(pairs.select(
+    clusters = D.connected_components_star(pairs.select(
         "doc_a", "doc_b", F.lit(0.0).alias("jaccard")), d.select("doc_id"))
     assigned = clusters.select(
         "doc_id",

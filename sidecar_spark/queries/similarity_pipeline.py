@@ -1619,7 +1619,7 @@ def dbscan_density_clusters(spark, sf_dir):
     bucketing lower the observed density identically on both
     sides), then a degree count and the battery's min-label
     component machinery.  Summary: core/cluster/noise census."""
-    from sidecar_spark.functions.dedup import connected_components
+    from sidecar_spark.functions.dedup import connected_components_star
 
     emb = t(spark, sf_dir, "embeddings")
     v = spread(emb).select(
@@ -1658,7 +1658,7 @@ def dbscan_density_clusters(spark, sf_dir):
                   .select(F.col("ida").alias("doc_a"),
                           F.col("idb").alias("doc_b"),
                           F.lit(0.0).alias("jaccard")))
-    clusters = connected_components(
+    clusters = connected_components_star(
         core_edges, core.withColumnRenamed("vec_id", "doc_id"))
     sizes = clusters.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_core"))

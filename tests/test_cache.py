@@ -751,7 +751,11 @@ class TestCacheManager:
         assert mgr.get_file_status(dst).length == 9
         mgr.close(save=False)
 
-    def test_mutable_mtime_change_invalidates(self, cache_dir, remote_dir):
+    @pytest.mark.parametrize("change", ["mtime", "length"])
+    def test_mutable_mtime_change_invalidates(self, cache_dir, remote_dir,
+                                              change):
+        """A republish is a new version when its mtime moves, and also
+        when it lands in the same mtime tick at a new length."""
         conf = self._conf(cache_dir, remote_files_mutable=True)
         mgr = CacheManager(conf)
         path = os.path.join(remote_dir, "m1")
@@ -759,11 +763,17 @@ class TestCacheManager:
             f.write(b"v1" * PAGE)
         s = mgr.open(path)
         s.read_at(0, 100)
-        # mutate the file with a different mtime
-        with open(path, "wb") as f:
-            f.write(b"v2" * PAGE)
-        os.utime(path, (1e9, 2e9))  # force distinct mtime
+        old_ns = os.stat(path).st_mtime_ns
+        if change == "mtime":
+            with open(path, "wb") as f:
+                f.write(b"v2" * PAGE)
+            os.utime(path, (1e9, 2e9))  # force distinct mtime
+        else:
+            with open(path, "wb") as f:
+                f.write(b"v2" * (2 * PAGE))
+            os.utime(path, ns=(old_ns, old_ns))  # the same mtime
         st = mgr.get_file_status(path)
+        assert st.length == (2 if change == "mtime" else 4) * PAGE
         mgr.drain()
         s2 = mgr.open(path)
         assert s2.read_at(0, 4) == b"v2v2"
@@ -1419,6 +1429,40 @@ class TestWriteCacheMutationCoherence:
         finally:
             mgr.close(save=False)
 
+    @pytest.mark.parametrize("verb", ["delete", "rename"])
+    def test_directory_verb_leaves_no_child_mirror(self, cache_dir,
+                                                   remote_dir, verb):
+        """A recursive delete or a rename of a directory takes the
+        write-cache mirrors below it along: no status of a child
+        survives at the old path, even with the meta cache empty, and
+        a renamed child is still served from the write cache."""
+        mgr = CacheManager(SidecarConfig.create(
+            cache_dir=cache_dir, data_cache_type="file",
+            cache_persistent=False, write_cache_mode="sync"))
+        try:
+            d = os.path.join(remote_dir, "d")
+            child = os.path.join(d, "child")
+            os.makedirs(d)
+            out = mgr.create(child)
+            out.write(b"CHILD" * 10)
+            out.close()
+            assert mgr.write_cache.contains(child)
+            moved = os.path.join(remote_dir, "e", "child")
+            if verb == "delete":
+                assert mgr.delete(d, recursive=True)
+            else:
+                assert mgr.rename(d, os.path.dirname(moved))
+            mgr.meta.clear()
+            assert mgr.get_file_status(child) is None
+            assert not mgr.write_cache.contains(child)
+            if verb == "rename":
+                assert mgr.write_cache.contains(moved)
+                s = mgr.open(moved)
+                assert s.read_at(0, 5) == b"CHILD"
+                assert mgr.stats.get("total_bytes_read_write_cache") > 0
+        finally:
+            mgr.close(save=False)
+
     def test_pending_async_upload_not_dropped(self, cache_dir,
                                               remote_dir):
         """The unsynced (moniker) case must NOT be dropped: with a
@@ -1436,6 +1480,44 @@ class TestWriteCacheMutationCoherence:
             st = mgr.get_file_status(p)
             assert st is not None and st.length == 10
             mgr.drain()
+        finally:
+            mgr.close(save=False)
+
+    @pytest.mark.parametrize("verb", ["delete", "rename"])
+    def test_verb_drops_pending_async_upload(self, cache_dir, remote_dir,
+                                             verb):
+        """A delete of a file whose ASYNC_COPY upload is still pending,
+        or a rename onto it, drops its mirror: the upload then
+        publishes nothing, and neither the deleted file nor the
+        overwritten bytes come back."""
+        mgr = CacheManager(SidecarConfig.create(
+            cache_dir=cache_dir, data_cache_type="file",
+            write_cache_mode="async_copy", cache_persistent=False))
+        held = []
+        submit, mgr._submit = mgr._submit, held.append
+        try:
+            p = os.path.join(remote_dir, "pending")
+            out = mgr.create(p)
+            out.write(b"PENDING")
+            out.close()
+            assert len(held) == 1  # the upload has not run
+            if verb == "delete":
+                mgr.delete(p)
+            else:
+                src = os.path.join(remote_dir, "src")
+                with open(src, "wb") as f:
+                    f.write(b"RENAMED")
+                assert mgr.rename(src, p)
+            for fn in held:
+                submit(fn)
+            mgr.drain()
+            if verb == "delete":
+                assert not os.path.exists(p)
+                assert mgr.get_file_status(p) is None
+            else:
+                with open(p, "rb") as f:
+                    assert f.read() == b"RENAMED"
+                assert mgr.open(p).read_at(0, 7) == b"RENAMED"
         finally:
             mgr.close(save=False)
 
@@ -2280,7 +2362,10 @@ class TestOneHeadPerVersion:
             s = mgr.open(self.URI)
             s.read_at(0, 100)
             s.close()
+            _wire(s3_stub)
             assert mgr.delete(self.URI)
+            # one status request: pyarrow's own before the DELETE
+            assert _wire(s3_stub) == ["HEAD", "DELETE"]
             with pytest.raises(FileNotFoundError):
                 mgr.open(self.URI)
         finally:
@@ -2315,12 +2400,21 @@ class TestOneHeadPerVersion:
         finally:
             mgr.close(save=False)
 
-    def test_delete_dir_then_open_child_raises(self, cache_dir, s3_stub):
-        """A recursive delete drops the kept handles of the files below
-        the directory: a child's page miss reopens the remote and finds
-        it gone instead of reading through the deleted version's
-        handle."""
-        child = "s3://heads/dir/child"
+    # pyarrow's S3 move renames files only, so the object-store rename
+    # runs on the mem:// store
+    @pytest.mark.parametrize("remote,verb", [
+        ("s3", "delete"), ("local", "delete"), ("local", "rename"),
+        ("mem", "rename")])
+    def test_delete_dir_then_open_child_raises(self, cache_dir, remote_dir,
+                                               request, remote, verb):
+        """A recursive delete or a rename of a directory retires every
+        file below it: a warm child's next open finds it gone instead
+        of serving its cached meta and pages."""
+        base = {"s3": "s3://heads", "mem": "mem://heads",
+                "local": remote_dir}[remote]
+        if remote == "s3":
+            request.getfixturevalue("s3_stub")
+        child = base + "/dir/child"
         fs, path = RemoteFS.from_uri(child)
         fs.write_all(path, os.urandom(4 * PAGE))
         mgr = self._mgr(cache_dir)
@@ -2328,15 +2422,17 @@ class TestOneHeadPerVersion:
             s = mgr.open(child)
             s.read_at(0, 100)
             s.close()
-            assert mgr.delete("s3://heads/dir", recursive=True)
+            if verb == "delete":
+                assert mgr.delete(base + "/dir", recursive=True)
+            else:
+                assert mgr.rename(base + "/dir", base + "/moved")
             with pytest.raises(FileNotFoundError):
-                s = mgr.open(child)
-                try:
-                    s.read_at(3 * PAGE, 100)
-                finally:
-                    s.close()
+                mgr.open(child).read_at(0, 4)  # a warm page
         finally:
             mgr.close(save=False)
+            if remote == "mem":
+                from sidecar_spark.cache.memfs import reset_store
+                reset_store()
 
     def test_kept_handles_bounded_and_released(self):
         import gc
@@ -2362,9 +2458,9 @@ class TestOneHeadPerVersion:
         assert a() is None and b() is None and c() is not None
         assert h.read_at(("p", 1, 1), 0, 1) is None
         assert h.read_at(("r", 1, 1), 0, 2) == b"xx"
-        h.drop("d")
-        assert d() is not None  # not below "d" without ``below``
-        h.drop("d", below=True)
+        h.drop(("d/x", 2, 1))
+        assert d() is not None  # another version of d/x
+        h.drop(("d/x", 1, 1))
         gc.collect()
         assert d() is None
         h.close()

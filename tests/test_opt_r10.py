@@ -87,7 +87,7 @@ class TestConnectedComponentsGate:
             [(i,) for i in [1, 2, 3, 4, 5, 10, 11, 12, 20]],
             "doc_id bigint")
         got = {(r["doc_id"], r["cluster_id"])
-               for r in D.connected_components(edges, nodes).collect()}
+               for r in D.connected_components_star(edges, nodes).collect()}
         want = {(1, 1), (2, 1), (3, 1), (4, 1), (5, 1),
                 (10, 10), (11, 10), (12, 10), (20, 20)}
         assert got == want
@@ -97,5 +97,5 @@ class TestConnectedComponentsGate:
             [], "doc_a bigint, doc_b bigint, jaccard double")
         nodes = spark.createDataFrame([(7,), (9,)], "doc_id bigint")
         got = {(r["doc_id"], r["cluster_id"])
-               for r in D.connected_components(edges, nodes).collect()}
+               for r in D.connected_components_star(edges, nodes).collect()}
         assert got == {(7, 7), (9, 9)}

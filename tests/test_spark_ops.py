@@ -156,14 +156,14 @@ class TestConnectedComponents:
         """A~B, B~C, C~D must collapse into one cluster labeled by the
         minimum id, even though A~C, A~D, B~D are never edges — the
         propagation needs multiple rounds on this diameter-3 chain."""
-        from sidecar_spark.functions.dedup import connected_components
+        from sidecar_spark.functions.dedup import connected_components_star
 
         nodes = spark.createDataFrame(
             [(i,) for i in range(1, 8)], "doc_id long")
         edges = spark.createDataFrame(
             [(1, 3), (3, 5), (5, 7), (2, 4)], "doc_a long, doc_b long")
         got = {r["doc_id"]: r["cluster_id"]
-               for r in connected_components(edges, nodes).collect()}
+               for r in connected_components_star(edges, nodes).collect()}
         assert got == {1: 1, 3: 1, 5: 1, 7: 1, 2: 2, 4: 2, 6: 6}
 
     def test_deep_chain_converges_in_log_rounds(self, spark):

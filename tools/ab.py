@@ -15,10 +15,11 @@ both sides (1, 3, 5, ... from pair to pair); the order alternates
 exported checkouts are removed at the end.
 
 Per workload it prints, for each end-to-end metric of BENCHMARK.json:
-the median of each side, the spread of BASE's runs (interquartile
-range over median), the median of the per-pair relative changes, how
-many pairs NEW won, and ``OVER`` where NEW's median is worse than
-BASE's by more than the metric's bound. Then the failed and attempted
+the median and the best run of each side (the min of a lower-is-better
+metric, the max of the others), the spread of BASE's runs
+(interquartile range over median), the median of the per-pair relative
+changes, how many pairs NEW won, and ``OVER`` where NEW's median is
+worse than BASE's by more than the metric's bound. Then the failed and attempted
 op counts of each side. The raw records go to
 ``<workdir>/ab-<workload>.json``.
 """
@@ -80,8 +81,8 @@ def quartile_spread(xs: list) -> float:
 def report(workload: str, pairs: list, spec: list) -> None:
     ok = [(a, b) for a, b in pairs if "error" not in a and "error" not in b]
     print(f"\n== {workload}: {len(ok)} of {len(pairs)} pairs complete")
-    print(f"{'metric':26} {'base':>11} {'new':>11} {'base_iqr':>8} "
-          f"{'pair_d':>8} {'won':>5}")
+    print(f"{'metric':26} {'base':>11} {'new':>11} {'base_best':>11} "
+          f"{'new_best':>11} {'base_iqr':>8} {'pair_d':>8} {'won':>5}")
     for m in spec:
         name, better, bound = m["name"], m["better"], m["bound"]
         a = [p[0]["metrics"][name] for p in ok]
@@ -89,13 +90,15 @@ def report(workload: str, pairs: list, spec: list) -> None:
         if not a:
             continue
         ma, mb = statistics.median(a), statistics.median(b)
+        best = min if better == "lower" else max
         rel = [(y - x) / x if x else 0.0 for x, y in zip(a, b)]
         won = sum((y < x) if better == "lower" else (y > x)
                   for x, y in zip(a, b))
         change = (mb - ma) / ma if ma else 0.0
         worse = change if better == "lower" else -change
         flag = "  OVER" if worse > bound else ""
-        print(f"{name:26} {ma:11.4g} {mb:11.4g} {quartile_spread(a):8.3f} "
+        print(f"{name:26} {ma:11.4g} {mb:11.4g} {best(a):11.4g} "
+              f"{best(b):11.4g} {quartile_spread(a):8.3f} "
               f"{statistics.median(rel):+8.3f} {won:>2}/{len(ok)}{flag}")
     for side, i in (("base", 0), ("new", 1)):
         runs = [p[i] for p in pairs]
