@@ -257,13 +257,34 @@ class RemoteFS:
         return True
 
     def rename(self, src: str, dst: str) -> bool:
-        if not self.exists(src):
+        """Move a file or a directory. An S3 directory is a key prefix
+        and pyarrow's S3 ``move`` moves single objects only, so each
+        object under it is moved and each empty directory marker made
+        anew, as S3A does; then the source prefix is deleted. A bucket
+        is not renamed: deleting its prefix would delete the bucket."""
+        st = self.stat(src)
+        if st is None:
             return False
         src, dst = self._p(src), self._p(dst)
+        tree = st.is_dir and isinstance(self.fs, pafs.S3FileSystem)
+        if tree:
+            src, dst = src.rstrip("/"), dst.rstrip("/")
+            if "/" not in src:
+                raise OSError(f"cannot rename the bucket {src}")
         parent = posixpath.dirname(dst)
         if parent:
             self.fs.create_dir(parent, recursive=True)
-        self.fs.move(src, dst)
+        if not tree:
+            self.fs.move(src, dst)
+            return True
+        for info in self.fs.get_file_info(
+                pafs.FileSelector(src, recursive=True)):
+            target = dst + info.path[len(src):]
+            if info.type == pafs.FileType.File:
+                self.fs.move(info.path, target)
+            else:
+                self.fs.create_dir(target, recursive=True)
+        self.fs.delete_dir(src)
         return True
 
     def copy(self, src: str, dst: str) -> None:

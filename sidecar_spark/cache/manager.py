@@ -44,7 +44,7 @@ from collections import OrderedDict
 from typing import Dict, List, Optional, Tuple
 
 from sidecar_spark.cache.fs import FileStat, RemoteFS, download
-from sidecar_spark.cache.meta import FileMeta, MetaCache
+from sidecar_spark.cache.meta import MetaCache
 from sidecar_spark.cache.pages import PageStore
 from sidecar_spark.cache.streams import CachingInputStream, CachingOutputStream
 from sidecar_spark.cache.write_cache import WriteCache
@@ -61,23 +61,24 @@ from sidecar_spark.util.scan_detector import ScanDetector
 
 
 class FileMirror:
-    """Whole-file local data cache, content-addressed by
-    ``md5(path + '/' + mtime)`` — the file-granular tier backing
+    """Whole-file local data cache, content-addressed by the file
+    version: ``md5(path + '/' + mtime + '/' + length)`` of its
+    ``FileStat`` — the file-granular tier backing
     ``resolve_for_spark``. Same self-invalidation property as page
-    keys: a changed mtime yields a new key, stale copies age out via
-    LRC eviction.
+    keys: a changed mtime or length yields a new key, stale copies age
+    out via LRC eviction.
 
     Multi-node design note: the reference's caches are JVM singletons
     *per node* (``SidecarCachingFileSystem.java:96-119`` — every
     worker that loads the class gets its own local tiers over the same
     remote). The mirror reproduces that shape: one ``FileMirror``
     per (cache_dir, process), no cross-instance state, and cache keys
-    derived purely from (remote path, remote mtime). Two managers on
-    two machines (or two cache roots in one process — see
+    derived purely from the remote version (path, mtime, length). Two
+    managers on two machines (or two cache roots in one process — see
     ``tests/test_cache.py`` two-node test) therefore stay coherent by
     construction: each materializes its own copy, and a remote
-    mutation flips the mtime so every node's stale copy simply stops
-    matching. On a real cluster the executor-side deployment is the
+    mutation flips the mtime or the length, so every node's stale copy
+    simply stops matching. On a real cluster the executor-side deployment is the
     same class pointed at node-local NVMe (one cache root per host),
     with the resolve run PER SCAN TASK against that node's manager —
     ``sidecar.resolve.mode = executor`` routes ``Engine.read_parquet``
@@ -123,9 +124,9 @@ class FileMirror:
         self._served: Dict[str, float] = {}
         self._rebuild()
 
-    def _local(self, path: str, mtime: int) -> str:
-        name = os.path.basename(path.rstrip("/")) or "file"
-        return os.path.join(self.root, base_key(path, mtime) + "-" + name)
+    def _local(self, st: FileStat) -> str:
+        name = os.path.basename(st.path.rstrip("/")) or "file"
+        return os.path.join(self.root, base_key(st) + "-" + name)
 
     def _rebuild(self) -> None:
         from sidecar_spark.util.tmp_sweep import sweep_if_stale
@@ -149,16 +150,25 @@ class FileMirror:
                 self.files.put(p, sz)
                 self._size += sz
 
-    def lookup(self, path: str, mtime: int) -> Optional[str]:
-        lp = self._local(path, mtime)
-        if self.files.exists(lp) and os.path.exists(lp):
+    def lookup(self, st: FileStat) -> Optional[str]:
+        """The local copy of the version ``st``, or None. Only a file
+        of the version's length holds its bytes: a file of any other
+        size under its name is a miss, whether it was written out of
+        band or indexed by ``_rebuild`` at a restart; an indexed one
+        is dropped, so that ``materialize`` fetches the version anew."""
+        lp = self._local(st)
+        sz = self.files.get(lp)
+        if sz is not None and os.path.exists(lp):
+            if sz != st.length:
+                self.invalidate(st)
+                return None
             self._served[lp] = time.monotonic()
             return lp
         if os.path.exists(lp):
             # materialized out-of-band (an executor-side warm wrote the
             # shared node-local cache root, CacheManager.warm_distributed)
-            # — adopt it: keys are content-addressed, so an existing
-            # file under this name IS the current bytes by construction
+            # — adopt it: keys are content-addressed, so a file of the
+            # version's length under this name IS its bytes
             with self._lock:
                 if not self.files.exists(lp):
                     try:
@@ -168,6 +178,8 @@ class FileMirror:
                         # and stat — a miss, never an error (cache
                         # trouble must not fail the read)
                         return None
+                    if sz != st.length:
+                        return None  # not this version's bytes: a miss
                     self.files.put(lp, sz)
                     self._size += sz
                     # pin BEFORE evicting: the adopted file must not
@@ -190,7 +202,7 @@ class FileMirror:
         overlap. A per-key event dedups concurrent fetches of the
         *same* file: late arrivals wait for the winner, then re-check
         (and take over the fetch if the winner failed)."""
-        lp = self._local(st.path, st.mtime)
+        lp = self._local(st)
         while True:
             with self._lock:
                 if self.files.exists(lp) and os.path.exists(lp):
@@ -227,8 +239,8 @@ class FileMirror:
                 self._inflight.pop(lp, None)
             ev.set()
 
-    def invalidate(self, path: str, mtime: int) -> bool:
-        lp = self._local(path, mtime)
+    def invalidate(self, st: FileStat) -> bool:
+        lp = self._local(st)
         with self._lock:  # _size is read-modify-written under _lock
             ln = self.files.remove(lp)  # everywhere else — an async
             self._served.pop(lp, None)  # invalidation must not race it
@@ -284,8 +296,8 @@ KEPT_HANDLES = 128
 
 
 class _Handles:
-    """Opened remote readers kept per file version ``(path, mtime,
-    length)``: a bounded LRU, so a version's page misses after its
+    """Opened remote readers kept per file version (its ``FileStat``):
+    a bounded LRU, so a version's page misses after its
     first open cost one ranged GET each and no status request. Only
     handles whose open supplied the version's status are kept — object
     store handles, which hold no fd and no socket (pyarrow's S3 file
@@ -296,9 +308,9 @@ class _Handles:
     def __init__(self, capacity: int) -> None:
         self.capacity = capacity
         self._lock = threading.Lock()
-        self._lru: "OrderedDict[tuple, object]" = OrderedDict()
+        self._lru: "OrderedDict[FileStat, object]" = OrderedDict()
 
-    def read_at(self, version: tuple, offset: int,
+    def read_at(self, version: FileStat, offset: int,
                 length: int) -> Optional[bytes]:
         """The bytes from the kept handle, or None when none is kept."""
         with self._lock:
@@ -308,14 +320,14 @@ class _Handles:
             self._lru.move_to_end(version)
         return fh.read_at(length, offset)
 
-    def put(self, version: tuple, fh) -> None:
+    def put(self, version: FileStat, fh) -> None:
         with self._lock:
             self._lru[version] = fh
             self._lru.move_to_end(version)
             while len(self._lru) > self.capacity:
                 self._lru.popitem(last=False)
 
-    def drop(self, version: tuple) -> None:
+    def drop(self, version: FileStat) -> None:
         with self._lock:
             self._lru.pop(version, None)
 
@@ -517,8 +529,7 @@ class CacheManager:
                                 mtime=int(lst.st_mtime * 1000), is_dir=False)
         cached = self.meta.get(path)
         if cached is not None and not self.conf.remote_files_mutable:
-            return FileStat(path=path, length=cached.length,
-                            mtime=cached.mtime, is_dir=cached.is_dir)
+            return cached
         st = probe(path)
         if st is None:
             if self.write_cache is not None:
@@ -529,8 +540,7 @@ class CacheManager:
                                     mtime=int(lst.st_mtime * 1000), is_dir=False)
             self._retire(path)
             return None
-        if cached is not None and (cached.mtime, cached.length) \
-                != (st.mtime, st.length):
+        if cached is not None and cached != st:
             # the file changed: the write-cache mirror is the FIRST read
             # tier (readFromWriteCacheFS order) and would keep serving
             # the old bytes
@@ -543,7 +553,7 @@ class CacheManager:
                 self.write_cache.delete_file(path)
             cached = None
         if cached is None and not st.is_dir:
-            self.meta.put_stat(st)
+            self.meta.put(st)
         return st
 
     def _open_status(self, fs: RemoteFS, path: str) -> Optional[FileStat]:
@@ -552,7 +562,7 @@ class CacheManager:
         status is kept for the version it names."""
         st, fh = fs.open_stat(path)
         if fh is not None:
-            self._handles.put((path, st.mtime, st.length), fh)
+            self._handles.put(st, fh)
         return st
 
     def _retire(self, path: str, below: bool = False) -> None:
@@ -560,16 +570,16 @@ class CacheManager:
         tier: its meta entry, kept handles, pages and mirror copy; with
         ``below``, also those of every path under ``path/``. The one
         coherence step of the mutation verbs and the status check. It
-        runs synchronously, and a version is ``(mtime, length)``: a
-        republish within one mtime tick at a new length is a new
-        version too. The write cache is keyed by path, not version, so
-        callers drop it themselves."""
-        for p, old in self.meta.pop(path, below=below):
-            self._handles.drop((p, old.mtime, old.length))
+        runs synchronously, and each tier keys on the version's
+        ``FileStat``: a republish within one mtime tick at a new length
+        is a new version too. The write cache is keyed by path, not
+        version, so callers drop it themselves."""
+        for old in self.meta.pop(path, below=below):
+            self._handles.drop(old)
             if self.pages is not None:
-                self.pages.delete_file_pages(p, old.mtime, old.length)
+                self.pages.delete_file_pages(old)
             if self.mirror is not None:
-                self.mirror.invalidate(p, old.mtime)
+                self.mirror.invalidate(old)
 
     def _submit(self, fn) -> None:
         self._pending.append(self.pool.submit(fn))
@@ -604,12 +614,11 @@ class CacheManager:
         # else the stream's own, opened lazily (the reference wraps both
         # streams in Callables, :1599-1608) — with a warm cache or a
         # pending local-first write the remote may never be opened
-        version = (path, st.mtime, st.length)
         owned: list = []
 
         def remote_read(off: int, ln: int) -> bytes:
             if not owned:
-                data = self._handles.read_at(version, off, ln)
+                data = self._handles.read_at(st, off, ln)
                 if data is not None:
                     return data
                 owned.append(fs.open_read(path))
@@ -624,8 +633,7 @@ class CacheManager:
                 owned.pop().close()
 
         return CachingInputStream(
-            path=path, mtime=st.mtime, length=st.length,
-            page_store=self.pages if self.pages is not None else PageStore(
+            st, page_store=self.pages if self.pages is not None else PageStore(
                 SidecarConfig(data_cache_type=SidecarDataCacheType.DISABLED)),
             remote_read=remote_read, write_cache_read=wc_read,
             stats=self.stats, io_buffer_size=self.conf.io_buffer_size,
@@ -701,11 +709,11 @@ class CacheManager:
 
         def on_close(stream: CachingOutputStream) -> None:
             stream.remote_fh.close()
-            self.meta.save(path, FileMeta(st.mtime, st.length, False))
+            self.meta.save(st)
             self._retire(path)
             nst = fs.stat(path)
             if nst is not None:
-                self.meta.put_stat(nst)
+                self.meta.put(nst)
             if caching_path is not None and self.write_cache is not None:
                 self.write_cache.register_append(caching_path,
                                                  stream.bytes_written)
@@ -754,7 +762,7 @@ class CacheManager:
             self._retire(path)
             st = self._open_status(fs, path)
             if st is not None:
-                self.meta.put_stat(st)
+                self.meta.put(st)
             if caching_path is not None and self.write_cache is not None:
                 self.write_cache.delete_moniker(caching_path)
                 self.write_cache.check_eviction()
@@ -800,7 +808,7 @@ class CacheManager:
         self._retire(src, below=below)
         self._retire(dst, below=below)
         if st is not None and not self.conf.write_excluded(dst):
-            self.meta.put_stat(st)
+            self.meta.put(st)
         if self.write_cache is not None and src != dst:
             self.write_cache.delete_file(dst, below=below)
             self.write_cache.rename(src, dst, below=below)
@@ -852,7 +860,7 @@ class CacheManager:
         if self.meta.get(path) is None:
             st = fs.stat(path)
             if st is not None and not st.is_dir:
-                self.meta.put_stat(st)
+                self.meta.put(st)
 
     def list_files(self, uri: str, suffix: str = "",
                    spark=None) -> List[FileStat]:
@@ -983,7 +991,7 @@ class CacheManager:
         as a data-cache read; returns the files still cold."""
         cold = []
         for st in files:
-            hit = self.mirror.lookup(st.path, st.mtime)
+            hit = self.mirror.lookup(st)
             if hit is None:
                 cold.append(st)
                 continue
@@ -1051,7 +1059,7 @@ class CacheManager:
                     [self.pool.submit(fetch, st) for st in cold])
         for st in files:
             self.stats.add("total_files_opened")
-            self.meta.save(st.path, FileMeta(st.mtime, st.length, st.is_dir))
+            self.meta.save(st)
         return [local.get(st.path, st.path) for st in files]
 
     def warm_distributed(self, spark, uri: str, suffix: str = "",
@@ -1083,7 +1091,7 @@ class CacheManager:
             files = self.list_files(uri, suffix=suffix, spark=spark)
         admitted, veto = self.admit(files)
         cold = [st for st in admitted
-                if self.mirror.lookup(st.path, st.mtime) is None]
+                if self.mirror.lookup(st) is None]
         if not cold:
             return 0
         if veto:
@@ -1142,7 +1150,7 @@ class CacheManager:
             if ok:
                 if not self.write_cache.file_list.exists(cp):
                     self.write_cache.register(cp, st.length)
-                self.meta.save(p, FileMeta(st.mtime, st.length, False))
+                self.meta.save(dataclasses.replace(st, path=p))
         self.write_cache.check_eviction()
         return fetched
 
@@ -1273,11 +1281,12 @@ def _mirror_write(mgr: CacheManager, st: FileStat) -> bool:
     happened. False when the copy fails (per-file tolerance)."""
     try:
         fs, p = mgr._resolve(st.path)  # noqa: SLF001
+        st = dataclasses.replace(st, path=p)
         cp = mgr.write_cache.caching_path(p)
         os.makedirs(os.path.dirname(cp), exist_ok=True)
-        download(fs, dataclasses.replace(st, path=p), cp)
+        download(fs, st, cp)
         mgr.write_cache.register(cp, st.length)
-        mgr.meta.save(p, FileMeta(st.mtime, st.length, False))
+        mgr.meta.save(st)
         mgr.write_cache.check_eviction()
         return True
     except Exception:  # noqa: BLE001

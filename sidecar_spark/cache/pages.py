@@ -3,8 +3,9 @@
 The engine-side replacement for the reference's carrot-cache data cache
 (``SidecarCachingFileSystem.java:882-929`` wires it; page get/put in
 ``SidecarCachingInputStream.java:650-699``). Pages are fixed-size
-chunks of a file, content-addressed by ``md5(path + '/' + mtime)`` plus
-the page-aligned offset, so a changed file's pages self-invalidate.
+chunks of a file version (a ``FileStat``), content-addressed by
+``md5(path + '/' + mtime + '/' + length)`` plus the page-aligned offset
+(``util/hashing.page_key``), so a changed file's pages self-invalidate.
 
 Three media, mirroring ``SidecarDataCacheType`` {MEMORY, FILE, HYBRID}:
 
@@ -27,9 +28,10 @@ import threading
 from collections import OrderedDict
 from typing import Optional
 
+from sidecar_spark.cache.fs import FileStat
 from sidecar_spark.config import SidecarConfig, SidecarDataCacheType
 from sidecar_spark.stats import Statistics
-from sidecar_spark.util.hashing import base_key, page_key
+from sidecar_spark.util.hashing import page_key
 
 
 class _MemTier:
@@ -157,8 +159,8 @@ class PageStore:
 
     # ---- keys -----------------------------------------------------------
 
-    def key(self, path: str, mtime: int, offset: int) -> str:
-        return page_key(path, mtime, offset, self.page_size)
+    def key(self, st: FileStat, offset: int) -> str:
+        return page_key(st, offset, self.page_size)
 
     # ---- core ops (dataPageGetRange/dataPageExists/dataPagePut) ----------
 
@@ -217,12 +219,13 @@ class PageStore:
                 hit = self._disk.delete(key) or hit
             return hit
 
-    def delete_file_pages(self, path: str, mtime: int, length: int) -> int:
-        """Evict every page of a file: enumerate keys 0..len step
-        page_size (dataDeleteFile, SidecarCachingFileSystem.java:1227-1248)."""
+    def delete_file_pages(self, st: FileStat) -> int:
+        """Evict every page of the file version ``st``: enumerate keys
+        0..len step page_size (dataDeleteFile,
+        SidecarCachingFileSystem.java:1227-1248)."""
         n = 0
-        for off in range(0, max(length, 1), self.page_size):
-            if self.delete(self.key(path, mtime, off)):
+        for off in range(0, max(st.length, 1), self.page_size):
+            if self.delete(self.key(st, off)):
                 n += 1
         return n
 

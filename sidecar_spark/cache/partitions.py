@@ -314,7 +314,7 @@ def build_symlink_view(view_base: str,
     ``pairs`` is (relative path incl. partition dirs, local file
     path). The view dir is content-addressed by the pair set, so a
     repeat resolve of the same snapshot reuses it; a changed snapshot
-    (new files, new mtimes → new mirror names) gets a fresh dir.
+    (new files, new file versions → new mirror names) gets a fresh dir.
     Aged views are swept (they are symlink-only — cheap), EXCEPT any
     view this process has ever returned: a lazy DataFrame may hold a
     plan over it indefinitely."""

@@ -59,7 +59,7 @@ class ResultCache:
     def key_for(sql_text: str, inputs: List[Tuple[str, int, int]]) -> str:
         """md5 over the query text and every input file's
         (path, mtime_ns, length) — the result-granular analog of the
-        page key's md5(path + mtime)."""
+        page key's md5(path/mtime/length)."""
         h = hashlib.md5()
         h.update(sql_text.encode("utf-8"))
         for path, mtime_ns, length in sorted(inputs):

@@ -27,19 +27,18 @@ from __future__ import annotations
 import time
 from typing import Callable, Optional
 
+from sidecar_spark.cache.fs import FileStat
 from sidecar_spark.cache.pages import PageStore
 from sidecar_spark.stats import Statistics
 from sidecar_spark.util.scan_detector import ScanDetector
 
 
 class CachingInputStream:
-    """Random-access reader for one (path, mtime, length) file version."""
+    """Random-access reader for one file version (a ``FileStat``)."""
 
     def __init__(
         self,
-        path: str,
-        mtime: int,
-        length: int,
+        version: FileStat,
         page_store: PageStore,
         remote_read: Callable[[int, int], bytes],
         write_cache_read: Optional[Callable[[int, int], Optional[bytes]]] = None,
@@ -49,9 +48,8 @@ class CachingInputStream:
         cache_on_read: bool = True,
         on_close: Optional[Callable[[], None]] = None,
     ) -> None:
-        self.path = path
-        self.mtime = mtime
-        self.length = length
+        self.version = version
+        self.length = version.length
         self.pages = page_store
         self.page_size = page_store.page_size
         self.remote_read = remote_read
@@ -180,7 +178,7 @@ class CachingInputStream:
     # ---- helpers ------------------------------------------------------------
 
     def _key(self, page_offset: int) -> str:
-        return self.pages.key(self.path, self.mtime, page_offset)
+        return self.pages.key(self.version, page_offset)
 
     def _ceil_page(self, n: int) -> int:
         return -(-n // self.page_size) * self.page_size

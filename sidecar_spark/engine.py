@@ -1051,8 +1051,7 @@ class Engine:
 
             st = min(files, key=lambda s: s.path)
             target = _orc_arrow_target(open_footer(
-                self.cache, st.path, st.mtime,
-                lambda src: po.ORCFile(src).schema))
+                self.cache, st, lambda src: po.ORCFile(src).schema))
             cs = _session_conf(self.spark, "spark.sql.caseSensitive",
                                "false").lower() == "true"
             by_key = {(f.name if cs else f.name.lower()): f
@@ -1151,8 +1150,7 @@ class Engine:
         applies, correct either way)."""
         if len(files) <= MERGE_SCHEMA_JOB_THRESHOLD:
             return None
-        items = [(st.path, st.mtime)
-                 for st in sorted(files, key=lambda s: s.path)]
+        items = sorted(files, key=lambda s: s.path)
         per_task = 256  # footers per task: metadata-only reads
         chunks = [(i, items[i:i + per_task])
                   for i in range(0, len(items), per_task)]
@@ -1166,9 +1164,9 @@ class Engine:
             for idx, chunk in pairs:
                 yield idx, merge_structs(
                     (footer_spark_struct(
-                        mgr, p, mt, ntz, nanos_long,
+                        mgr, st, ntz, nanos_long,
                         binary_as_string=binary_as_string)
-                     for p, mt in chunk), case_sensitive).json()
+                     for st in chunk), case_sensitive).json()
 
         import json
 

@@ -474,7 +474,9 @@ class CachedOrcReader(CachedParquetReader):
         table's split planning costs zero remote requests)."""
         import pyarrow.orc as po
 
-        return open_footer(mgr, p.path, p.mtime,
+        from sidecar_spark.cache.fs import FileStat
+
+        return open_footer(mgr, FileStat(p.path, p.length, p.mtime, False),
                            lambda src: po.ORCFile(src).nstripes)
 
     def _file_pass(self, fobj, part, columns, stat_filters):

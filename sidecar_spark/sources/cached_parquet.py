@@ -57,6 +57,8 @@ duplicate-name check and projection), ``partitions()``, ``read()`` and
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 _BATCH_ROWS = 65536
@@ -801,13 +803,14 @@ def _partition_types(specs, options):
     return inferred
 
 
-def open_footer(mgr, path: str, mtime: int, decode):
-    """``decode(src)`` over one data file, mirror-first through the
-    node-local manager: ``src`` is the mirror copy's local path when
-    this node holds one (a warmed node's footer reads cost zero remote
-    requests), else an open remote stream."""
-    fs_, p_ = mgr._resolve(path)  # noqa: SLF001
-    local = (mgr.mirror.lookup(p_, mtime)
+def open_footer(mgr, st, decode):
+    """``decode(src)`` over the data file version ``st`` (a
+    ``FileStat``), mirror-first through the node-local manager: ``src``
+    is the mirror copy's local path when this node holds one (a warmed
+    node's footer reads cost zero remote requests), else an open remote
+    stream."""
+    fs_, p_ = mgr._resolve(st.path)  # noqa: SLF001
+    local = (mgr.mirror.lookup(dataclasses.replace(st, path=p_))
              if mgr.mirror is not None else None)
     if local is not None:
         return decode(local)
@@ -815,7 +818,7 @@ def open_footer(mgr, path: str, mtime: int, decode):
         return decode(f)
 
 
-def footer_spark_struct(mgr, path: str, mtime: int, ntz: bool,
+def footer_spark_struct(mgr, st, ntz: bool,
                         nanos_long: bool, arrow_schema_of=None,
                         binary_as_string: bool = False):
     """ONE file's footer → the Spark StructType the JVM would derive
@@ -828,7 +831,7 @@ def footer_spark_struct(mgr, path: str, mtime: int, ntz: bool,
 
     if arrow_schema_of is None:
         arrow_schema_of = CachedParquetSource._file_arrow_schema
-    arrow = open_footer(mgr, path, mtime,
+    arrow = open_footer(mgr, st,
                         lambda src: arrow_schema_of(src, nanos_long))
     s = from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
     out = StructType([StructField(f.name, f.dataType, True,
@@ -1335,7 +1338,7 @@ def _read_file_batches(mgr, part: _FilePart, one_pass):
         # veto gates FILLS only (resolve_for_spark parity: "existing
         # hits are still served locally"); a warmed file must not
         # re-stream from remote just because the table grew
-        local = mgr.mirror.lookup(p, part.mtime)
+        local = mgr.mirror.lookup(st)
         if local is not None:
             try:
                 # open BEFORE reading: once the fd exists, a racing
@@ -2233,7 +2236,7 @@ class CachedParquetSource(DataSource):
         def footer_struct(st):
             try:
                 return footer_spark_struct(
-                    mgr, st.path, st.mtime, ntz, nanos_long,
+                    mgr, st, ntz, nanos_long,
                     arrow_schema_of=self._file_arrow_schema,
                     binary_as_string=binary_as_string)
             except FileNotFoundError:

@@ -44,7 +44,7 @@ def make_stream(cache_dir, length=1 * MiB, stats=None, **kw):
     stats = stats or Statistics()
     store = PageStore(conf, stats)
     stream = CachingInputStream(
-        path="/virtual/file", mtime=42, length=length, page_store=store,
+        FileStat("/virtual/file", length, 42, False), page_store=store,
         remote_read=virtual_read, stats=stats,
         io_buffer_size=conf.io_buffer_size,
         scan_detector=kw.get("scan_detector"),
@@ -84,7 +84,7 @@ class TestCachingInputStream:
         before = stats.get("total_bytes_read_data_cache")
         # new stream (cold prefetch buffer) over the same store
         stream2 = CachingInputStream(
-            path="/virtual/file", mtime=42, length=64 * KiB, page_store=store,
+            FileStat("/virtual/file", 64 * KiB, 42, False), page_store=store,
             remote_read=virtual_read, stats=stats, io_buffer_size=4 * PAGE)
         data = stream2.read_at(0, 64 * KiB)
         assert data == virtual_read(0, 64 * KiB)
@@ -104,10 +104,12 @@ class TestCachingInputStream:
         conf = SidecarConfig.create(cache_dir=cache_dir, data_page_size=PAGE,
                                     data_cache_type="file")
         store = PageStore(conf, stats)
-        s1 = CachingInputStream("/f", 1, 8 * KiB, store, virtual_read, stats=stats)
+        s1 = CachingInputStream(FileStat("/f", 8 * KiB, 1, False), store,
+                                virtual_read, stats=stats)
         s1.read_at(0, 8 * KiB)
         # same path, new mtime → different keys → remote again
-        s2 = CachingInputStream("/f", 2, 8 * KiB, store, virtual_read, stats=stats)
+        s2 = CachingInputStream(FileStat("/f", 8 * KiB, 2, False), store,
+                                virtual_read, stats=stats)
         s2.read_at(0, 8 * KiB)
         assert stats.get("total_read_requests_from_remote") == 2
 
@@ -123,7 +125,8 @@ class TestCachingInputStream:
         def remote_read(off, ln):  # must never be called
             raise AssertionError("remote read should not happen")
 
-        s = CachingInputStream("/f", 1, 32 * KiB, store, remote_read,
+        s = CachingInputStream(FileStat("/f", 32 * KiB, 1, False), store,
+                               remote_read,
                                write_cache_read=wc_read, stats=stats,
                                cache_on_read=False)
         assert s.read_at(0, 32 * KiB) == virtual_read(0, 32 * KiB)
@@ -135,7 +138,8 @@ class TestCachingInputStream:
         conf = SidecarConfig.create(cache_dir=cache_dir, data_page_size=PAGE,
                                     data_cache_type="file")
         store = PageStore(conf, stats)
-        s = CachingInputStream("/f", 1, 1 * MiB, store, virtual_read,
+        s = CachingInputStream(FileStat("/f", 1 * MiB, 1, False), store,
+                               virtual_read,
                                stats=stats, io_buffer_size=PAGE,
                                scan_detector=det)
         for i in range(16):  # pure sequential scan, 1 page per request
@@ -159,7 +163,7 @@ class TestPageStore:
     @pytest.mark.parametrize("ctype", ["memory", "file", "hybrid"])
     def test_put_get_delete(self, cache_dir, ctype):
         st = self._store(cache_dir, ctype)
-        k = st.key("/f", 1, 0)
+        k = st.key(FileStat("/f", PAGE, 1, False), 0)
         assert st.get(k) is None
         st.put(k, b"x" * PAGE)
         assert st.exists(k)
@@ -170,7 +174,7 @@ class TestPageStore:
 
     def test_file_store_survives_restart(self, cache_dir):
         st = self._store(cache_dir, "file")
-        k = st.key("/f", 1, 0)
+        k = st.key(FileStat("/f", PAGE, 1, False), 0)
         st.put(k, b"y" * PAGE)
         # new store over the same dir rebuilds the index from disk
         st2 = self._store(cache_dir, "file")
@@ -178,7 +182,8 @@ class TestPageStore:
 
     def test_capacity_eviction_lru(self, cache_dir):
         st = self._store(cache_dir, "memory", capacity=10 * PAGE)
-        keys = [st.key("/f", 1, i * PAGE) for i in range(12)]
+        v = FileStat("/f", 12 * PAGE, 1, False)
+        keys = [st.key(v, i * PAGE) for i in range(12)]
         for k in keys:
             st.put(k, b"z" * PAGE)
         assert st.size_bytes() <= 10 * PAGE
@@ -187,9 +192,10 @@ class TestPageStore:
 
     def test_delete_file_pages(self, cache_dir):
         st = self._store(cache_dir, "file")
+        v = FileStat("/f", 4 * PAGE, 7, False)
         for i in range(4):
-            st.put(st.key("/f", 7, i * PAGE), bytes([i]) * PAGE)
-        assert st.delete_file_pages("/f", 7, 4 * PAGE) == 4
+            st.put(st.key(v, i * PAGE), bytes([i]) * PAGE)
+        assert st.delete_file_pages(v) == 4
         assert st.page_count() == 0
 
 
@@ -1105,7 +1111,7 @@ class TestMirrorAccounting:
 
             def replace_then_adopt(src, dst):
                 real_replace(src, dst)
-                mgr.mirror.lookup(p, st.mtime)  # adopts: puts + sizes
+                mgr.mirror.lookup(st)  # adopts: puts + sizes
 
             monkeypatch.setattr(mmod.os, "replace", replace_then_adopt)
             lp = mgr.mirror.materialize(fs, st)
@@ -1136,12 +1142,42 @@ class TestMirrorAccounting:
             with open(rp, "wb") as f:
                 f.write(b"w" * 9_000)
             st = fs.stat(rp)
-            oob = mgr.mirror._local(st.path, st.mtime)
+            oob = mgr.mirror._local(st)
             with open(oob, "wb") as f:
                 f.write(b"w" * 9_000)
-            assert mgr.mirror.lookup(st.path, st.mtime) == oob
+            assert mgr.mirror.lookup(st) == oob
             lo = conf.eviction_stop_occupancy * 20_000
             assert mgr.mirror.size_bytes() <= lo
+        finally:
+            mgr.close(save=False)
+
+    @pytest.mark.parametrize("restart", [False, True])
+    def test_out_of_band_copy_of_wrong_size_is_a_miss(self, cache_dir,
+                                                      remote_dir, restart):
+        """A mirror copy is its version's bytes only at the version's
+        length: a file of any other size under its name is a miss,
+        whether it is written out of band or indexed at a restart."""
+        conf = SidecarConfig.create(
+            cache_dir=cache_dir, data_cache_type="file",
+            cache_persistent=False)
+        mgr = CacheManager(conf)
+        try:
+            fs = RemoteFS.local()
+            rp = os.path.join(remote_dir, "warm.bin")
+            with open(rp, "wb") as f:
+                f.write(b"w" * 9_000)
+            st = fs.stat(rp)
+            with open(mgr.mirror._local(st), "wb") as f:
+                f.write(b"w" * 100)
+            if restart:
+                mgr.close(save=False)
+                mgr = CacheManager(conf)
+                assert mgr.mirror.size_bytes() == 100
+            assert mgr.mirror.lookup(st) is None
+            assert mgr.mirror.size_bytes() == 0
+            lp = mgr.mirror.materialize(fs, st)
+            with open(lp, "rb") as f:
+                assert f.read() == b"w" * 9_000
         finally:
             mgr.close(save=False)
 
@@ -1582,7 +1618,7 @@ class TestMutationTierCoherence:
             os.utime(p, ns=(st0.mtime * 10**6, st0.mtime * 10**6))
             mgr.drain()
             # the stale 200-byte mirror copy is gone
-            assert mgr.mirror.lookup(p, st0.mtime) is None
+            assert mgr.mirror.lookup(st0) is None
             paths = mgr.resolve_for_spark(p)
             # resolve re-materializes (or serves remote) the FULL file
             with open(paths[0], "rb") as f:
@@ -1612,7 +1648,7 @@ class TestMutationTierCoherence:
             mgr.drain()
             # even if the new file landed on the SAME ms tick, the old
             # mirror copy is unreachable
-            hit = mgr.mirror.lookup(p, st0.mtime)
+            hit = mgr.mirror.lookup(st0)
             if hit is not None:
                 with open(hit, "rb") as f:
                     assert f.read() != b"OLDBYTES"
@@ -1816,7 +1852,7 @@ class TestCacheCoreReviewFixes:
         stats = Statistics()
         store = PageStore(conf, stats)
         s = CachingInputStream(
-            path="/v", mtime=1, length=length, page_store=store,
+            FileStat("/v", length, 1, False), page_store=store,
             remote_read=virtual_read, stats=stats,
             io_buffer_size=conf.io_buffer_size)
         # the finding's exact sequence
@@ -1914,7 +1950,7 @@ class TestCacheCoreReviewFixes:
             # through the same fs and the same cache identity
             s2 = mgr.open("file://" + p)
             assert s2.read_at(0, 4) == b"DATA"
-            assert s2.path == s1.path
+            assert s2.version == s1.version
         finally:
             mgr.close(save=False)
 
@@ -1961,7 +1997,8 @@ class TestHybridWatermarksAndMemfsMove:
             data_cache_type="hybrid", data_cache_size=10 * PAGE)
         store = PageStore(conf)
         for i in range(12):
-            store.put(store.key("/f", 1, i * PAGE), b"x" * PAGE)
+            store.put(store.key(FileStat("/f", 12 * PAGE, 1, False),
+                                i * PAGE), b"x" * PAGE)
         lo = 10 * PAGE * conf.eviction_stop_occupancy
         # memory tier settled at/below the LOW watermark, not the high
         assert store._mem.bytes <= lo
@@ -2355,6 +2392,33 @@ class TestOneHeadPerVersion:
         finally:
             mgr.close(save=False)
 
+    def test_same_mtime_republish_after_restart(self, cache_dir, s3_stub):
+        """Pages outlive a manager on a FILE store. A file republished
+        at a new length under the same mtime is a new version, so the
+        next manager on the cache root does not serve the old pages."""
+        self._publish(b"a" * 3 * PAGE)
+        obj = s3_stub.store.buckets["heads"]
+        with s3_stub.store.lock:
+            obj["obj"].mtime = 1_700_000_000
+        mgr = self._mgr(cache_dir)
+        try:
+            s = mgr.open(self.URI)
+            assert s.read_at(0, 3 * PAGE) == b"a" * 3 * PAGE
+            s.close()
+        finally:
+            mgr.close(save=False)
+        self._publish(b"b" * 5 * PAGE)
+        with s3_stub.store.lock:
+            obj["obj"].mtime = 1_700_000_000
+        mgr = self._mgr(cache_dir)
+        try:
+            s = mgr.open(self.URI)
+            assert s.length == 5 * PAGE
+            assert s.read_at(0, 4) == b"bbbb"
+            s.close()
+        finally:
+            mgr.close(save=False)
+
     def test_delete_then_open_raises(self, cache_dir, s3_stub):
         self._publish(os.urandom(2 * PAGE))
         mgr = self._mgr(cache_dir)
@@ -2400,11 +2464,9 @@ class TestOneHeadPerVersion:
         finally:
             mgr.close(save=False)
 
-    # pyarrow's S3 move renames files only, so the object-store rename
-    # runs on the mem:// store
     @pytest.mark.parametrize("remote,verb", [
         ("s3", "delete"), ("local", "delete"), ("local", "rename"),
-        ("mem", "rename")])
+        ("mem", "rename"), ("s3", "rename")])
     def test_delete_dir_then_open_child_raises(self, cache_dir, remote_dir,
                                                request, remote, verb):
         """A recursive delete or a rename of a directory retires every
@@ -2415,8 +2477,9 @@ class TestOneHeadPerVersion:
         if remote == "s3":
             request.getfixturevalue("s3_stub")
         child = base + "/dir/child"
+        data = os.urandom(4 * PAGE)
         fs, path = RemoteFS.from_uri(child)
-        fs.write_all(path, os.urandom(4 * PAGE))
+        fs.write_all(path, data)
         mgr = self._mgr(cache_dir)
         try:
             s = mgr.open(child)
@@ -2426,6 +2489,9 @@ class TestOneHeadPerVersion:
                 assert mgr.delete(base + "/dir", recursive=True)
             else:
                 assert mgr.rename(base + "/dir", base + "/moved")
+                moved = mgr.open(base + "/moved/child")
+                assert moved.read_at(0, 4) == data[:4]
+                moved.close()
             with pytest.raises(FileNotFoundError):
                 mgr.open(child).read_at(0, 4)  # a warm page
         finally:
@@ -2433,6 +2499,22 @@ class TestOneHeadPerVersion:
             if remote == "mem":
                 from sidecar_spark.cache.memfs import reset_store
                 reset_store()
+
+    def test_s3_rename_dir_keeps_tree(self, s3_stub):
+        """An S3 directory named with a trailing slash keeps its
+        separators and its empty sub-directories; a bucket is not
+        renamed. (``CacheManager`` strips the slash before it calls
+        ``RemoteFS.rename``, so this runs on the fs itself.)"""
+        fs, _ = RemoteFS.from_uri("s3://heads/dir/child")
+        fs.write_all("s3://heads/dir/child", b"c")
+        fs.mkdirs("s3://heads/dir/empty")
+        assert fs.rename("s3://heads/dir/", "s3://heads/moved")
+        assert fs.read_all("s3://heads/moved/child") == b"c"
+        assert fs.stat("s3://heads/moved/empty").is_dir
+        assert fs.stat("s3://heads/dir") is None
+        with pytest.raises(OSError, match="bucket"):
+            fs.rename("s3://heads", "s3://other")
+        assert fs.read_all("s3://heads/moved/child") == b"c"
 
     def test_kept_handles_bounded_and_released(self):
         import gc
@@ -2444,23 +2526,26 @@ class TestOneHeadPerVersion:
             def read_at(self, n, off):
                 return b"x" * n
 
+        def v(path, mtime=1):
+            return FileStat(path, 1, mtime, False)
+
         def put(h, version):
             fh = Fh()
             h.put(version, fh)
             return weakref.ref(fh)
 
         h = _Handles(2)
-        a = put(h, ("p", 1, 1))
-        b = put(h, ("q", 1, 1))
-        c = put(h, ("r", 1, 1))  # evicts the least recently used
-        d = put(h, ("d/x", 1, 1))  # evicts q
+        a = put(h, v("p"))
+        b = put(h, v("q"))
+        c = put(h, v("r"))  # evicts the least recently used
+        d = put(h, v("d/x"))  # evicts q
         gc.collect()
         assert a() is None and b() is None and c() is not None
-        assert h.read_at(("p", 1, 1), 0, 1) is None
-        assert h.read_at(("r", 1, 1), 0, 2) == b"xx"
-        h.drop(("d/x", 2, 1))
+        assert h.read_at(v("p"), 0, 1) is None
+        assert h.read_at(v("r"), 0, 2) == b"xx"
+        h.drop(v("d/x", 2))
         assert d() is not None  # another version of d/x
-        h.drop(("d/x", 1, 1))
+        h.drop(v("d/x"))
         gc.collect()
         assert d() is None
         h.close()
@@ -2484,8 +2569,46 @@ class TestMirrorFillVersion:
             fs.write_all(path, b"PAR1" + b"b" * 300)
             got = mgr.resolve_for_spark("s3://lake/t", files=stale)
             assert got == [path]
-            assert mgr.mirror.lookup(path, stale[0].mtime) is None
-            assert not os.path.exists(
-                mgr.mirror._local(path, stale[0].mtime))
+            assert mgr.mirror.lookup(stale[0]) is None
+            assert not os.path.exists(mgr.mirror._local(stale[0]))
+        finally:
+            mgr.close(save=False)
+
+    @pytest.mark.parametrize("remote", ["s3", "local"])
+    def test_same_mtime_republish_resolves_new_bytes(
+            self, cache_dir, remote_dir, request, remote):
+        """A file republished at a new length under the same mtime is
+        a new version: ``resolve_for_spark`` serves its bytes, not the
+        mirror copy of the old ones."""
+        if remote == "s3":
+            store = request.getfixturevalue("s3_stub").store
+            base = "s3://lake/t"
+        else:
+            base = os.path.join(remote_dir, "t")
+        uri = base + "/part-0.parquet"
+
+        def publish(data):
+            fs, path = RemoteFS.from_uri(uri)
+            fs.write_all(path, data)
+            if remote == "s3":
+                with store.lock:
+                    store.buckets["lake"]["t/part-0.parquet"].mtime = \
+                        1_700_000_000
+            else:
+                os.utime(path, (1_700_000_000, 1_700_000_000))
+
+        mgr = CacheManager(SidecarConfig.create(
+            cache_dir=cache_dir, data_cache_type="file",
+            cache_persistent=False))
+        try:
+            publish(b"PAR1" + b"a" * 100)
+            old = mgr.resolve_for_spark(base)
+            with open(old[0], "rb") as f:
+                assert f.read(8) == b"PAR1aaaa"
+            publish(b"PAR1" + b"b" * 300)
+            got = mgr.resolve_for_spark(base)
+            assert got != old
+            with open(got[0], "rb") as f:
+                assert f.read() == b"PAR1" + b"b" * 300
         finally:
             mgr.close(save=False)

@@ -1193,3 +1193,36 @@ class TestReadFormatAnyFileType:
         finally:
             eng.close()
             CacheManager.clear_instances()
+
+
+class TestSameMtimeRepublish:
+    @pytest.mark.parametrize("mode", ["driver", "executor"])
+    def test_table_reads_new_rows(self, spark, mode):
+        """A data file republished at a new length under the same mtime
+        is a new version in every tier: ``Engine.table`` returns the
+        new rows, not the cached copy of the old file."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from sidecar_spark import Engine
+
+        root = tempfile.mkdtemp(prefix=f"remtime-{mode}-")
+        part = os.path.join(root, "t.parquet", "part-0.parquet")
+        os.makedirs(os.path.dirname(part))
+
+        def publish(ids):
+            pq.write_table(pa.table({"id": ids}), part)
+            os.utime(part, (1_700_000_000, 1_700_000_000))
+
+        eng = Engine(spark, conf=_conf(tempfile.mkdtemp(prefix="c-"),
+                                       resolve_mode=mode))
+        try:
+            publish([1, 2])
+            assert sorted(r.id for r in
+                          eng.table("t", sf_dir=root).collect()) == [1, 2]
+            publish(list(range(1, 101)))
+            assert sorted(r.id for r in eng.table(
+                "t", sf_dir=root).collect()) == list(range(1, 101))
+        finally:
+            eng.close()
+            CacheManager.clear_instances()

@@ -11,6 +11,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from sidecar_spark.cache import CachingInputStream, PageStore
+from sidecar_spark.cache.fs import FileStat
 from sidecar_spark.config import SidecarConfig
 from sidecar_spark.stats import Statistics
 from sidecar_spark.util.lrc_queue import LRCQueue
@@ -31,7 +32,7 @@ def _stream(tmp_path):
     stats = Statistics()
     store = PageStore(conf, stats)
     return CachingInputStream(
-        path="/v/f", mtime=1, length=LENGTH, page_store=store,
+        FileStat("/v/f", LENGTH, 1, False), page_store=store,
         remote_read=virtual_read, stats=stats,
         io_buffer_size=conf.io_buffer_size)
 
@@ -90,7 +91,7 @@ def test_scan_detector_fires_exactly_at_threshold(noise, threshold):
        mtime=st.integers(1, 2**40))
 def test_page_store_roundtrip(tmp_path, data, mtime):
     """Round-trip under the content-address contract: keys derive from
-    (path, mtime), so distinct contents must use distinct keys (put is
+    (path, mtime, length), so distinct contents must use distinct keys (put is
     put-if-absent by design — the dedup-put of :683-698)."""
     import hashlib
 
@@ -98,7 +99,7 @@ def test_page_store_roundtrip(tmp_path, data, mtime):
         cache_dir=str(tmp_path), data_page_size=PAGE, data_cache_type="file")
     store = PageStore(conf, Statistics())
     path = "/p/" + hashlib.md5(data).hexdigest()
-    key = store.key(path, mtime, 0)
+    key = store.key(FileStat(path, len(data), mtime, False), 0)
     store.put(key, data)
     assert store.get(key) == data
     assert store.get_range(key, 0, len(data)) == data

@@ -7,6 +7,7 @@ import os
 
 import pytest
 
+from sidecar_spark.cache.fs import FileStat
 from sidecar_spark.config import DataCacheMode, SidecarConfig, WriteCacheMode
 from sidecar_spark.stats import Statistics
 from sidecar_spark.util import LRCQueue, ScanDetector, base_key, page_key
@@ -79,15 +80,19 @@ class TestLRCQueue:
 
 class TestKeys:
     def test_mtime_changes_key(self):
-        # mtime participation makes pages self-invalidating
-        # (util/Utils.java:100-123)
-        assert base_key("/a/b", 1) != base_key("/a/b", 2)
+        # the version in the key makes pages self-invalidating
+        # (util/Utils.java:100-123, plus the length): a new mtime, or
+        # the same mtime at a new length, is a new key
+        v = FileStat("/a/b", 10, 1, False)
+        assert base_key(v) != base_key(FileStat("/a/b", 10, 2, False))
+        assert base_key(v) != base_key(FileStat("/a/b", 11, 1, False))
 
     def test_page_key_aligns_down(self):
-        k1 = page_key("/a", 5, 4096 + 100, 4096)
-        k2 = page_key("/a", 5, 4096, 4096)
+        v = FileStat("/a", 8192, 5, False)
+        k1 = page_key(v, 4096 + 100, 4096)
+        k2 = page_key(v, 4096, 4096)
         assert k1 == k2
-        assert page_key("/a", 5, 0, 4096) != k1
+        assert page_key(v, 0, 4096) != k1
 
 
 class TestConfig:

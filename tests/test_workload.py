@@ -21,6 +21,7 @@ import threading
 import time
 
 from sidecar_spark.cache import CacheManager, CachingInputStream, PageStore
+from sidecar_spark.cache.fs import FileStat
 from sidecar_spark.config import SidecarConfig
 from sidecar_spark.stats import Statistics
 
@@ -97,7 +98,7 @@ class TestWorkloads:
 
         def reader(seed: int) -> None:
             stream = CachingInputStream(
-                path="/virtual/file", mtime=42, length=length,
+                FileStat("/virtual/file", length, 42, False),
                 page_store=store, remote_read=virtual_read, stats=stats,
                 io_buffer_size=conf.io_buffer_size)
             rng = random.Random(seed)

@@ -20,8 +20,17 @@ metric, the max of the others), the spread of BASE's runs
 (interquartile range over median), the median of the per-pair relative
 changes, how many pairs NEW won, and ``OVER`` where NEW's median is
 worse than BASE's by more than the metric's bound. Then the failed and attempted
-op counts of each side. The raw records go to
-``<workdir>/ab-<workload>.json``.
+op counts of each side.
+
+Before each run it times a fixed single-threaded Python loop for about
+a second (``host_rate``; the host-speed probe of perfbench/README.md
+"Steadiness"). It prints each side's median loop rate and every pair's
+two rates, marking ``HOST`` a pair whose rates differ by more than the
+tightest end-to-end bound: that pair ran on a host whose speed moved
+under it. The raw records go to ``<workdir>/ab-<workload>.json``, each
+with its rate and, as ``context``, the run's context line (counts over
+a fixed op window, where the workload takes them there), so the counts
+of one seed can be compared between the sides.
 """
 
 from __future__ import annotations
@@ -36,6 +45,7 @@ import subprocess
 import sys
 import tarfile
 import tempfile
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -53,9 +63,22 @@ def checkout(rev: str, dest: str) -> str:
     return dest
 
 
+def host_rate(seconds: float = 1.0) -> float:
+    """Iterations per second of a fixed single-threaded Python loop,
+    timed for about ``seconds``."""
+    n, t0 = 0, time.perf_counter()
+    while (t := time.perf_counter() - t0) < seconds:
+        sum(i * i for i in range(30_000))
+        n += 1
+    return n / t
+
+
 def run_once(where: str, workload: str, seed: int, seconds: float) -> dict:
-    """One ``perfbench/run.py`` process; its last stdout line, or a
-    record with ``error`` when it printed none."""
+    """One ``perfbench/run.py`` process, after a ``host_rate`` probe;
+    its last stdout line with the line before it as ``context``, or a
+    record with ``error`` when it printed none. Either way the record
+    carries the probe's ``host_rate``."""
+    rate = host_rate()
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
@@ -64,10 +87,12 @@ def run_once(where: str, workload: str, seed: int, seconds: float) -> dict:
     try:
         out = json.loads(lines[-1])
         out["metrics"] = {k: v["value"] for k, v in out["metrics"].items()}
-        return out
+        out["context"] = json.loads(lines[-2])
     except (IndexError, ValueError, KeyError, TypeError):
-        return {"error": (proc.stderr or proc.stdout)[-2000:],
-                "returncode": proc.returncode}
+        out = {"error": (proc.stderr or proc.stdout)[-2000:],
+               "returncode": proc.returncode}
+    out["host_rate"] = rate
+    return out
 
 
 def quartile_spread(xs: list) -> float:
@@ -100,6 +125,14 @@ def report(workload: str, pairs: list, spec: list) -> None:
         print(f"{name:26} {ma:11.4g} {mb:11.4g} {best(a):11.4g} "
               f"{best(b):11.4g} {quartile_spread(a):8.3f} "
               f"{statistics.median(rel):+8.3f} {won:>2}/{len(ok)}{flag}")
+    bound = min(m["bound"] for m in spec)
+    print(f"host loop/s median: base "
+          f"{statistics.median(p[0]['host_rate'] for p in pairs):.0f}, "
+          f"new {statistics.median(p[1]['host_rate'] for p in pairs):.0f}")
+    for i, (a, b) in enumerate(pairs):
+        x, y = a["host_rate"], b["host_rate"]
+        mark = "  HOST" if abs(x - y) > bound * max(x, y) else ""
+        print(f"  pair {i + 1}: base {x:.0f}/s, new {y:.0f}/s{mark}")
     for side, i in (("base", 0), ("new", 1)):
         runs = [p[i] for p in pairs]
         print(f"{side}: failed {sum(r.get('failed', 0) for r in runs)} of "

@@ -4,6 +4,7 @@ via DuckDB at sf0.01 (or --sf-dir) and compare row count, column
 names, and order-insensitive values — strict, like the driver's hash.
 
 Usage: python tools/check_oracle.py [--sf-dir DIR] [--only name1,name2]
+                                    [--out FILE]
 """
 
 from __future__ import annotations
@@ -122,11 +123,16 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default="")
-    ap.add_argument("--out", default=os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "CORRECTNESS_local.json"),
-        help="per-query artifact (driver record shape); '' disables")
+    ap.add_argument("--out", default=None,
+                    help="per-query artifact (driver record shape); '' "
+                         "disables. Default: CORRECTNESS_local.json for a "
+                         "full run, none for an --only run, which prints "
+                         "its results only")
     args = ap.parse_args()
+    if args.out is None:
+        args.out = "" if args.only else os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "CORRECTNESS_local.json")
 
     def _new_session():
         from pyspark.sql import SparkSession
@@ -258,19 +264,6 @@ def main() -> int:
         print(f"{status} {name}: rows={len(sdf)} [{secs:.1f}s] {reason}")
     if args.out and record:
         import json
-        if getattr(args, "only", None) and os.path.exists(args.out):
-            # an --only rerun must MERGE into the existing full record,
-            # not overwrite 400+ entries with a handful (a footgun that
-            # twice destroyed the round-6 record mid-round)
-            try:
-                with open(args.out, encoding="utf-8") as fh:
-                    full = json.load(fh)
-            except Exception:  # noqa: BLE001 — corrupt file: rewrite
-                full = {}
-            # unconditionally: a truncated existing record's entries
-            # outside the rerun must survive too (round-6 advice #4)
-            full.update(record)
-            record = full
         with open(args.out, "w", encoding="utf-8") as fh:
             json.dump(record, fh, indent=1, sort_keys=True)
         print(f"wrote {args.out} ({len(record)} queries)")
